@@ -25,6 +25,9 @@ from collections.abc import Mapping, Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from otrrentetl_spark.session import local_relation
 
 DEFAULT_KEYS = ("PartitionKey", "RowKey")
 
@@ -69,6 +72,21 @@ def _no_aqe(sess):
         yield
     finally:
         conf.set("spark.sql.adaptive.enabled", prev)
+
+
+def _nullable(dt: T.DataType) -> T.DataType:
+    """``dt`` with every level nullable, as a file-source read types
+    its columns (Spark's ``asNullable``)."""
+    if isinstance(dt, T.StructType):
+        return T.StructType([
+            T.StructField(f.name, _nullable(f.dataType), True, f.metadata)
+            for f in dt.fields
+        ])
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
 
 
 def _apply_manifest_delta(
@@ -1593,7 +1611,7 @@ class KeyedParquetTable:
             )
             return self.read().filter(pk_pred & rk_pred)
         if not files:
-            return self.read().filter(F.lit(False))
+            return self._empty_read(self.spark)
         return self._read_files(self.spark, files).filter(rk_pred)
 
     def read_partitions(self, values) -> DataFrame:
@@ -1619,8 +1637,23 @@ class KeyedParquetTable:
             if f.split("/", 1)[0] in dirs
         ]
         if not files:
-            return self.read().filter(F.lit(False))
+            return self._empty_read(self.spark)
         return self._read_files(self.spark, files)
+
+    def _empty_read(self, sess) -> DataFrame:
+        """A zero-row frame typed as :meth:`read` types the table —
+        data columns in pin order, the partition column last, all
+        nullable — built from the pinned schema as a local relation.
+        A filtered ``read()`` returns the same nothing, but first
+        builds a file index over every live file, which past 32 files
+        is a "Listing leaf files" Spark job. Tables without a pin
+        (legacy) keep the filtered read."""
+        pin = self._pinned_struct()
+        if pin is None:
+            return self._read_with(sess).filter(F.lit(False))
+        pk = self.keys[0]
+        fields = [f for f in pin.fields if f.name != pk] + [pin[pk]]
+        return local_relation(sess, _nullable(T.StructType(fields)))
 
     def _rel_exists(self, rel: str) -> bool:
         import os
@@ -1711,7 +1744,7 @@ class KeyedParquetTable:
             if f.split("/", 1)[0] in dirs
         ]
         if not files:
-            return self._read_with(sess).filter(F.lit(False))
+            return self._empty_read(sess)
         df = self._read_files(sess, files)
         if part_type and dict(df.dtypes).get(self.keys[0]) != part_type:
             df = df.withColumn(
@@ -1953,36 +1986,19 @@ class KeyedParquetTable:
             # range comparison is unchanged.
             probe_t = "bigint" if py_t is int else "string"
             try:
-                # The bounds frame as a SQL VALUES LocalRelation, NOT
-                # createDataFrame (r14): pyspark's createDataFrame
-                # parallelizes local rows into an RDD-backed frame, so
-                # broadcasting it costs its own Spark job per probe —
-                # a VALUES relation broadcasts driver-side, job-free.
-                # Escaping failures (exotic stats) fall into the
-                # conservative except below, like every probe failure.
-                def _sqlit(v) -> str:
-                    if isinstance(v, str):
-                        esc = v.replace("\\", "\\\\").replace("'", "''")
-                        return f"'{esc}'"
-                    return str(int(v))
-
-                if len(ranged) <= 10_000:
-                    values = ",".join(
-                        f"({_sqlit(rel)},{_sqlit(mn)},{_sqlit(mx)})"
-                        for rel, mn, mx in ranged
-                    )
-                    files_df = sess.sql(
-                        f"SELECT col1 AS __rel, CAST(col2 AS {probe_t})"
-                        f" AS __mn, CAST(col3 AS {probe_t}) AS __mx"
-                        f" FROM (VALUES {values})"
-                    )
-                else:
-                    # parsing a VALUES list this long would cost more
-                    # than the one broadcast-collect job it avoids
-                    files_df = sess.createDataFrame(
-                        ranged,
-                        f"__rel string, __mn {probe_t}, __mx {probe_t}",
-                    )
+                # The bounds frame as an Arrow LocalRelation: the same
+                # local plan a SQL VALUES list gives (createDataFrame
+                # over a list is an RDD scan), but built without SQL
+                # text, so parser confs (escaped string literals, ANSI
+                # off) cannot alter a bound and silently clear a file.
+                # A bound past int64 raises into the conservative
+                # except below.
+                rels, mns, mxs = (list(c) for c in zip(*ranged))
+                files_df = local_relation(
+                    sess,
+                    f"__rel string, __mn {probe_t}, __mx {probe_t}",
+                    {"__rel": rels, "__mn": mns, "__mx": mxs},
+                )
                 # ONE action: left-join every key row (no distinct —
                 # duplicate keys only re-emit rels collect_set drops)
                 # against the broadcast-local bounds, fold the hit rels

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from otrrentetl_spark.catalog import RECORDINGS_SCHEMA
 from otrrentetl_spark.operators.merge import KeyedParquetTable
+from otrrentetl_spark.session import pin_local
 from otrrentetl_spark.sources.scrape import take_while
 
 TOP_RATINGS = ("sehr hoch", "hoch")  # F3 IN-list, etl.py:141
@@ -39,7 +40,14 @@ def promote_top(
     """Copy every qualifying, *existing* recording into the 'top'
     partition (skip ones already there — the exists() gate at
     etl.py:146-150), attaching rating + previewimagelink from the
-    scrape. Returns the number of rows promoted."""
+    scrape. Returns the number of rows promoted.
+
+    Evaluate-once rule: every action re-runs a lazy plan, page parse
+    included, so the step's one driver-sized result — ``fresh`` — is
+    pinned as a local relation by a single collect. The row count is
+    read off that collect, and the verb's tally, COW probe and write
+    all read the pinned rows. The existing 'top' keys come from
+    ``read_partitions``: only that partition's files are planned."""
     picks = qualifying(toplist).select(
         "PartitionKey",
         F.col("epg_id").alias("RowKey"),
@@ -66,11 +74,8 @@ def promote_top(
     )
     # exists()-in-'top' gate: keep only NEW promotions (etl.py:148-150
     # saves only when the top copy is absent).
-    existing_top = stored.filter(F.col("PartitionKey") == TOP_PARTITION).select(
-        "RowKey"
-    )
-    fresh = promoted.join(existing_top, "RowKey", "left_anti")
-    n = fresh.count()
+    existing_top = store.read_partitions([TOP_PARTITION]).select("RowKey")
+    fresh, n = pin_local(promoted.join(existing_top, "RowKey", "left_anti"))
     if n:
         store.upsert_replace_partitions(fresh)
     return n

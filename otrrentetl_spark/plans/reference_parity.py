@@ -843,8 +843,8 @@ def changefeed_replay_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             # pin the batch ONCE: the change-diff plan re-reads both
             # versions' files per consumer, and this callback used to
             # evaluate it four times (two emptiness probes + each
-            # verb's own pin) — one eager checkpoint plus one tally
-            # action replaces them (r14, guide §1.2/§1.3)
+            # verb's own pin) — one lazy checkpoint materialized by
+            # the tally action replaces them (r14, guide §1.2/§1.3)
             rows = df.select(
                 "PartitionKey", "RowKey", "v", "change_type"
             ).localCheckpoint(eager=False)  # tally below materializes

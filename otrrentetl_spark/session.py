@@ -16,7 +16,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -71,3 +72,38 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel(profile.spark_log_level)
     return spark
+
+
+def local_relation(
+    spark: SparkSession,
+    schema: StructType | str,
+    columns: dict[str, list] | None = None,
+) -> DataFrame:
+    """A driver-built frame as an Arrow-backed ``LocalRelation``:
+    ``columns`` maps each field name to its Python values (omit it
+    for an empty frame). The rows live in the plan itself, so
+    collecting the frame runs no Spark job, and no evaluation needs
+    a Python worker — unlike ``createDataFrame(list)``, which
+    parallelizes the rows into an RDD that every evaluation scans
+    through Python workers. No SQL text is involved, so no parser
+    conf can alter a value. A value the schema's type cannot hold
+    (an int past int64) raises here; nothing is truncated."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    cols = columns or {f.name: [] for f in schema.fields}
+    table = pa.Table.from_pydict(cols, schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema)
+
+
+def pin_local(df: DataFrame) -> tuple[DataFrame, int]:
+    """Evaluate a small, driver-sized ``df`` ONCE (one Arrow collect)
+    and return it as a :func:`local_relation` plus its row count.
+    Every later consumer — a verb's tally, a join, a collect — reads
+    the pinned rows instead of re-running ``df``'s plan. Read the
+    count from here: ``count()`` on the result still runs jobs."""
+    table = df.toArrow()
+    return df.sparkSession.createDataFrame(table, df.schema), table.num_rows

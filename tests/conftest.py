@@ -20,6 +20,24 @@ def spark():
     yield s
 
 
+@pytest.fixture
+def jobs_in(spark):
+    """``jobs_in(tag, fn)`` runs ``fn()`` under Spark job group ``tag``
+    and returns ``(its result, the number of Spark jobs it ran)``.
+    Give each call its own tag."""
+    sc = spark.sparkContext
+
+    def run(tag, fn):
+        sc.setJobGroup(tag, "job-count pin")
+        try:
+            out = fn()
+        finally:
+            sc.setJobGroup("", "")
+        return out, len(sc.statusTracker().getJobIdsForGroup(tag))
+
+    return run
+
+
 @pytest.fixture(scope="session")
 def duck():
     from tools.verify_oracle import duck_connect

@@ -4,6 +4,7 @@ matrix for U2/U3, upsert idempotence, moveto conservation.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
 
 from pyspark.sql import functions as F
 
@@ -1217,6 +1218,115 @@ def test_cow_split_survives_narrow_key_dtype(spark, tmp_path):
     assert len(before - after) == 1
     assert t.read().count() == 399
     assert t.read().filter(F.col("RowKey") == 5).count() == 0
+
+
+@contextmanager
+def _session_conf(spark, conf: dict):
+    prev = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def test_cow_bounds_ignore_escaped_string_literals(spark, tmp_path):
+    """ADVICE (medium): the COW probe's bounds must not round-trip
+    through SQL text. Under spark.sql.parser.escapedStringLiterals a
+    bound ``a\b`` written as a SQL literal re-parses as ``a\\b``, the
+    file's max shrinks below both keys, the file is classified clean
+    and the rewrite is skipped: the upsert leaves the old rows next to
+    the new ones, the delete leaves them in place."""
+    t = merge.KeyedParquetTable(spark, str(tmp_path / "esc"), KEYS)
+    keys = ["a\\a", "a\\b"]
+    t.overwrite(_df(spark, [("p", k, "old", 0) for k in keys]).coalesce(1))
+    (f,) = t._read_snapshot()["files"]
+    assert t._read_snapshot()["stats"][f]["max"] == "a\\b"
+
+    with _session_conf(spark, {"spark.sql.parser.escapedStringLiterals": "true"}):
+        t.upsert_replace_partitions(_df(spark, [("p", k, "new", 1) for k in keys]))
+        assert _rows(t.read()) == [("p", k, "new", 1) for k in keys]
+        t.delete_by_keys(_df(spark, [("p", k, "", 0) for k in keys]))
+        assert _rows(t.read()) == []
+
+
+def test_cow_bounds_at_int64_edges_with_ansi_off(spark, tmp_path):
+    """Int row keys at +-(2^63-1) with ANSI off: the bounds frame must
+    keep both edges exactly (a cast overflow would turn a bound NULL
+    and silently clear the file), so both keys are rewritten."""
+    edge = 2**63 - 1
+    schema = "PartitionKey string, RowKey bigint, val string"
+    t = merge.KeyedParquetTable(spark, str(tmp_path / "edge"), KEYS)
+    t.overwrite(
+        spark.createDataFrame(
+            [("p", -edge, "old"), ("p", 0, "old"), ("p", edge, "old")], schema
+        ).coalesce(1)
+    )
+
+    def rows():
+        return sorted((r.RowKey, r.val) for r in t.read().collect())
+
+    with _session_conf(spark, {"spark.sql.ansi.enabled": "false"}):
+        t.upsert_replace_partitions(
+            spark.createDataFrame([("p", -edge, "new"), ("p", edge, "new")], schema)
+        )
+        assert rows() == [(-edge, "new"), (0, "old"), (edge, "new")]
+        t.delete_by_keys(spark.createDataFrame([("p", edge, "")], schema))
+        assert rows() == [(-edge, "new"), (0, "old")]
+
+
+def test_cow_bound_past_int64_marks_file_hit(spark, tmp_path, monkeypatch):
+    """A stats bound the bigint bounds frame cannot hold must fall
+    into the conservative path: the file is hit (rewritten), never
+    silently cleared."""
+    t = merge.KeyedParquetTable(spark, str(tmp_path / "past"), KEYS)
+    t.overwrite(
+        spark.createDataFrame(
+            [("p", 5, "v")], "PartitionKey string, RowKey bigint, val string"
+        ).coalesce(1)
+    )
+    snap = t._read_snapshot()
+    (f,) = snap["files"]
+    stats = {f: {**snap["stats"][f], "max": 2**63}}
+    monkeypatch.setattr(t, "_read_snapshot", lambda: {**snap, "stats": stats})
+    keys = spark.createDataFrame([("p", 7)], "PartitionKey string, RowKey bigint")
+    assert t._cow_split(keys, ["p"], has_null=False) == ([f], [])
+
+
+def test_read_without_live_files_runs_no_job(spark, tmp_path, jobs_in):
+    """read_partitions / lookup of values no live file holds, on a
+    table past the 32-path parallel-listing threshold: zero rows,
+    typed as read() types the table, and zero Spark jobs — a filtered
+    full read would first list every live file in a Spark job."""
+    t = merge.KeyedParquetTable(spark, str(tmp_path / "many"), KEYS)
+    t.overwrite(
+        spark.range(40)
+        .selectExpr(
+            "cast(id as string) AS PartitionKey",
+            "cast(id * 7 as string) AS RowKey",
+            "'v' AS val",
+            "id AS n",
+        )
+        .repartition(40, "PartitionKey")
+    )
+    assert len(t._read_snapshot()["files"]) > 32
+    schema = t.read().schema
+    for tag, read in (
+        ("empty_read_partitions", lambda: t.read_partitions(["nope", None])),
+        ("empty_lookup", lambda: t.lookup("nope", "0")),
+    ):
+        df, build_jobs = jobs_in(tag, read)
+        rows, collect_jobs = jobs_in(f"{tag}_collect", df.collect)
+        assert rows == []
+        assert df.schema == schema
+        assert build_jobs == collect_jobs == 0, (
+            f"{tag} ran {build_jobs} + {collect_jobs} Spark job(s)"
+        )
 
 
 def test_upsert_pins_nondeterministic_batch(spark, tmp_path):

@@ -78,13 +78,17 @@ def _tracker():
     ]
 
 
-@pytest.fixture(scope="module")
-def etl_state(spark, tmp_path_factory):
-    from otrrentetl_spark.pipelines.runner import EtlSources, EtlStores, run_once
+def _pages(spark, html: str):
+    from otrrentetl_spark.sources import scrape
+
+    return scrape.pages_df(spark, iter([(0, html)]))
+
+
+def _etl(spark, root):
+    """Offline sources and empty stores of one ETL state under ``root``."""
+    from otrrentetl_spark.pipelines.runner import EtlSources, EtlStores
     from otrrentetl_spark.sources import scrape
     from otrrentetl_spark.sources.csv_ingest import read_semicolon_csv
-
-    root = tmp_path_factory.mktemp("otr_state")
 
     def _csv_df(text: str):
         p = root / f"in_{abs(hash(text))}.csv"
@@ -98,14 +102,20 @@ def etl_state(spark, tmp_path_factory):
             return _csv_df(fx.epg_csv(_epg_rows_day_b()))
         return None
 
-    pages = lambda html: scrape.pages_df(spark, iter([(0, html)]))  # noqa: E731
     sources = EtlSources(
         genres_csv=lambda: _csv_df(fx.genres_csv()),
         epg_csv_for_day=epg_for_day,
-        toplist=lambda: scrape.toplist_rows(pages(fx.toplist_html(_toplist()))),
-        tracker=lambda: scrape.tracker_rows(pages(fx.tracker_html(_tracker()))),
+        toplist=lambda: scrape.toplist_rows(_pages(spark, fx.toplist_html(_toplist()))),
+        tracker=lambda: scrape.tracker_rows(_pages(spark, fx.tracker_html(_tracker()))),
     )
-    stores = EtlStores.at(spark, root / "tables")
+    return sources, EtlStores.at(spark, root / "tables")
+
+
+@pytest.fixture(scope="module")
+def etl_state(spark, tmp_path_factory):
+    from otrrentetl_spark.pipelines.runner import run_once
+
+    sources, stores = _etl(spark, tmp_path_factory.mktemp("otr_state"))
     report1 = run_once(spark, sources, stores, today=TODAY)
     report2 = run_once(spark, sources, stores, today=TODAY)  # idempotency
     return stores, report1, report2
@@ -157,3 +167,74 @@ def test_second_run_is_idempotent(etl_state):
     assert recs.filter(F.col("PartitionKey") == "2026_08_05").count() == 3
     assert {r["Id"] for r in recs.filter(F.col("PartitionKey") == "top").collect()} == {101}
     assert stores.torrents.read().count() == 2
+
+
+def test_unmatched_recording_purges_its_torrents(spark, tmp_path):
+    """A/J3 purge of STORED torrents: recording 101 matched in run 1;
+    in run 2 the tracker no longer lists its torrents, so its 'top'
+    row and its whole torrents partition must go. (The shared fixture
+    only deletes 102, which never had torrents.)"""
+    import dataclasses
+
+    from otrrentetl_spark.pipelines.runner import run_once
+    from otrrentetl_spark.sources import scrape
+
+    sources, stores = _etl(spark, tmp_path)
+    report1 = run_once(spark, sources, stores, today=TODAY)
+    assert report1["torrents_saved"] == 2
+    assert stores.torrents.read_partitions(["101"]).count() == 2
+
+    stale_only = fx.tracker_html(_tracker()[2:])  # outside the window
+    sources = dataclasses.replace(
+        sources, tracker=lambda: scrape.tracker_rows(_pages(spark, stale_only))
+    )
+    report2 = run_once(spark, sources, stores, today=TODAY)
+    assert report2["promoted"] == 1               # 102 again; 101 is still in top
+    assert report2["torrents_saved"] == 0
+    assert report2["top_deleted"] == 2            # 101 and 102
+    assert stores.recordings.read_partitions(["top"]).count() == 0
+    assert stores.torrents.read_partitions(["101"]).count() == 0
+    assert stores.torrents.read().count() == 0
+
+
+def test_pages_df_is_a_local_relation(spark):
+    """Scraped pages are an Arrow-built LocalRelation: no RDD scan, no
+    Python worker per evaluation."""
+    from otrrentetl_spark.sources import scrape
+
+    df = scrape.pages_df(spark, iter([(0, "<p>a</p>"), (50, "<p>b</p>")]))
+    plan = df._jdf.queryExecution().optimizedPlan()
+    assert plan.getClass().getSimpleName() == "LocalRelation"
+    assert df.schema.simpleString() == "struct<start_offset:bigint,html:string>"
+    assert [tuple(r) for r in df.collect()] == [(0, "<p>a</p>"), (50, "<p>b</p>")]
+
+
+def test_top_and_torrent_steps_job_census(spark, tmp_path, jobs_in):
+    """Evaluate-once pin: each step evaluates its scraped page and its
+    'top' slice once, so its Spark job count stays at the count
+    measured when the rule went in (the steady-state second pass over
+    the fixture: 102 re-promoted, 101's torrents re-saved, 102
+    re-deleted)."""
+    from otrrentetl_spark.pipelines import toprecordings, torrents
+    from otrrentetl_spark.pipelines.runner import TORRENT_WINDOW_DAYS, run_once
+
+    sources, stores = _etl(spark, tmp_path)
+    run_once(spark, sources, stores, today=TODAY)
+    toplist, tracker = sources.toplist(), sources.tracker()
+    n, top_jobs = jobs_in(
+        "census_promote_top",
+        lambda: toprecordings.promote_top(spark, toplist, stores.recordings),
+    )
+    saved_deleted, torrent_jobs = jobs_in(
+        "census_update_torrents",
+        lambda: torrents.update_torrents(
+            spark, tracker, stores.recordings, stores.torrents,
+            startdate=TODAY - dt.timedelta(days=TORRENT_WINDOW_DAYS),
+        ),
+    )
+    assert n == 1
+    assert saved_deleted == (2, 1)
+    # before the rule: 13 and 31 jobs (page parsed and 'top' read
+    # once per action; RDD-backed page relation)
+    assert top_jobs <= 9, f"promote_top ran {top_jobs} Spark jobs"
+    assert torrent_jobs <= 20, f"update_torrents ran {torrent_jobs} Spark jobs"
