@@ -31,7 +31,7 @@ from otrrentetl_spark.session import local_relation
 
 DEFAULT_KEYS = ("PartitionKey", "RowKey")
 
-# reconstructed-manifest cache (manifest layout v2): path → the
+# reconstructed-manifest cache (see the layout note): path → the
 # CURRENT {version, files, stats}, revalidated against the pointer's
 # version on every read and folded forward through tail deltas — a
 # polling reader or a verb chain pays one small JSON read per access
@@ -49,6 +49,10 @@ _ANY_LINEAGE = object()
 
 from contextlib import contextmanager as _contextmanager
 
+# session UUID → [probes inside _no_aqe, AQE value saved by the first]
+_NO_AQE_HOLDS: dict[str, list] = {}
+_NO_AQE_LOCK = _threading.Lock()
+
 
 @_contextmanager
 def _no_aqe(sess):
@@ -61,17 +65,29 @@ def _no_aqe(sess):
     purely to coalesce shuffles that are already minimal, and at the
     ~70-160 ms/job scheduler floor that overhead IS the lifecycle verbs'
     wall. Scope: only the probes that produce driver-side decisions;
-    the data-moving plans (merge writes, CDC diffs) keep AQE."""
+    the data-moving plans (merge writes, CDC diffs) keep AQE.
+
+    The conf is session-global, so overlapping probes on one session
+    share one hold: the first to enter saves and disables AQE, the
+    last to leave restores the saved value. Other queries planned on
+    the same session while a probe runs also see AQE off."""
+    key = sess._jsparkSession.sessionUUID()
     conf = sess.conf
-    prev = conf.get("spark.sql.adaptive.enabled", "true")
-    if prev == "false":
-        yield
-        return
-    conf.set("spark.sql.adaptive.enabled", "false")
+    with _NO_AQE_LOCK:
+        hold = _NO_AQE_HOLDS.get(key)
+        if hold is None:
+            prev = conf.get("spark.sql.adaptive.enabled", "true")
+            conf.set("spark.sql.adaptive.enabled", "false")
+            hold = _NO_AQE_HOLDS[key] = [0, prev]
+        hold[0] += 1
     try:
         yield
     finally:
-        conf.set("spark.sql.adaptive.enabled", prev)
+        with _NO_AQE_LOCK:
+            hold[0] -= 1
+            if hold[0] == 0:
+                del _NO_AQE_HOLDS[key]
+                conf.set("spark.sql.adaptive.enabled", hold[1])
 
 
 def _nullable(dt: T.DataType) -> T.DataType:
@@ -93,10 +109,7 @@ def _apply_manifest_delta(
     files: list, stats: dict, delta: dict
 ) -> tuple[list, dict]:
     """Fold ONE per-commit delta manifest into (files, stats) —
-    mutates and returns the passed containers (callers own copies).
-    A v1 absolute doc encountered mid-chain resets the state."""
-    if "files" in delta:  # v1 absolute per-version manifest
-        return list(delta["files"]), dict(delta.get("stats") or {})
+    mutates and returns the passed containers (callers own copies)."""
     rm = set(delta.get("remove", ()))
     if rm:
         files = [f for f in files if f not in rm]
@@ -316,33 +329,38 @@ class KeyedParquetTable:
     (critical at 100 TB: an idempotent daily re-ingest rewrites one
     date partition, not the table).
 
-    SNAPSHOT PROTOCOL (r6 verdict item 7): every mutating verb APPENDS
-    new files (never rewriting in place), then atomically replaces the
-    sibling ``_SNAPSHOT`` manifest — a JSON list of the table's live
-    data files — under the single-writer lock, then deletes files the
-    flip superseded once they are older than ``retain_stale_s``.
-    ``read()`` plans over the manifest's file list (``basePath`` keeps
-    partition-column discovery), so a reader NEVER observes partition
-    A post-write and partition B pre-write: it sees the file set of
-    exactly one committed version. With ``retain_stale_s > 0``,
-    readers that planned before a flip also keep their input files on
-    disk for the retention window (Delta/Iceberg-style time-travel
-    safety without the log); the 0 default keeps the on-disk layout
-    byte-identical to the manifest for test determinism. Crashed
-    writers' orphan files (appended but never flipped live) are
-    invisible to readers by construction and reaped by the next
-    mutation's cleanup. The manifest flip is os.replace on local disk
-    and FileContext.rename(OVERWRITE) on HDFS — both atomic; stores
-    without an atomic overwrite-rename fall back to delete+rename,
-    whose manifest-missing window readers cover by retrying before
-    ever touching a directory listing (object stores without atomic
-    rename at all need an external coordinator — the caveat every
-    file-based table commit protocol carries).
+    A TABLE IS ITS MANIFEST: exactly the live files and the pinned
+    schema its format-2 ``_SNAPSHOT`` pointer names (layout below).
+    With no pointer and no ``_history`` there is no table — ``read()``
+    raises, ``exists()`` is False, and the first write creates it; a
+    data file in the directory that no manifest names is an orphan,
+    never a row, and the next checkpoint commit reaps it. A pointer
+    that is missing or unreadable while ``_history`` holds a version
+    is a torn flip: every verb retries briefly, then refuses. A
+    pointer of any other format is refused.
 
-    A fully-emptied table (every row deleted) pins its last committed
-    schema in the manifest: ``read()`` returns a typed empty frame and
-    never falls back to the directory listing, which with retention
-    > 0 still physically holds every retired file (ADVICE r7).
+    SNAPSHOT PROTOCOL (r6 verdict item 7): every mutating verb APPENDS
+    new files (never rewriting in place), then atomically flips the
+    ``_SNAPSHOT`` pointer under the single-writer lock, then deletes
+    files the flip superseded once they are older than
+    ``retain_stale_s``. ``read()`` plans over the manifest's file list
+    (``basePath`` keeps partition-column discovery), so a reader NEVER
+    observes partition A post-write and partition B pre-write: it sees
+    the file set of exactly one committed version. With
+    ``retain_stale_s > 0``, readers that planned before a flip also
+    keep their input files on disk for the retention window
+    (Delta/Iceberg-style time-travel safety); the 0 default keeps the
+    on-disk layout byte-identical to the manifest for test
+    determinism. The pointer flip is os.replace on local disk and
+    FileContext.rename(OVERWRITE) on HDFS — both atomic; stores
+    without an atomic overwrite-rename fall back to delete+rename,
+    whose pointer-missing window the torn-flip retry covers (object
+    stores without atomic rename at all need an external coordinator
+    — the caveat every file-based table commit protocol carries).
+
+    A fully-emptied table (every row deleted) reads as a zero-row
+    frame typed from the pinned schema, with the columns in the same
+    order as a non-empty read.
     """
 
     def __init__(self, spark, path: str, keys: Sequence[str] = DEFAULT_KEYS):
@@ -633,32 +651,30 @@ class KeyedParquetTable:
 
     # ------------------------------------------- snapshot manifest
     #
-    # MANIFEST LAYOUT v2 (r11 — the last O(table) step on a mutation
-    # path). v1 rewrote ONE whole-table JSON (_SNAPSHOT: full live
-    # file list + per-file footer stats) on EVERY commit — at COW
-    # file granularity a 100 TB table is ~10⁶ files, i.e. a
-    # several-hundred-MB driver-side serialize/parse per mutation for
-    # an O(batch) change. v2 is the Delta-log shape:
+    # MANIFEST LAYOUT (format 2, the Delta-log shape): no commit
+    # writes anything O(table), so commit metadata cost follows the
+    # batch, not the table.
     #
     #   _SNAPSHOT                  small POINTER, atomically flipped
     #                              per commit: {format:2, version,
-    #                              checkpoints:[...], retired, n_files,
-    #                              table_schema, schema?} — O(retired),
+    #                              lineage, checkpoints:[...], retired,
+    #                              n_files, table_schema} — O(retired),
     #                              not O(files)
     #   _history/v{N}.json         per-commit DELTA: {add, remove,
     #                              add_stats, ts, op} — O(batch)
     #   _history/ckpt_v{N}.json    full compacted state {files, stats}
     #                              written every _CKPT_EVERY commits,
-    #                              on big rewrites (delta ~ table
-    #                              anyway), and at format upgrades
+    #                              at the first commit, on big
+    #                              rewrites (delta ~ table anyway) and
+    #                              when the table empties
     #
     # Readers reconstruct state as checkpoint + tail deltas (≤
     # _CKPT_EVERY folds), cached per table path and revalidated
     # against the pointer's version on every read — so a steady
     # stream of mutations costs one small JSON read per verb, and a
-    # cold reader at most one checkpoint parse. v1 manifests (a
-    # _SNAPSHOT containing "files") read transparently and upgrade to
-    # v2 on their next commit (which forces a checkpoint).
+    # cold reader at most one checkpoint parse. Every read of the
+    # pointer goes through _read_pointer, which refuses torn flips
+    # and pointers of any other format.
     _SNAPSHOT_NAME = "_SNAPSHOT"
     _CKPT_EVERY = 16
     # batched-compact task cap: slots stride across at most this many
@@ -707,35 +723,79 @@ class KeyedParquetTable:
             + f"/{self._HISTORY_DIR}/ckpt_v{int(version)}.json"
         )
 
+    def _read_pointer(self) -> dict | None:
+        """The ``_SNAPSHOT`` pointer, or None when there is no table
+        (no pointer and no ``_history``). Every read of the pointer
+        comes through here.
+
+        A pointer missing or unreadable while ``_history`` holds a
+        version is a torn flip (delete+rename on stores without
+        rename-overwrite): retry briefly — the writer's rename
+        completes in microseconds — then refuse rather than guess at
+        the table. A pointer that is not format 2 with a pinned
+        ``table_schema`` is refused."""
+        import time
+
+        doc = self._read_json(self._snapshot_uri())
+        if doc is None and self._has_history():
+            for _ in range(20):
+                time.sleep(0.05)
+                doc = self._read_json(self._snapshot_uri())
+                if doc is not None:
+                    break
+            else:
+                raise ValueError(
+                    f"table {self.path} has committed history but no"
+                    " _SNAPSHOT manifest — torn or deleted manifest;"
+                    " refusing to read or write it"
+                )
+        if doc is not None and (
+            doc.get("format") != 2 or not doc.get("table_schema")
+        ):
+            raise ValueError(
+                f"table {self.path}: _SNAPSHOT is not a format-2"
+                " pointer with a pinned table_schema — refusing it"
+            )
+        return doc
+
     def _read_snapshot(self) -> dict | None:
         """The CURRENT committed state ({version, files, retired,
-        stats, [schema], [table_schema], [checkpoints]}) or None.
-
-        v2 manifests reconstruct files/stats from the newest
+        stats, checkpoints, table_schema, lineage}), or None when there
+        is no table. files/stats reconstruct from the newest
         checkpoint plus tail deltas (cached per path, revalidated
-        against the pointer's version — see the layout note above);
-        v1 manifests are returned as stored. The returned ``files`` /
-        ``retired`` lists are fresh copies; ``stats`` is shared with
-        the cache and must be treated read-only."""
-        doc = self._read_json(self._snapshot_uri())
+        against the pointer's version — see the layout note above).
+        The returned ``files`` / ``retired`` lists are fresh copies;
+        ``stats`` is shared with the cache and must be treated
+        read-only."""
+        doc = self._read_pointer()
         if doc is None:
             return None
-        if "files" in doc:  # v1: the full manifest IS the pointer
-            return doc
+        version = int(doc["version"])
         state = self._state_at(
-            int(doc["version"]), cache=True, lineage=doc.get("lineage")
+            version, cache=True, lineage=doc.get("lineage")
         )
-        out = {
-            "version": int(doc["version"]),
+        return {
+            "version": version,
             "files": list(state["files"]),
-            "retired": [list(x) for x in doc.get("retired", [])],
+            "retired": [list(x) for x in doc["retired"]],
             "stats": state["stats"],
-            "checkpoints": list(doc.get("checkpoints", [])),
+            "checkpoints": list(doc["checkpoints"]),
+            "table_schema": doc["table_schema"],
+            "lineage": doc.get("lineage"),
         }
-        for k in ("schema", "table_schema", "lineage"):
-            if k in doc:
-                out[k] = doc[k]
-        return out
+
+    def _require_snapshot(self) -> dict:
+        """:meth:`_read_snapshot` for callers that need a table."""
+        snap = self._read_snapshot()
+        if snap is None:
+            raise self._no_table()
+        return snap
+
+    def _no_table(self) -> ValueError:
+        return ValueError(
+            f"no keyed table at {self.path}: it has no _SNAPSHOT"
+            " pointer and no _history"
+        )
 
     def _state_at(
         self, version: int, cache: bool = False, lineage=_ANY_LINEAGE
@@ -799,19 +859,10 @@ class KeyedParquetTable:
 
     def _fold_state(self, version: int) -> dict:
         """Full reconstruction of {files, stats} at ``version``: the
-        newest checkpoint ≤ version (or a v1 absolute history doc, or
-        the empty table) folded forward through the deltas."""
-        doc = self._read_json(self._history_uri(version))
-        if doc is not None and "files" in doc:
-            # v1 absolute per-version manifest: already the state
-            return {
-                "version": version,
-                "files": list(doc["files"]),
-                "stats": dict(doc.get("stats") or {}),
-            }
+        newest pointer-referenced checkpoint ≤ version (or the empty
+        table) folded forward through the deltas."""
         base_v, files, stats = 0, [], {}
-        pointer = self._read_json(self._snapshot_uri()) or {}
-        for c in sorted(pointer.get("checkpoints", []), reverse=True):
+        for c in sorted(self._read_pointer()["checkpoints"], reverse=True):
             if c <= version:
                 ck = self._read_json(self._ckpt_uri(c))
                 if ck is not None:
@@ -852,7 +903,7 @@ class KeyedParquetTable:
             finally:
                 stream.close()
             return json.loads(bytes(data).decode())
-        except Exception:  # noqa: BLE001 — no manifest yet / legacy
+        except Exception:  # noqa: BLE001 — missing or unreadable
             return None
 
     def _write_snapshot_atomic(self, doc: dict) -> None:
@@ -950,8 +1001,7 @@ class KeyedParquetTable:
         # Options.Rename.OVERWRITE — a single atomic flip on HDFS.
         # Stores whose FileContext doesn't support overwrite-rename fall
         # back to delete+rename; readers cover that residual window by
-        # retrying a missing manifest before any directory fallback
-        # (_read_with's _has_history branch).
+        # retrying a missing pointer (_read_pointer).
         try:
             fctx = jvm.org.apache.hadoop.fs.FileContext.getFileContext(
                 fs.getUri(), hconf
@@ -988,9 +1038,8 @@ class KeyedParquetTable:
         ``dirs``: restrict the walk to the named partition
         directories — the partition-scoped verbs pass their touched
         set so a mutation's before/after listings cost O(touched
-        partition files), never a full-table walk (manifest v2:
-        nothing on the O(batch) commit path may scale with table
-        size)."""
+        partition files), never a full-table walk (nothing on the
+        O(batch) commit path may scale with table size)."""
         return sorted(self._data_file_sizes(dirs))
 
     def _data_file_sizes(
@@ -1215,24 +1264,22 @@ class KeyedParquetTable:
     def _commit_snapshot(
         self,
         live: list[str],
-        superseded: Sequence[str],
         op: str = "write",
         written_schema=None,
     ) -> None:
-        """Commit ``live`` as version+1, retire ``superseded``, then
-        physically delete retired files past the retention window.
-        MUST run under the writer lock.
+        """Commit ``live`` as version+1, retire the previous version's
+        files it drops, then physically delete retired files past the
+        retention window. MUST run under the writer lock.
 
-        Manifest layout v2 (see the layout note above): the commit
+        Manifest layout (see the layout note above): the commit
         writes ONE O(batch) delta manifest (files added/removed + the
         added files' footer stats), a compacted checkpoint only every
         ``_CKPT_EVERY`` commits / on big rewrites, and atomically
         flips the small _SNAPSHOT pointer — so commit metadata cost is
-        proportional to the BATCH, not the table (the v1 protocol
-        serialized the full live-file list + stats per mutation:
-        O(10⁶ files) JSON at 100 TB). Crashed-writer orphans are
-        invisible to readers by construction and reaped at checkpoint
-        commits and vacuum (the only places that pay a full listing).
+        proportional to the BATCH, not the table. Crashed-writer
+        orphans are invisible to readers by construction and reaped at
+        checkpoint commits and vacuum (the only places that pay a full
+        listing).
 
         ``written_schema``: the StructType of the rows this mutation
         wrote; folded into the pointer's pinned ``table_schema``
@@ -1248,32 +1295,31 @@ class KeyedParquetTable:
         # the same N even if the later pointer-flip fence catches it
         self._assert_lock_fresh()
         now = time.time()
-        prev = self._read_snapshot()
-        legacy_prev = prev is not None and "checkpoints" not in prev
+        prev = self._read_snapshot() or {
+            "version": 0, "files": [], "retired": [], "stats": {},
+            "checkpoints": [], "table_schema": None, "lineage": None,
+        }
         seen: set[str] = set()
         live = [f for f in live if not (f in seen or seen.add(f))]
-        retired = list((prev or {}).get("retired", []))
-        retired += [[f, now] for f in superseded]
         live_set = set(live)
-        retired = [[f, ts] for f, ts in retired if f not in live_set]
+        prev_set = set(prev["files"])
+        adds = [f for f in live if f not in prev_set]
+        removes = [f for f in prev["files"] if f not in live_set]
+        retired = [
+            [f, ts] for f, ts in prev["retired"] if f not in live_set
+        ] + [[f, now] for f in removes]
         expired = [
             f for f, ts in retired if now - ts >= self.retain_stale_s
         ]
         kept = [
             [f, ts] for f, ts in retired if now - ts < self.retain_stale_s
         ]
-        prev_files = list((prev or {}).get("files", []))
-        prev_set = set(prev_files)
-        adds = [f for f in live if f not in prev_set]
-        removes = [f for f in prev_files if f not in live_set]
-        version = int((prev or {}).get("version", 0)) + 1
+        version = prev["version"] + 1
         # checkpoint policy: periodic; forced on the first commit, on
-        # a v1→v2 upgrade (gives the fold base), on big rewrites
-        # (delta ≈ table anyway — overwrite / full compact), and when
-        # the table empties (trivial state)
+        # big rewrites (delta ≈ table anyway — overwrite / full
+        # compact), and when the table empties (trivial state)
         is_ckpt = (
-            prev is None
-            or legacy_prev
+            version == 1
             or version % self._CKPT_EVERY == 0
             or (len(adds) + len(removes)) * 2 >= len(live) + 1
             or not live
@@ -1283,7 +1329,7 @@ class KeyedParquetTable:
         # commit appending more than the cap takes one distributed
         # key-column pass instead (absence = never-skip, so the cap
         # trades read pruning for commit latency, never correctness)
-        prev_stats = (prev or {}).get("stats") or {}
+        prev_stats = prev["stats"]
         add_stats: dict[str, dict] = {}
         fresh = [f for f in adds if f not in prev_stats]
         if fresh and len(fresh) <= self._STATS_FILE_CAP:
@@ -1301,23 +1347,18 @@ class KeyedParquetTable:
         stats = {f: prev_stats[f] for f in live if f in prev_stats}
         stats.update(add_stats)
         # pinned table schema: base ∪ written (written wins); reset on
-        # overwrite. A legacy table without a pin derives its base
-        # from the pre-commit read schema ONCE (upgrade cost).
-        table_schema_json = (prev or {}).get("table_schema")
+        # overwrite
+        table_schema_json = prev["table_schema"]
         if written_schema is not None:
-            try:
-                table_schema_json = self._fold_table_schema(
-                    table_schema_json if op != "overwrite" else None,
-                    written_schema,
-                    prev_files if op != "overwrite" else [],
-                )
-            except Exception:  # noqa: BLE001 — pin is an optimization
-                table_schema_json = None
+            table_schema_json = self._fold_pin(
+                table_schema_json if op != "overwrite" else None,
+                written_schema,
+            )
         # lineage token (ADVICE r11): minted once at the table's first
         # commit (or a pre-lineage table's next commit) and carried
         # forever — lets the state cache tell THIS table apart from a
         # same-path rebuild that happens to collide on a version number
-        lineage = (prev or {}).get("lineage")
+        lineage = prev["lineage"]
         if lineage is None:
             import uuid as _uuid
 
@@ -1326,27 +1367,12 @@ class KeyedParquetTable:
             "format": 2,
             "version": version,
             "lineage": lineage,
-            "checkpoints": list((prev or {}).get("checkpoints", []))
+            "checkpoints": prev["checkpoints"]
             + ([version] if is_ckpt else []),
             "retired": kept,
             "n_files": len(live),
+            "table_schema": table_schema_json,
         }
-        if table_schema_json:
-            pointer["table_schema"] = table_schema_json
-        # Fully-emptied table: pin the last committed schema so read()
-        # returns a typed empty frame instead of falling through to a
-        # directory listing. Captured from the superseded files HERE,
-        # before they are physically deleted below.
-        if not live:
-            schema_json = table_schema_json or (prev or {}).get("schema")
-            if not schema_json and prev_files:
-                try:
-                    schema_json = self._read_files(
-                        self.spark, prev_files
-                    ).schema.json()
-                except Exception:  # noqa: BLE001 — keep carried schema
-                    schema_json = None
-            pointer["schema"] = schema_json
         # write order: delta → checkpoint → pointer flip (the commit
         # point). A crash before the flip leaves docs the next commit
         # (same version number) atomically overwrites.
@@ -1381,8 +1407,8 @@ class KeyedParquetTable:
                 self._history_uri(version), delta_doc, exclusive=True
             )
         except FileExistsError:
-            ptr = self._read_json(self._snapshot_uri())
-            if ptr is not None and int(ptr.get("version", 0)) >= version:
+            ptr = self._read_pointer()
+            if ptr is not None and int(ptr["version"]) >= version:
                 raise RuntimeError(
                     f"commit conflict on {self.path} v{version}:"
                     " another writer already committed this version"
@@ -1462,25 +1488,16 @@ class KeyedParquetTable:
             prev_retain = self.retain_stale_s
             self.retain_stale_s = retain_s
             try:
-                self._commit_snapshot(list(snap["files"]), [], op="vacuum")
+                self._commit_snapshot(list(snap["files"]), op="vacuum")
             finally:
                 self.retain_stale_s = prev_retain
 
     def exists(self) -> bool:
-        doc = self._read_json(self._snapshot_uri())
-        if doc is not None:
-            # a manifest with zero live files is a fully-emptied
-            # table: "exists" keeps its pre-manifest meaning of
-            # "has readable data". v2 pointers carry the live count,
-            # so no state reconstruction is needed.
-            if "files" in doc:  # v1
-                return bool(doc.get("files"))
-            return int(doc.get("n_files", 0)) > 0
-        try:
-            self.spark.read.parquet(self.path).limit(1).collect()
-            return True
-        except Exception:  # noqa: BLE001 — missing path
-            return False
+        """True iff the current version has live files — a
+        fully-emptied table reports False, like a missing one. The
+        pointer carries the live count, so no state is reconstructed."""
+        doc = self._read_pointer()
+        return doc is not None and int(doc["n_files"]) > 0
 
     def read(self, version: int | None = None) -> DataFrame:
         """Current table, or — with ``version`` — the exact committed
@@ -1498,6 +1515,9 @@ class KeyedParquetTable:
         on disk (time-travel-able right now)."""
         import os
 
+        # refuse a torn pointer up front: below, an unresolvable
+        # version is skipped, and a torn one must not read as expired
+        self._read_pointer()
         hist_uri = self.path.rstrip("/") + "/" + self._HISTORY_DIR
         local = self._local_path_of(hist_uri)
         if local is not None:
@@ -1527,9 +1547,7 @@ class KeyedParquetTable:
             doc = self._read_json(self._history_uri(v))
             if doc is None:
                 continue
-            if "files" in doc:  # v1 absolute doc
-                state = list(doc["files"])
-            elif state is None or prev_v != v - 1:
+            if state is None or prev_v != v - 1:
                 # earliest surviving doc (or a chain gap): reconstruct
                 # once, then fold incrementally
                 try:
@@ -1555,19 +1573,14 @@ class KeyedParquetTable:
             " readable boolean",
         )
 
-    def _lookup_files(
-        self, partition_value, row_key
-    ) -> list[str] | None:
+    def _lookup_files(self, partition_value, row_key) -> list[str]:
         """Live files that can contain (partition_value, row_key):
         partition pruning by directory name, then file skipping on the
-        manifest's footer min/max/null stats. None = no manifest (fall
-        back to a full filtered read)."""
-        snap = self._read_snapshot()
-        if not snap or not snap.get("files"):
-            return None
+        manifest's footer min/max/null stats."""
+        snap = self._require_snapshot()
         pdir = self._partition_dir_of(partition_value)
         cand = [f for f in snap["files"] if f.split("/", 1)[0] == pdir]
-        stats = snap.get("stats") or {}
+        stats = snap["stats"]
         out = []
         for f in cand:
             s = stats.get(f)
@@ -1603,13 +1616,6 @@ class KeyedParquetTable:
             else F.col(self.keys[1]) == row_key
         )
         files = self._lookup_files(partition_value, row_key)
-        if files is None:
-            pk_pred = (
-                F.col(self.keys[0]).isNull()
-                if partition_value is None
-                else F.col(self.keys[0]) == partition_value
-            )
-            return self.read().filter(pk_pred & rk_pred)
         if not files:
             return self._empty_read(self.spark)
         return self._read_files(self.spark, files).filter(rk_pred)
@@ -1619,23 +1625,10 @@ class KeyedParquetTable:
         file list is filtered driver-side to the ``PartitionKey=<v>``
         directories of ``values`` (same escaping as the writer), so the
         plan's inputFiles are a strict subset by construction — the
-        probe primitive the ANN index rides (operators/annindex.py).
-        Falls back to a pruned filter over read() for pre-manifest
-        tables."""
-        snap = self._read_snapshot()
-        vals = list(values)
-        if snap is None:
-            col = F.col(self.keys[0])
-            non_null = [v for v in vals if v is not None]
-            pred = col.isin(non_null) if non_null else F.lit(False)
-            if any(v is None for v in vals):
-                pred = pred | col.isNull()
-            return self.read().filter(pred)
-        dirs = {self._partition_dir_of(v) for v in vals}
-        files = [
-            f for f in snap.get("files", [])
-            if f.split("/", 1)[0] in dirs
-        ]
+        probe primitive the ANN index rides (operators/annindex.py)."""
+        snap = self._require_snapshot()
+        dirs = {self._partition_dir_of(v) for v in values}
+        files = [f for f in snap["files"] if f.split("/", 1)[0] in dirs]
         if not files:
             return self._empty_read(self.spark)
         return self._read_files(self.spark, files)
@@ -1646,11 +1639,8 @@ class KeyedParquetTable:
         nullable — built from the pinned schema as a local relation.
         A filtered ``read()`` returns the same nothing, but first
         builds a file index over every live file, which past 32 files
-        is a "Listing leaf files" Spark job. Tables without a pin
-        (legacy) keep the filtered read."""
+        is a "Listing leaf files" Spark job."""
         pin = self._pinned_struct()
-        if pin is None:
-            return self._read_with(sess).filter(F.lit(False))
         pk = self.keys[0]
         fields = [f for f in pin.fields if f.name != pk] + [pin[pk]]
         return local_relation(sess, _nullable(T.StructType(fields)))
@@ -1667,24 +1657,21 @@ class KeyedParquetTable:
         return bool(fs.exists(jpath))
 
     def _version_doc(self, version: int) -> dict:
-        """The state of committed ``version`` ({version, files, [ts],
-        [op]}), validated readable. Validation is DIFF-cheap (v2): a
-        file of the CURRENT snapshot is on disk by the commit
-        invariant, so only the old version's files that have since
-        been superseded need an existence probe — O(version diff)
-        stat calls, never a full table walk (the v1 protocol walked
-        the whole tree per changes()/read(version=) call)."""
+        """The state of committed ``version`` ({version, files, ts,
+        op}), validated readable. Validation is DIFF-cheap: a file of
+        the CURRENT snapshot is on disk by the commit invariant, so
+        only the old version's files that have since been superseded
+        need an existence probe — O(version diff) stat calls, never a
+        full table walk."""
         doc = self._read_json(self._history_uri(version))
         if doc is None:
             raise ValueError(
                 f"no committed version {version} at {self.path}"
             )
-        if "files" not in doc:  # v2 delta: reconstruct the state
-            state = self._state_at(int(version), cache=False)
-            doc = {**doc, "files": list(state["files"])}
+        state = self._state_at(int(version), cache=False)
+        doc = {**doc, "files": list(state["files"])}
         if doc["files"]:
-            cur = self._read_snapshot()
-            cur_live = set((cur or {}).get("files", []))
+            cur_live = set(self._require_snapshot()["files"])
             missing = [
                 f
                 for f in doc["files"]
@@ -1710,8 +1697,7 @@ class KeyedParquetTable:
         upsert_replace_partitions) use, which keeps their planning
         cost proportional to the touched set at any table size and
         makes "only touched buckets were read" directly assertable
-        (tests/test_annindex.py refresh accounting). Pre-manifest
-        tables fall back to a pruned filter over the full read.
+        (tests/test_annindex.py refresh accounting).
 
         ``part_type``: the caller's dtype for the partition column
         (simpleString). Directory-name inference over a SUBSET of
@@ -1722,14 +1708,6 @@ class KeyedParquetTable:
         which is exactly the type the downstream union/anti-join
         needs."""
         vals = list(parts)
-        snap = self._read_snapshot()
-        if snap is None:
-            col = F.col(self.keys[0])
-            non_null = [v for v in vals if v is not None]
-            pred = col.isin(non_null) if non_null else F.lit(False)
-            if any(v is None for v in vals):
-                pred = pred | col.isNull()
-            return self._read_with(sess).filter(pred)
         if vals and all(v is None for v in vals):
             # only the NULL partition is touched: no directory value
             # to infer a type from (Spark raises on VOID partition
@@ -1740,7 +1718,7 @@ class KeyedParquetTable:
             )
         dirs = {self._partition_dir_of(v) for v in vals}
         files = [
-            f for f in snap.get("files", [])
+            f for f in self._require_snapshot()["files"]
             if f.split("/", 1)[0] in dirs
         ]
         if not files:
@@ -1752,33 +1730,26 @@ class KeyedParquetTable:
             )
         return df
 
-    def _pinned_struct(self):
-        """The manifest's pinned table schema as a StructType, or
-        None (legacy tables, torn pins)."""
+    def _pinned_struct(self) -> T.StructType:
+        """The pointer's pinned table schema (every commit pins one)."""
         import json as _json
 
-        from pyspark.sql.types import StructType
-
-        doc = self._read_json(self._snapshot_uri())
-        js = (doc or {}).get("table_schema")
-        if not js:
-            return None
-        try:
-            return StructType.fromJson(_json.loads(js))
-        except Exception:  # noqa: BLE001 — pin is an optimization
-            return None
+        doc = self._read_pointer()
+        if doc is None:
+            raise self._no_table()
+        return T.StructType.fromJson(_json.loads(doc["table_schema"]))
 
     def _read_files(
         self, sess, files: Sequence[str], pinned: bool = True
     ) -> DataFrame:
         """Explicit-file read. CURRENT-state reads (``pinned=True``)
-        plan with the manifest's pinned table schema when available:
-        no footer is touched at planning time — the mergeSchema
-        fallback runs a DISTRIBUTED footer-merge job per read, O(table
-        files) work that at 10⁶ COW-sized files dwarfs the query
-        itself. The parquet reader widens older narrow files to the
-        pinned type (Spark 4 type-widening) and returns typed NULL for
-        columns a file predates — the same semantics mergeSchema gave.
+        plan with the manifest's pinned table schema: no footer is
+        touched at planning time — a mergeSchema read runs a
+        DISTRIBUTED footer-merge job per read, O(table files) work
+        that at 10⁶ COW-sized files dwarfs the query itself. The
+        parquet reader widens older narrow files to the pinned type
+        (Spark 4 type-widening) and returns typed NULL for columns a
+        file predates — the same semantics mergeSchema gives.
         TIME-TRAVEL / CDC reads pass ``pinned=False``: an old version
         may carry columns since dropped by an overwrite, which the
         current pin would silently hide."""
@@ -1814,50 +1785,27 @@ class KeyedParquetTable:
         "float": ("double",),
     }
 
-    def _table_schema(self):
-        """The live table's schema: the manifest's pinned
-        ``table_schema`` when present (O(1) — maintained by every
-        commit), else the mergeSchema read schema (legacy tables),
-        else None — alignment is then skipped."""
+    @staticmethod
+    def _fold_pin(base_json, written_schema) -> str:
+        """Pinned-table-schema fold: the previous pin's fields (none on
+        a first write or an overwrite) updated by the written fields
+        (written wins on dtype conflict — the writer either aligned to
+        the stored type or widened it via union coercion), new fields
+        appended. Returns schema JSON."""
         import json as _json
 
-        from pyspark.sql.types import StructType
-
-        doc = self._read_json(self._snapshot_uri())
-        pinned = (doc or {}).get("table_schema")
-        if pinned:
-            try:
-                return StructType.fromJson(_json.loads(pinned))
-            except Exception:  # noqa: BLE001 — fall through to read
-                pass
-        try:
-            return self._read_with(self.spark).schema
-        except Exception:  # noqa: BLE001 — pre-manifest / unreadable
-            return None
-
-    def _fold_table_schema(self, base_json, written_schema, prev_files):
-        """Pinned-table-schema fold: base fields (from the previous
-        pin, or ONE legacy footer-merge read) updated by the written
-        fields (written wins on dtype conflict — the writer either
-        aligned to the stored type or widened it via union coercion),
-        new fields appended. Returns schema JSON."""
-        import json as _json
-
-        from pyspark.sql.types import StructType
-
-        if base_json:
-            base = StructType.fromJson(_json.loads(base_json))
-        elif prev_files:
-            base = self._read_files(self.spark, prev_files).schema
-        else:
-            base = StructType([])
+        base = (
+            T.StructType.fromJson(_json.loads(base_json))
+            if base_json
+            else T.StructType([])
+        )
         fields = {f.name: f for f in base.fields}
         order = [f.name for f in base.fields]
         for f in written_schema.fields:
             if f.name not in fields:
                 order.append(f.name)
             fields[f.name] = f
-        return StructType([fields[n] for n in order]).json()
+        return T.StructType([fields[n] for n in order]).json()
 
     def _align_for_append(self, df: DataFrame) -> DataFrame | None:
         """``df`` with every column whose dtype drifted from the
@@ -1866,10 +1814,8 @@ class KeyedParquetTable:
         must then take a coercing merge-rewrite path instead of a
         pure append). Columns new to the table pass through (schema
         evolution); columns the table has but ``df`` lacks read back
-        NULL via mergeSchema, as before (ADVICE r10, high)."""
-        tbl = self._table_schema()
-        if tbl is None:
-            return df
+        NULL through the pinned schema (ADVICE r10, high)."""
+        tbl = self._pinned_struct()
         want = {f.name: f.dataType.simpleString() for f in tbl.fields}
         out = df
         for name, have in df.dtypes:
@@ -1907,19 +1853,13 @@ class KeyedParquetTable:
         from a different partition's key: the rewrite anti-joins on
         the FULL key, so a cross-partition false hit costs IO, never
         rows) lands in *hit*. Returns None — caller keeps its
-        whole-partition path — for pre-manifest tables, single-key
-        tables, non-int/string row-key dtypes (float NaN never enters
-        footer bounds; decimal/date bounds aren't JSON-plain anyway),
-        and hit sets confined to the NULL partition directory (whose
+        whole-partition path — for single-key tables, non-int/string
+        row-key dtypes (float NaN never enters footer bounds;
+        decimal/date bounds aren't JSON-plain anyway), and hit sets
+        confined to the NULL partition directory (whose
         subset read infers an unusable VOID partition column)."""
-        snap = self._read_snapshot()
         vals = list(parts)
-        if (
-            snap is None
-            or len(self.keys) < 2
-            or not vals
-            or all(v is None for v in vals)
-        ):
+        if len(self.keys) < 2 or not vals or all(v is None for v in vals):
             return None
         rk = self.keys[1]
         rk_type = dict(key_set.dtypes)[rk]
@@ -1929,13 +1869,12 @@ class KeyedParquetTable:
             py_t = str
         else:
             return None
+        snap = self._require_snapshot()
         dirs = {self._partition_dir_of(v) for v in vals}
-        cand = [
-            f for f in snap.get("files", []) if f.split("/", 1)[0] in dirs
-        ]
+        cand = [f for f in snap["files"] if f.split("/", 1)[0] in dirs]
         if not cand:
             return [], []
-        stats = snap.get("stats") or {}
+        stats = snap["stats"]
         # Classification is independent of the (possibly not-yet-known)
         # NULL flag: files whose stats record nulls are NULL-SENSITIVE
         # (hit iff the key set carries a NULL key) and — when they also
@@ -2079,10 +2018,7 @@ class KeyedParquetTable:
         dropped."""
         doc_a = self._version_doc(from_version)
         if to_version is None:
-            snap = self._read_snapshot()
-            if snap is None:
-                raise ValueError(f"no committed snapshot at {self.path}")
-            to_version = int(snap["version"])
+            to_version = self._require_snapshot()["version"]
         doc_b = self._version_doc(to_version)
         fa, fb = set(doc_a["files"]), set(doc_b["files"])
         old_only, new_only = sorted(fa - fb), sorted(fb - fa)
@@ -2184,61 +2120,19 @@ class KeyedParquetTable:
         if version is not None:
             doc = self._version_doc(version)
             if not doc["files"]:
-                return self._read_with(sess).filter(F.lit(False))
+                return self._empty_read(sess)
             # time travel reads UNPINNED: the old version may carry
             # columns an overwrite has since dropped from the pin
             return self._read_files(sess, doc["files"], pinned=False)
-        # Schema: the manifest's pinned table schema when present
-        # (v2 — zero footers touched at planning time), else
-        # mergeSchema: partitions written before a column was added
-        # keep their old file schema on disk (per-partition rewrites
-        # never touch the others), so the union schema must be
-        # assembled from footers — an O(table files) distributed job
-        # per read that the pin exists to avoid.
-        # The manifest pins the exact committed file set; basePath
-        # keeps directory-derived partition columns and pruning.
-        snap = self._read_snapshot()
-        if snap is None and self._has_history():
-            # A table with committed versions but no _SNAPSHOT is a
-            # torn manifest flip (non-atomic overwrite on stores
-            # without rename-overwrite): retry briefly — the writer's
-            # rename completes in microseconds — rather than fall back
-            # to a directory listing that mixes retired and fresh
-            # files (the exact torn read the protocol prevents).
-            import time
-
-            for _ in range(20):
-                time.sleep(0.05)
-                snap = self._read_snapshot()
-                if snap is not None:
-                    break
-            if snap is None:
-                raise ValueError(
-                    f"table {self.path} has committed history but no"
-                    " _SNAPSHOT manifest — torn or deleted manifest;"
-                    " refusing the unversioned directory fallback"
-                )
-        if snap is not None:
-            if snap.get("files"):
-                return self._read_files(sess, snap["files"])
-            # fully-emptied table: typed empty frame from the schema
-            # pinned at the emptying commit — NEVER the directory read
-            # (retained-but-retired files would resurrect deleted rows)
-            schema_json = snap.get("schema")
-            if schema_json:
-                import json as _json
-
-                from pyspark.sql.types import StructType
-
-                return sess.createDataFrame(
-                    [], StructType.fromJson(_json.loads(schema_json))
-                )
-            raise ValueError(
-                f"table {self.path} is empty (version"
-                f" {snap.get('version')}) and its manifest predates"
-                " schema pinning; re-create or overwrite it"
-            )
-        return sess.read.option("mergeSchema", "true").parquet(self.path)
+        # the manifest pins the exact committed file set and the
+        # schema; basePath keeps directory-derived partition columns
+        # and pruning. A fully-emptied table is a typed empty frame —
+        # never the directory, whose retained-but-retired files would
+        # resurrect deleted rows.
+        files = self._require_snapshot()["files"]
+        if not files:
+            return self._empty_read(sess)
+        return self._read_files(sess, files)
 
     def _has_history(self) -> bool:
         """True iff at least one committed _history manifest exists."""
@@ -2265,10 +2159,6 @@ class KeyedParquetTable:
 
     def _overwrite_unlocked(self, df: DataFrame) -> None:
         before = set(self._list_data_files())
-        prev = self._read_snapshot()
-        prev_files = (
-            list(prev["files"]) if prev else sorted(before)
-        )
         (
             df.write.mode("append")
             .partitionBy(self.keys[0])
@@ -2279,7 +2169,36 @@ class KeyedParquetTable:
             if f not in before
         ]
         self._commit_snapshot(
-            new_files, prev_files, op="overwrite", written_schema=df.schema
+            new_files, op="overwrite", written_schema=df.schema
+        )
+
+    def _append_and_commit(
+        self, rows: DataFrame, op: str, dirs: set[str], hit=None,
+        written_schema=None,
+    ) -> None:
+        """Append ``rows`` under the partition directories ``dirs`` and
+        commit the appended files live in place of the files they
+        supersede: ``hit`` (a COW split's hit files) when given, else
+        every live file under ``dirs``. The before/after listings walk
+        only ``dirs`` — the write lands nowhere else — so a
+        partition-scoped mutation never pays a table walk."""
+        prev = self._require_snapshot()["files"]
+        before = set(self._list_data_files(dirs))
+        rows.write.mode("append").partitionBy(self.keys[0]).parquet(
+            self.path
+        )
+        new_files = [
+            f for f in self._list_data_files(dirs) if f not in before
+        ]
+        gone = (
+            set(hit)
+            if hit is not None
+            else {f for f in prev if f.split("/", 1)[0] in dirs}
+        )
+        self._commit_snapshot(
+            [f for f in prev if f not in gone] + new_files,
+            op=op,
+            written_schema=written_schema,
         )
 
     def partition_is_empty(self, partition_value: str) -> bool:
@@ -2386,8 +2305,9 @@ class KeyedParquetTable:
         if split is not None and not split[0]:
             # no live file can contain any delete key: physical no-op,
             # committed anyway so the verb still flips a version
-            snap = self._read_snapshot()
-            self._commit_snapshot(list(snap["files"]), [], op="delete")
+            self._commit_snapshot(
+                self._require_snapshot()["files"], op="delete"
+            )
             return
         if split is None:
             # manifest-pinned touched-slice read: exactly the delete
@@ -2401,44 +2321,14 @@ class KeyedParquetTable:
             )
         # lazy on purpose: the append below is this plan's ONLY
         # consumer, and its input files stay live until the commit
-        # after the write — no pin needed (see the docstring)
-        remaining = delete_keys(touched_rows, key_set, self.keys)
-        snap = self._read_snapshot()
-        # before/after listings scoped to the TOUCHED partition dirs
-        # (the write only lands there): O(touched files) per mutation,
-        # never a table walk (manifest v2)
-        scope = (
-            {self._partition_dir_of(p) for p in parts}
-            if snap is not None
-            else None
+        # after the write — no pin needed (see the docstring). A
+        # fully-emptied partition simply contributes no new files.
+        self._append_and_commit(
+            delete_keys(touched_rows, key_set, self.keys),
+            "delete",
+            {self._partition_dir_of(p) for p in parts},
+            hit=None if split is None else split[0],
         )
-        before = set(self._list_data_files(scope))
-        prev_files = list(snap["files"]) if snap else sorted(before)
-        # append the touched slice's SURVIVING rows as new files; the
-        # manifest flip supersedes every rewritten file (a fully-
-        # emptied partition simply contributes no new files, so "this
-        # partition is now empty" is expressible — the old dynamic-
-        # overwrite protocol needed an explicit rmtree)
-        remaining.write.mode("append").partitionBy(self.keys[0]).parquet(
-            self.path
-        )
-        new_files = [
-            f for f in self._list_data_files(scope) if f not in before
-        ]
-        if split is None:
-            touched_dirs = {self._partition_dir_of(p) for p in parts}
-            live = [
-                f for f in prev_files
-                if f.split("/", 1)[0] not in touched_dirs
-            ] + new_files
-            superseded = [
-                f for f in prev_files if f.split("/", 1)[0] in touched_dirs
-            ]
-        else:
-            hit = set(split[0])
-            live = [f for f in prev_files if f not in hit] + new_files
-            superseded = sorted(hit)
-        self._commit_snapshot(live, superseded, op="delete")
 
     def stats(self) -> DataFrame:
         """Per-partition table statistics: row count, file count, and
@@ -2452,39 +2342,27 @@ class KeyedParquetTable:
         # validate the manifest against the disk walk BEFORE read():
         # the clearer divergence error beats Spark's PATH_NOT_FOUND
         prefix = f"{self.keys[0]}="
-        listing = []
-        snap = self._read_snapshot()
+        snap = self._require_snapshot()
         sizes = self._data_file_sizes()  # ONE walk (local fast path)
-        if snap is not None:
-            # manifest-aware: count/size only LIVE files, so retired-
-            # but-retained files never inflate the stats (r7 snapshot
-            # protocol)
-            per_part: dict[str, list[int]] = {}
-            for rel in snap["files"]:
-                head = rel.split("/", 1)[0]
-                if not head.startswith(prefix):
-                    continue
-                if rel not in sizes:
-                    # a LIVE manifest file absent on disk is corruption
-                    # (reaped past retention, external deletion) — a
-                    # silent 0-byte default would mask it (ADVICE r8)
-                    raise FileNotFoundError(
-                        f"live snapshot file missing on disk: "
-                        f"{self.path}/{rel} (manifest/storage divergence"
-                        " — restore the file or roll the table back)"
-                    )
-                agg = per_part.setdefault(head, [0, 0])
-                agg[0] += 1
-                agg[1] += sizes[rel]
-        else:
-            per_part = {}
-            for rel, sz in sizes.items():
-                head = rel.split("/", 1)[0]
-                if not head.startswith(prefix):
-                    continue
-                agg = per_part.setdefault(head, [0, 0])
-                agg[0] += 1
-                agg[1] += sz
+        # count/size only LIVE files, so retired-but-retained files
+        # never inflate the stats
+        per_part: dict[str, list[int]] = {}
+        for rel in snap["files"]:
+            head = rel.split("/", 1)[0]
+            if not head.startswith(prefix):
+                continue
+            if rel not in sizes:
+                # a LIVE manifest file absent on disk is corruption
+                # (reaped past retention, external deletion) — a
+                # silent 0-byte default would mask it (ADVICE r8)
+                raise FileNotFoundError(
+                    f"live snapshot file missing on disk: "
+                    f"{self.path}/{rel} (manifest/storage divergence"
+                    " — restore the file or roll the table back)"
+                )
+            agg = per_part.setdefault(head, [0, 0])
+            agg[0] += 1
+            agg[1] += sizes[rel]
         listing = [
             (self._partition_value_of_dir(d), n, b)
             for d, (n, b) in per_part.items()
@@ -2598,21 +2476,12 @@ class KeyedParquetTable:
         same single commit, sort parallelism K instead of 1."""
         from pyspark.sql import Window
 
-        snap = self._read_snapshot()
-        if partitions is None:
-            if snap is not None:
-                dirs = sorted({f.split("/", 1)[0] for f in snap["files"]})
-            else:
-                dirs = sorted(
-                    {f.split("/", 1)[0] for f in self._list_data_files()}
-                )
-        else:
-            dirs = sorted(
-                {self._partition_dir_of(p) for p in partitions}
-            )
-        scope = set(dirs)
-        before = set(self._list_data_files(scope if snap else None))
-        prev_files = list(snap["files"]) if snap else sorted(before)
+        prev_files = self._require_snapshot()["files"]
+        scope = (
+            {f.split("/", 1)[0] for f in prev_files}
+            if partitions is None
+            else {self._partition_dir_of(p) for p in partitions}
+        )
         target_rels = [f for f in prev_files if f.split("/", 1)[0] in scope]
         if not target_rels:
             return
@@ -2890,24 +2759,8 @@ class KeyedParquetTable:
             "__cp_pk", "__cp_n", "__cp_off", "__cp_big", "__cp_g",
             "__cp_r", "__cp_x",
         )
-        (
-            laid_out.write.mode("append")
-            .partitionBy(pk)
-            .parquet(self.path)
-        )
-        new_files = [
-            f
-            for f in self._list_data_files(scope if snap else None)
-            if f not in before
-        ]
-        live = [
-            f for f in prev_files if f.split("/", 1)[0] not in scope
-        ] + new_files
-        superseded = [
-            f for f in prev_files if f.split("/", 1)[0] in scope
-        ]
         # ONE atomic commit for the whole maintenance pass
-        self._commit_snapshot(live, superseded, op="compact")
+        self._append_and_commit(laid_out, "compact", scope)
 
     def _compact_all(self, target_file_bytes: int, cluster: bool) -> None:
         """Whole-table compaction as one job + one commit (see
@@ -2920,20 +2773,11 @@ class KeyedParquetTable:
         read lists each directory's files contiguously, so coalesced
         tasks span few directories and small files merge without
         moving a byte between executors."""
-        snap = self._read_snapshot()
+        prev_files = self._require_snapshot()["files"]
         sizes = self._data_file_sizes()
-        prev_files = (
-            list(snap["files"]) if snap else sorted(sizes)
-        )
-        if not prev_files:
-            return
         total_bytes = sum(sizes.get(f, 0) for f in prev_files)
         n_files = max(1, -(-int(total_bytes) // target_file_bytes))
-        rows = self.read()
-        if snap is None:
-            # pre-manifest table: the directory-listing read is not
-            # pinned against our own appends — freeze it first
-            rows = rows.localCheckpoint(eager=True)
+        rows = self._read_files(self.spark, prev_files)
         pk = self.keys[0]
         # single-key tables range-cluster on the partition key alone
         order_cols = [F.col(k) for k in self.keys[:2]]
@@ -2954,7 +2798,7 @@ class KeyedParquetTable:
         ]
         # every partition was rewritten: live = the fresh layout,
         # the entire previous file set retires in ONE version flip
-        self._commit_snapshot(new_files, prev_files, op="compact")
+        self._commit_snapshot(new_files, op="compact")
 
     def compact_if(
         self,
@@ -2980,11 +2824,10 @@ class KeyedParquetTable:
         sorts in a single task. ``compact(partitions=None)`` (the
         size-driven full-table pass) remains the right call for a
         table whose partitions are ALL huge."""
-        snap = self._read_snapshot()
-        if not snap or not snap.get("files"):
+        if not self.exists():
             return []
         counts: dict[str, int] = {}
-        for f in snap["files"]:
+        for f in self._require_snapshot()["files"]:
             d = f.split("/", 1)[0]
             counts[d] = counts.get(d, 0) + 1
         hot = sorted(
@@ -3011,12 +2854,13 @@ class KeyedParquetTable:
         (`_SNAPSHOT`) is untouched. Returns the number of version
         docs deleted.
 
-        v2 chains (delta manifests): before deltas are dropped, a
-        compacted checkpoint is materialized at the OLDEST surviving
-        version so every kept version still reconstructs (checkpoint
-        + tail deltas); checkpoints older than the horizon are
-        dropped with their deltas and the pointer's checkpoint list
-        is rewritten under the same lock."""
+        Before deltas are dropped, a compacted checkpoint is
+        materialized at the OLDEST surviving version so every kept
+        version still reconstructs (checkpoint + tail deltas);
+        checkpoints older than the horizon are dropped with their
+        deltas and the pointer's checkpoint list is rewritten under
+        the same lock. A torn pointer is refused before anything is
+        deleted."""
         import re
 
         with self._write_lock():
@@ -3037,72 +2881,59 @@ class KeyedParquetTable:
                     ckpts.append(int(m.group(1)))
             versions.sort()
             drop = versions[:-keep_last] if keep_last > 0 else versions
+            if not drop:
+                return 0
             # never drop the version the live manifest points at
-            pointer = self._read_json(self._snapshot_uri())
-            cur = int(pointer["version"]) if pointer else None
+            pointer = self._read_pointer()
+            cur = int(pointer["version"])
             drop = [v for v in drop if v != cur]
             if not drop:
                 return 0
             kept = [v for v in versions if v not in set(drop)]
             horizon = min(kept) if kept else cur
-            # v2: materialize the fold base at the horizon BEFORE the
-            # older deltas vanish (a v1 absolute doc there already is
-            # one; so is an existing checkpoint)
-            is_v2 = pointer is not None and "files" not in pointer
-            # the POINTER's checkpoint list is the source of truth
+            # materialize the fold base at the horizon BEFORE the
+            # older deltas vanish (unless a checkpoint is already
+            # there). The POINTER's checkpoint list is the source of truth
             # (ADVICE r11): an on-disk ckpt_v*.json the pointer never
             # referenced may be a crashed writer's orphan whose content
             # disagrees with the retried commit at the same version —
             # adopting it would let _fold_state pick a wrong fold base
             # and reconstruct ghost/missing rows. Never promote
             # unreferenced files; delete them instead.
-            ptr_ckpts = (
-                sorted({int(c) for c in pointer.get("checkpoints", [])})
-                if is_v2
-                else []
-            )
-            if is_v2 and horizon is not None and horizon not in ptr_ckpts:
-                hdoc = self._read_json(self._history_uri(horizon))
-                if hdoc is not None and "files" not in hdoc:
-                    # _state_at folds only pointer-referenced
-                    # checkpoints, so this base is trustworthy even if
-                    # an orphan ckpt file squats at this version (the
-                    # atomic write below overwrites it)
-                    state = self._state_at(int(horizon))
-                    self._write_json_atomic(
-                        self._ckpt_uri(horizon),
-                        {
-                            "version": int(horizon),
-                            "files": list(state["files"]),
-                            "stats": state["stats"],
-                        },
-                    )
-                    ptr_ckpts.append(int(horizon))
+            ptr_ckpts = sorted({int(c) for c in pointer["checkpoints"]})
+            if horizon not in ptr_ckpts:
+                # _state_at folds only pointer-referenced checkpoints,
+                # so this base is trustworthy even if an orphan ckpt
+                # file squats at this version (the atomic write below
+                # overwrites it)
+                state = self._state_at(int(horizon))
+                self._write_json_atomic(
+                    self._ckpt_uri(horizon),
+                    {
+                        "version": int(horizon),
+                        "files": list(state["files"]),
+                        "stats": state["stats"],
+                    },
+                )
+                ptr_ckpts.append(int(horizon))
             for v in drop:
                 fs.delete(
                     jvm.org.apache.hadoop.fs.Path(self._history_uri(v)),
                     False,
                 )
-            if is_v2:
-                live_ckpts = sorted(
-                    c
-                    for c in set(ptr_ckpts)
-                    if horizon is None or c >= horizon
+            live_ckpts = sorted(c for c in set(ptr_ckpts) if c >= horizon)
+            # reap every on-disk checkpoint that is not live:
+            # referenced-but-below-horizon (their deltas are gone) AND
+            # never-referenced orphans
+            for c in set(ckpts) - set(live_ckpts):
+                fs.delete(
+                    jvm.org.apache.hadoop.fs.Path(self._ckpt_uri(c)),
+                    False,
                 )
-                # reap every on-disk checkpoint that is not live:
-                # referenced-but-below-horizon (their deltas are gone)
-                # AND never-referenced orphans
-                for c in set(ckpts) - set(live_ckpts):
-                    fs.delete(
-                        jvm.org.apache.hadoop.fs.Path(self._ckpt_uri(c)),
-                        False,
-                    )
-                if live_ckpts != sorted(
-                    int(c) for c in pointer.get("checkpoints", [])
-                ):
-                    self._write_snapshot_atomic(
-                        {**pointer, "checkpoints": live_ckpts}
-                    )
+            if live_ckpts != sorted(int(c) for c in pointer["checkpoints"]):
+                self._write_snapshot_atomic(
+                    {**pointer, "checkpoints": live_ckpts}
+                )
             return len(drop)
 
     def _partition_value_of_dir(self, dirname: str):
@@ -3201,37 +3032,10 @@ class KeyedParquetTable:
         else:
             # nothing on disk can collide: a pure keyed append
             merged = new.dropDuplicates(list(self.keys))
-        snap = self._read_snapshot()
-        # before/after listings scoped to the TOUCHED partition dirs
-        # (the write only lands there): O(touched files) per mutation,
-        # never a table walk (manifest v2)
-        scope = (
-            {self._partition_dir_of(p) for p in parts}
-            if snap is not None
-            else None
-        )
-        before = set(self._list_data_files(scope))
-        prev_files = list(snap["files"]) if snap else sorted(before)
-        (
-            merged.write.mode("append")
-            .partitionBy(self.keys[0])
-            .parquet(self.path)
-        )
-        new_files = [
-            f for f in self._list_data_files(scope) if f not in before
-        ]
-        if split is None:
-            touched = {self._partition_dir_of(p) for p in parts}
-            live = [
-                f for f in prev_files if f.split("/", 1)[0] not in touched
-            ] + new_files
-            superseded = [
-                f for f in prev_files if f.split("/", 1)[0] in touched
-            ]
-        else:
-            hit = set(split[0])
-            live = [f for f in prev_files if f not in hit] + new_files
-            superseded = sorted(hit)
-        self._commit_snapshot(
-            live, superseded, op="upsert", written_schema=merged.schema
+        self._append_and_commit(
+            merged,
+            "upsert",
+            {self._partition_dir_of(p) for p in parts},
+            hit=None if split is None else split[0],
+            written_schema=merged.schema,
         )

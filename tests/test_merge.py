@@ -556,16 +556,19 @@ def test_emptied_table_read_is_typed_empty_not_ghost(spark, tmp_path):
     files of a fully-emptied table are still on disk; read() must
     return a TYPED EMPTY frame from the manifest-pinned schema, never
     fall back to the directory listing (which would resurrect every
-    deleted row)."""
+    deleted row) — with the columns in the order a non-empty read
+    gives."""
     path = str(tmp_path / "ghost")
     t = merge.KeyedParquetTable(spark, path, KEYS)
     t.retain_stale_s = 3600.0  # deleted files stay physically on disk
     t.overwrite(_df(spark, [("A", "1", "a", 1), ("B", "2", "b", 2)]))
+    cols = t.read().columns
     t.delete_by_keys(_df(spark, [("A", "1", "", 0), ("B", "2", "", 0)]))
     assert not t.exists()
     got = t.read()
     assert got.count() == 0  # the ghost read returned 2
     assert set(got.columns) == {"PartitionKey", "RowKey", "val", "n"}
+    assert got.columns == cols
     # lookup() rides the same path
     assert t.lookup("A", "1").count() == 0
     # and the table is still reusable after the empty read
@@ -576,30 +579,158 @@ def test_emptied_table_read_is_typed_empty_not_ghost(spark, tmp_path):
 def test_emptied_table_read_zero_retention(spark, tmp_path):
     """Same emptied-table read with retention 0 (files physically
     gone): the old directory fallback raised 'unable to infer schema';
-    now it's the same typed empty frame."""
+    now it's the same typed empty frame, columns in read() order."""
     path = str(tmp_path / "ghost0")
     t = merge.KeyedParquetTable(spark, path, KEYS)
     t.overwrite(_df(spark, [("A", "1", "a", 1)]))
+    cols = t.read().columns
     t.delete_by_keys(_df(spark, [("A", "1", "", 0)]))
     got = t.read()
     assert got.count() == 0
     assert set(got.columns) == {"PartitionKey", "RowKey", "val", "n"}
+    assert got.columns == cols
 
 
 def test_missing_manifest_with_history_refuses_dir_fallback(spark, tmp_path):
     """ADVICE r7: a table with committed history but no _SNAPSHOT is a
     torn (or deleted) manifest — read() must retry then refuse, not
-    serve a directory listing mixing retired and live files."""
+    serve a directory listing mixing retired and live files. Verbs
+    read the pointer the same way: an upsert and expire_history
+    refuse too, and neither deletes a data file or a _history doc."""
     import os
 
     import pytest
 
     path = str(tmp_path / "torn")
+    hist = os.path.join(path, "_history")
     t = merge.KeyedParquetTable(spark, path, KEYS)
     t.overwrite(_df(spark, [("A", "1", "a", 1)]))
+    t.upsert_replace_partitions(_df(spark, [("A", "1", "b", 2)]))
     os.remove(os.path.join(path, "_SNAPSHOT"))
+    data, docs = t._list_data_files(), sorted(os.listdir(hist))
     with pytest.raises(ValueError, match="no _SNAPSHOT manifest"):
         t.read().collect()
+    with pytest.raises(ValueError, match="no _SNAPSHOT manifest"):
+        t.upsert_replace_partitions(_df(spark, [("A", "2", "c", 3)]))
+    with pytest.raises(ValueError, match="no _SNAPSHOT manifest"):
+        t.expire_history(keep_last=1)
+    assert t._list_data_files() == data
+    assert sorted(os.listdir(hist)) == docs
+
+
+def test_uncommitted_files_never_become_live_rows(spark, tmp_path):
+    """A table is its manifest: with no _SNAPSHOT and no _history there
+    is no table, so read() raises naming the path — for a missing
+    directory and for one holding another writer's uncommitted
+    parquet files alike. Those files are orphans, never rows: the
+    first upsert takes the overwrite path and its checkpoint commit
+    reaps them."""
+    import os
+    import re
+
+    import pytest
+
+    schema = "PartitionKey string, RowKey string, val string"
+    missing = str(tmp_path / "missing")
+    with pytest.raises(ValueError, match=re.escape(missing)):
+        merge.KeyedParquetTable(spark, missing, KEYS).read()
+    path = str(tmp_path / "ghostdir")
+    spark.createDataFrame([("A", "9", "ghost")], schema).write.partitionBy(
+        "PartitionKey"
+    ).parquet(path)
+    ghosts = [
+        os.path.join(d, n)
+        for d, _, ns in os.walk(path)
+        for n in ns
+        if n.endswith(".parquet")
+    ]
+    assert ghosts
+    t = merge.KeyedParquetTable(spark, path, KEYS)
+    assert not t.exists()
+    with pytest.raises(ValueError, match=re.escape(path)):
+        t.read()
+    t.upsert_replace_partitions(
+        spark.createDataFrame([("A", "1", "real")], schema)
+    )
+    got = sorted(
+        (r.PartitionKey, r.RowKey, r.val) for r in t.read().collect()
+    )
+    assert got == [("A", "1", "real")]
+    assert not any(os.path.exists(g) for g in ghosts), "orphan not reaped"
+
+
+def test_no_aqe_overlapping_probes_restore_prior_value(spark):
+    """Two probes overlapping on one session: A enters, B enters, A
+    leaves while B still plans. B must still run with AQE off, and
+    once both left the conf is back at its prior value."""
+    import sys
+    import threading
+
+    key = "spark.sql.adaptive.enabled"
+    conf = spark.conf
+    saved = conf.get(key)
+    conf.set(key, "true")
+    a_in, b_in, a_out = threading.Event(), threading.Event(), threading.Event()
+    seen: dict = {}
+
+    def adaptive():
+        df = spark.range(10).groupBy((F.col("id") % 2).alias("k")).count()
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan()
+        return conf.get(key), plan.getClass().getSimpleName()
+
+    def probe_a():
+        with merge._no_aqe(spark):
+            a_in.set()
+            assert b_in.wait(60)
+            seen["a"] = adaptive()
+        a_out.set()
+
+    def probe_b():
+        assert a_in.wait(60)
+        with merge._no_aqe(spark):
+            b_in.set()
+            assert a_out.wait(60)
+            seen["b"] = adaptive()
+
+    try:
+        threads = [threading.Thread(target=f) for f in (probe_a, probe_b)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(120)
+        for name in ("a", "b"):
+            value, plan = seen[name]
+            assert value == "false", (name, value)
+            assert plan != "AdaptiveSparkPlanExec", (name, plan)
+        assert conf.get(key) == "true"
+        # stress: more threads than cores entering and leaving at a
+        # short switch interval; any lost update to the hold count
+        # either shows AQE on inside a probe or leaves it off after
+        switch = sys.getswitchinterval()
+        sys.setswitchinterval(1e-5)
+        bad: list = []
+
+        def churn():
+            for _ in range(25):
+                with merge._no_aqe(spark):
+                    if conf.get(key) != "false":
+                        bad.append(conf.get(key))
+
+        try:
+            threads = [threading.Thread(target=churn) for _ in range(8)]
+            for th in threads:
+                th.start()
+            for th in threads:
+                th.join(120)
+            assert not any(th.is_alive() for th in threads)
+        finally:
+            sys.setswitchinterval(switch)
+        assert bad == []
+        assert conf.get(key) == "true"
+        assert merge._NO_AQE_HOLDS == {}
+    finally:
+        conf.set(key, saved)
 
 
 def test_stale_break_is_by_identity(spark, tmp_path):
@@ -1429,12 +1560,15 @@ def test_manifest_v2_reader_reconstructs_without_cache(spark, tmp_path):
     assert t2.read().count() == 15
 
 
-def test_manifest_v1_reads_and_upgrades_transparently(spark, tmp_path):
-    """A table committed under the v1 protocol (full _SNAPSHOT + 
-    absolute per-version docs) must read unchanged, and its first v2
-    commit must force a checkpoint so the chain stays foldable."""
+def test_manifest_v1_pointer_is_refused(spark, tmp_path):
+    """A v1 manifest (a full-file-list _SNAPSHOT + absolute
+    per-version docs) is a format no code here writes: read() and a
+    verb refuse it instead of guessing at the table, and no file is
+    deleted."""
     import json
     import os
+
+    import pytest
 
     path = str(tmp_path / "v1up")
     t = merge.KeyedParquetTable(spark, path, KEYS)
@@ -1456,21 +1590,17 @@ def test_manifest_v1_reads_and_upgrades_transparently(spark, tmp_path):
         json.dump({**v1_doc, "ts": 0.0, "op": "overwrite"}, f)
     with merge._STATE_CACHE_LOCK:
         merge._STATE_CACHE.pop(path, None)
+    on_disk = sorted(
+        os.path.join(d, n) for d, _, ns in os.walk(path) for n in ns
+    )
     t2 = merge.KeyedParquetTable(spark, path, KEYS)
-    assert _rows(t2.read()) == [("p", "001", "a", 1), ("q", "002", "b", 2)]
-    # first mutation upgrades: pointer flips to format 2 + checkpoint
-    t2.upsert_replace_partitions(_df(spark, [("p", "003", "c", 3)]))
-    with open(os.path.join(path, "_SNAPSHOT")) as f:
-        pointer = json.load(f)
-    assert pointer.get("format") == 2
-    assert pointer["checkpoints"]
-    assert _rows(t2.read()) == [
-        ("p", "001", "a", 1),
-        ("p", "003", "c", 3),
-        ("q", "002", "b", 2),
-    ]
-    # time travel to the v1-era version still resolves (absolute doc)
-    assert t2.read(version=snap["version"]).count() == 2
+    with pytest.raises(ValueError, match="not a format-2 pointer"):
+        t2.read()
+    with pytest.raises(ValueError, match="not a format-2 pointer"):
+        t2.upsert_replace_partitions(_df(spark, [("p", "003", "c", 3)]))
+    assert on_disk == sorted(
+        os.path.join(d, n) for d, _, ns in os.walk(path) for n in ns
+    )
 
 
 def test_expire_history_v2_materializes_horizon_checkpoint(spark, tmp_path):
@@ -1561,7 +1691,7 @@ def test_broken_lock_fences_commit_flip(spark, tmp_path):
         # A wakes up and tries to flip its own commit → fenced
         snap = tA._read_snapshot()
         with pytest.raises(RuntimeError, match="broken as stale"):
-            tA._commit_snapshot(list(snap["files"]), [], op="upsert")
+            tA._commit_snapshot(list(snap["files"]), op="upsert")
     finally:
         cmA.__exit__(None, None, None)
     # A's token-verified release left the (absent) lock alone and its
