@@ -186,6 +186,37 @@ def table_path(sf_dir: str, name: str) -> str:
     return f"{sf_dir.rstrip('/')}/{name}.parquet"
 
 
+def source_stamp(path: str) -> tuple[int, int]:
+    """(mtime_ns, bytes) content stamp of a local parquet source, the
+    staleness key of the per-process memos over the test tables. A
+    file stamps by its own stat; a dataset directory by the max
+    mtime_ns and the total size over its part files (hidden and
+    _-prefixed names skipped, as Spark skips them), because a part
+    file rewritten in place changes neither the directory's mtime nor
+    its size. Raises OSError when the path cannot be read; each caller
+    keeps its own policy for that."""
+    import os
+    import stat
+
+    st = os.stat(path)
+    if not stat.S_ISDIR(st.st_mode):
+        return st.st_mtime_ns, st.st_size
+    mtime = size = 0
+    dirs = [path]
+    while dirs:
+        with os.scandir(dirs.pop()) as entries:
+            for e in entries:
+                if e.name.startswith(("_", ".")):
+                    continue
+                if e.is_dir():
+                    dirs.append(e.path)
+                else:
+                    est = e.stat()
+                    mtime = max(mtime, est.st_mtime_ns)
+                    size += est.st_size
+    return mtime, size
+
+
 def _parquet_ts_unit(path: str, column: str = "ts") -> str:
     """Probe the parquet footer for a timestamp column's physical unit.
 

@@ -19,9 +19,15 @@ table — so they inherit for free exactly what an index needs:
 - **incremental refresh**: base-table changes arrive as a
   change-feed batch (streaming/changefeed.py — the K8 face) and
   ``apply_changes`` folds them in: delete-by-key for removed/updated
-  vectors (their OLD bucket found by an id-level semi-join against
-  the index, broadcast — the batch is small), re-bucketed append for
-  new/updated ones. No rebuild.
+  vectors, whose OLD bucket is re-derived by re-bucketing the batch's
+  own (pre-image) vectors through the assignment the build used — no
+  index read; only NULL-vector deletes and preimage-less updates fall
+  back to a broadcast locate against the full index — then a
+  re-bucketed append for new/updated ones. No rebuild.
+
+Both share one lifecycle (:class:`_BucketedVectorIndex`); each index
+class decides only how a vector is bucketed and which buckets a query
+probes.
 
 LSH layout note: the full ``n_planes``-bit signature would make up to
 2^n_planes partition directories — unbounded small-file pressure. The
@@ -48,6 +54,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from otrrentetl_spark.operators.merge import KeyedParquetTable
 from otrrentetl_spark.operators.similarity import (
@@ -56,6 +63,7 @@ from otrrentetl_spark.operators.similarity import (
     _l2sq_mul,
     _norm,
     hyperplanes,
+    ivf_assign,
     l2sq_fold,
     lsh_bucket,
     lsh_signature,
@@ -142,47 +150,337 @@ def _fold_tallies(batch: DataFrame) -> dict:
 _TELEMETRY_NAME = "_ANN_TELEMETRY.json"
 
 
-def _warn_locate_fallback(index, n_ids: int) -> None:
-    """Loud, observable signal that a fold hit the O(index)
-    broadcast-locate fallback (r10 verdict item 6): preimage-less
-    updates / NULL-vector deletes cannot reveal their old bucket, so
-    those ids are joined against the FULL index — batch-proportional
-    feeds must be created with ``ChangeFeed(...,
-    include_preimage=True)`` (AnnIndexMaintenance already does).
-    Also recorded in ``index.last_fold_stats['located_fallback_ids']``
-    for programmatic monitors, and accumulated into the index's
-    on-disk telemetry sidecar so :meth:`stats` exposes a COUNTER a
-    headless deployment can alert on (r11 verdict item 6 — warnings
-    vanish in logs nobody reads)."""
-    import warnings
+def _check_qid_col(qid_col: str) -> None:
+    if qid_col == "vec_id":
+        raise ValueError(
+            "qid_col='vec_id' collides with the index id output"
+            " column; alias the query id first"
+        )
 
-    msg = (
-        f"ANN apply_changes at {index.path}: {n_ids} change row(s)"
-        " carry no pre-image — falling back to an O(index)"
-        " broadcast locate for their old buckets. Feed this index"
-        " with ChangeFeed(..., include_preimage=True) to stay"
-        " batch-proportional."
+
+def _ranked(scored: DataFrame, qid_col: str, k: int) -> DataFrame:
+    """Per-query top-``k`` of (qid, vec_id, cosine_sim) candidate rows:
+    one window ranked by (cosine desc, vec_id) — WindowGroupLimit keeps
+    the partial top-k before the exchange."""
+    w = Window.partitionBy(qid_col).orderBy(
+        F.col("cosine_sim").desc(), F.col("vec_id")
     )
-    _LOG.warning(msg)
-    warnings.warn(msg, RuntimeWarning, stacklevel=3)
-    index._bump_fallback_counter(n_ids)
+    return (
+        scored.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= k)
+        .select(qid_col, "vec_id", "cosine_sim", "rk")
+    )
 
 
-class _IndexTelemetryMixin:
-    """Shared fold-telemetry surface for the persisted indexes: a
-    tiny on-disk counter sidecar (written only when a fallback
-    actually fires — zero cost on the healthy path) plus ``stats()``,
-    the one call a monitor polls. The bump serializes through a
-    DEDICATED short-timeout telemetry lock (ADVICE r12,
-    annindex.py:184) — never the table's single-writer lock, whose
-    default 300 s wait would park a fold behind a long compact just
-    to bump a counter, then silently drop the increment on timeout.
-    The telemetry doc is touched by nothing else, so the narrow lock
-    still makes two concurrent folds increment-safe."""
+class _BucketedVectorIndex:
+    """A persisted vector index: a KeyedParquetTable at ``path`` keyed
+    ``(<_BUCKET>, id)`` holding each vector (``v``), its precomputed L2
+    norm (``vn``) and its bucket column(s), plus an ``_ANN_META.json``
+    doc pinning how vectors are bucketed. This base owns everything
+    that does not depend on HOW a vector is bucketed — the build tail,
+    the refresh fold, the stored-norm scoring and per-query ranking,
+    the broadcast batch join, maintenance and fold telemetry. A
+    subclass supplies two decisions:
+
+    - how rows are bucketed: ``_assign(df)`` maps (id, v) rows to index
+      rows. Build and fold share it, so a removed row's OLD bucket is
+      re-derived from its own vector bit-identically;
+    - which buckets a query probes: ``_prober(param)`` returns the
+      driver-side map from a query vector to its probe keys (values of
+      ``_PROBE_COL``), ``_bucket_of(key)`` names the partition a key
+      lives in, and each bulk face expands queries into probe keys
+      executor-side.
+
+    Fold telemetry: a tiny on-disk counter sidecar (written only when
+    a locate fallback actually fires — zero cost on the healthy path)
+    plus ``stats()``, the one call a monitor polls. The bump serializes
+    through a DEDICATED short-timeout telemetry lock — never the
+    table's single-writer lock, whose default 300 s wait would park a
+    fold behind a long compact just to bump a counter, then silently
+    drop the increment on timeout. The telemetry doc is touched by
+    nothing else, so the narrow lock still makes two concurrent folds
+    increment-safe."""
+
+    _BUCKET: str  # partition column
+    _PROBE_COL: str  # column a query's probe keys are matched on
 
     _TELEMETRY_LOCK_SUFFIX = "._TELEMETRY_LOCK"
     _TELEMETRY_LOCK_TIMEOUT_S = 10.0
     _TELEMETRY_LOCK_STALE_S = 60.0
+
+    def __init__(self, spark: SparkSession, path: str):
+        self.spark = spark
+        self.path = path.rstrip("/")
+        self._meta_cache: dict | None = None
+        # routing tallies of the most recent apply_changes fold —
+        # monitors watch located_fallback_ids for the O(index) path
+        self.last_fold_stats: dict = {}
+
+    def _assign(self, df: DataFrame) -> DataFrame:
+        raise NotImplementedError
+
+    def _bucket_of(self, key: int) -> int:
+        raise NotImplementedError
+
+    # ------------------------------------------------------------ build
+    def _build(
+        self, df: DataFrame, vec_col: str, id_col: str, n_buckets: int,
+        doc: dict,
+    ) -> None:
+        """Bucket ``df`` with the layout ``doc`` pins, write it, then
+        publish ``doc``. Bucket-aligned layout BEFORE the partitioned
+        write: without it every write task emits one file into every
+        bucket dir it touches (tasks × buckets files — measured 8,156
+        files for a 100k-vector LSH build). Range-partitioning on
+        (bucket, probe column, id) gives each task one contiguous
+        slice — ~one file per bucket dir (more for oversized buckets,
+        each with disjoint footer ranges, so in-file pruning holds)."""
+        self._meta_cache = doc  # _assign reads the layout from it
+        rows = self._assign(
+            df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
+        )
+        layout = list(dict.fromkeys((self._BUCKET, self._PROBE_COL, "id")))
+        n_tasks = min(
+            max(n_buckets, df.rdd.getNumPartitions()), _MAX_BUILD_TASKS
+        )
+        self._table().overwrite(
+            rows.repartitionByRange(n_tasks, *layout).sortWithinPartitions(
+                *layout
+            )
+        )
+        self._write_meta(doc)
+
+    # ------------------------------------------------------------ probe
+    def _read_probed(self, keys) -> DataFrame:
+        """Index rows of ONLY the partitions holding probe ``keys``."""
+        return self._table().read_partitions(
+            sorted({self._bucket_of(key) for key in keys})
+        )
+
+    @staticmethod
+    def _topk(rows: DataFrame, query_vec: list[float], k: int) -> DataFrame:
+        q = F.array(*[F.lit(float(x)) for x in query_vec])
+        qn = F.lit(norm_fold(query_vec))
+        return (
+            rows.select(
+                F.col("id").alias("vec_id"),
+                F.round(
+                    _cos_stored(F.col("v"), q, F.col("vn"), qn), 6
+                ).alias("cosine_sim"),
+            )
+            .orderBy(F.col("cosine_sim").desc(), F.col("vec_id"))
+            .limit(k)
+        )
+
+    def _probe_join(
+        self, idx: DataFrame, probes: DataFrame, qid_col: str
+    ) -> DataFrame:
+        """(qid, vec_id, cosine_sim) candidates: index rows ``idx``
+        equi-joined to the (__qid, __qv, __qn, __probe) query rows on
+        the probe column, scored with the stored norms."""
+        joined = idx.join(
+            probes, F.col(self._PROBE_COL) == F.col("__probe"), "inner"
+        )
+        return joined.select(
+            F.col("__qid").alias(qid_col),
+            F.col("id").alias("vec_id"),
+            F.round(
+                _cos_stored(
+                    F.col("v"), F.col("__qv"), F.col("vn"), F.col("__qn")
+                ),
+                6,
+            ).alias("cosine_sim"),
+        )
+
+    def _knn_join(
+        self, queries: DataFrame, k: int, qid_col: str, qvec_col: str,
+        probe,
+    ) -> DataFrame:
+        """The broadcast batch face: the query set — small by contract,
+        it is broadcast wholesale — is collected ONCE, each query's
+        probe keys come from the driver-side ``probe`` function (the
+        bit-identical twin of what ``topk`` computes, so the batch face
+        matches per-query ``topk`` row-for-row), the index reads only
+        the union of probed partitions, then one broadcast equi-join on
+        the probe column and one top-k window."""
+        _check_qid_col(qid_col)
+        qitems = [
+            (r[qid_col], [float(x) for x in r[qvec_col]])
+            for r in queries.select(qid_col, qvec_col).collect()
+        ]
+        if len({qid for qid, _ in qitems}) != len(qitems):
+            # a duplicate qid would merge two vectors' candidates into
+            # one per-qid top-k
+            raise ValueError(
+                "duplicate values in query column"
+                f" {qid_col!r}: knn_join requires one row per query id"
+            )
+        rows = []
+        for qid, v in qitems:
+            qn = norm_fold(v)
+            rows += [(qid, v, key, qn) for key in probe(v)]
+        qid_type = queries.schema[qid_col].dataType.simpleString()
+        # probe frame built wholly driver-side (vectors + norms ride
+        # along) — the query plan is never re-scanned and the probe's
+        # inputFiles are index files only
+        qs = self.spark.createDataFrame(
+            rows,
+            f"`__qid` {qid_type}, __qv array<double>, __probe long,"
+            " __qn double",
+        )
+        idx = self._read_probed([key for _, _, key, _ in rows])
+        return _ranked(
+            self._probe_join(idx, F.broadcast(qs), qid_col), qid_col, k
+        )
+
+    def _queries(
+        self, queries: DataFrame, qid_col: str, qvec_col: str,
+        unique: bool,
+    ) -> DataFrame:
+        """(__qid, __qv, __qn) rows of a bulk face's query corpus.
+        ``unique``: one aggregation validates one row per query id —
+        the per-qid window makes duplicates ill-defined (two vectors'
+        candidates merge into one top-k)."""
+        _check_qid_col(qid_col)
+        if unique:
+            dup = (
+                queries.groupBy(qid_col)
+                .count()
+                .filter(F.col("count") > 1)
+                .limit(1)
+                .count()
+            )
+            if dup:
+                raise ValueError(
+                    "duplicate values in query column"
+                    f" {qid_col!r}: knn_join_bulk requires one row per"
+                    " query id (or assume_unique_qids=True)"
+                )
+        return queries.select(
+            F.col(qid_col).alias("__qid"),
+            F.col(qvec_col).alias("__qv"),
+            _norm(F.col(qvec_col)).alias("__qn"),
+        )
+
+    # ---------------------------------------------------------- refresh
+    def apply_changes(self, batch: DataFrame) -> None:
+        """Fold one change-feed batch (columns: id, v, change_type ∈
+        insert/update/update_preimage/delete — the K8 shape projected
+        to the vector column) into the index without a rebuild.
+        BATCH-PROPORTIONAL (r9 verdict item 1): the OLD bucket of every
+        removed row is re-derived by re-bucketing the batch's own
+        vector through ``_assign`` — the build's assignment on the
+        same stored doubles reproduces the stored bucket
+        bit-identically — so locating it needs ZERO index reads:
+
+        1. delete rows (change feeds emit them with the last stored
+           values — ``KeyedParquetTable.changes``) and
+           ``update_preimage`` rows (feeds created with
+           ``include_preimage=True``) re-derive (bucket, id) directly
+           and are delete-by-key'd out — touching only their own
+           bucket partitions;
+        2. insert/update (postimage) rows are re-bucketed and
+           partition-scoped upserted.
+
+        Locate fallback: plain ``update`` rows in a batch carrying no
+        preimages (and delete rows passed with a NULL vector) cannot
+        reveal their old bucket, so those ids — and only those — are
+        located by a broadcast join against the full (column-pruned)
+        index. That path is O(index) per batch, warns, and counts into
+        ``last_fold_stats['located_fallback_ids']`` and :meth:`stats`;
+        feed the index with ``ChangeFeed(..., include_preimage=True)``
+        to stay batch-proportional at scale.
+
+        An update whose vector moved buckets is thereby a K5-style
+        re-key (delete old partition entry + insert new), which the
+        keyed table's commit makes atomic at the manifest level.
+        """
+        # lazy pin (r14): the tally aggregate below is the first
+        # action, so the checkpoint materializes inside it — one job
+        batch = batch.localCheckpoint(eager=False)  # pin: read twice
+        ct = F.col("change_type")
+        t = self._table()
+        direct = batch.filter(
+            ct.isin("delete", "update_preimage") & F.col("v").isNotNull()
+        )
+        old_keys = self._assign(direct).select(self._BUCKET, "id")
+        # ONE aggregate over the pinned batch answers every routing
+        # question (r10 verdict "what's wrong" #2): has-preimage,
+        # needs-locate, has-direct-removals, has-fresh — the four
+        # limit(1).count() probe jobs this replaces each cost a full
+        # driver job round-trip per fold, which a high-frequency
+        # resident daemon paid before any real work.
+        tallies = _fold_tallies(batch)
+        has_pre = tallies["preimage"] > 0
+        n_locate = tallies["null_delete"] + (
+            0 if has_pre else tallies["update"]
+        )
+        if n_locate > 0:
+            self._warn_locate_fallback(n_locate)
+            need_locate = batch.filter(
+                (ct == "delete") & F.col("v").isNull()
+            )
+            if not has_pre:
+                need_locate = need_locate.unionByName(
+                    batch.filter(ct == "update")
+                )
+            locate_ids = need_locate.select(
+                F.col("id").alias("__gid")
+            ).distinct()
+            located = (
+                t.read()
+                .join(
+                    F.broadcast(locate_ids),
+                    F.col("id") == F.col("__gid"),
+                    "inner",
+                )
+                # directory-derived partition columns read back as
+                # string (partitionColumnTypeInference off) — align
+                # with the computed keys' long type for the union
+                .select(
+                    F.col(self._BUCKET).cast("long").alias(self._BUCKET),
+                    "id",
+                )
+            )
+            old_keys = old_keys.unionByName(located)
+        self.last_fold_stats = {
+            "located_fallback_ids": n_locate,
+            "direct_removals": tallies["direct"],
+            "fresh_rows": tallies["fresh"],
+        }
+        if tallies["direct"] + n_locate > 0:
+            # delete_by_keys no-ops cleanly when the locate join
+            # matched nothing — no pre-probe job needed
+            t.delete_by_keys(old_keys)
+        if tallies["fresh"] > 0:
+            t.upsert_replace_partitions(
+                self._assign(batch.filter(ct.isin("insert", "update")))
+            )
+
+    def _warn_locate_fallback(self, n_ids: int) -> None:
+        """Loud, observable signal that a fold hit the O(index)
+        broadcast-locate fallback (r10 verdict item 6): preimage-less
+        updates / NULL-vector deletes cannot reveal their old bucket, so
+        those ids are joined against the FULL index — batch-proportional
+        feeds must be created with ``ChangeFeed(...,
+        include_preimage=True)`` (AnnIndexMaintenance already does).
+        Also recorded in ``last_fold_stats['located_fallback_ids']``
+        for programmatic monitors, and accumulated into the index's
+        on-disk telemetry sidecar so :meth:`stats` exposes a COUNTER a
+        headless deployment can alert on (r11 verdict item 6 — warnings
+        vanish in logs nobody reads)."""
+        import warnings
+
+        msg = (
+            f"ANN apply_changes at {self.path}: {n_ids} change row(s)"
+            " carry no pre-image — falling back to an O(index)"
+            " broadcast locate for their old buckets. Feed this index"
+            " with ChangeFeed(..., include_preimage=True) to stay"
+            " batch-proportional."
+        )
+        _LOG.warning(msg)
+        warnings.warn(msg, RuntimeWarning, stacklevel=3)
+        self._bump_fallback_counter(n_ids)
 
     def _bump_fallback_counter(self, n_ids: int) -> None:
         import time
@@ -257,6 +555,12 @@ class _IndexTelemetryMixin:
         fs = jpath.getFileSystem(t.spark._jsc.hadoopConfiguration())
         return bool(fs.exists(jpath))
 
+    # ---------------------------------------------------------- plumbing
+    def _table(self) -> KeyedParquetTable:
+        t = KeyedParquetTable(self.spark, self.path, keys=(self._BUCKET, "id"))
+        t.retain_stale_s = 3600.0  # in-flight probes keep their files
+        return t
+
     def stats(self) -> dict:
         """Index telemetry from metadata only (manifest + sidecar —
         no data pass, no Spark job): physical shape plus the
@@ -286,6 +590,65 @@ class _IndexTelemetryMixin:
             ),
             "last_fold": dict(self.last_fold_stats),
         }
+
+    def maintain(
+        self,
+        max_files_per_partition: int = 8,
+        keep_history: int = 10,
+        target_file_bytes: int = 128 * 1024 * 1024,
+        vacuum_after_s: float | None = None,
+    ) -> dict:
+        """Physical maintenance after repeated CDC folds. Every
+        ``apply_changes`` rewrites its touched bucket partitions (one
+        file per shuffle task per fold) and commits one-to-two manifest
+        versions; ungated, a long-lived continuously-refreshed index
+        fragments its hot buckets into thousands of tiny files and
+        grows O(versions × files) manifest metadata — the same
+        small-file/metadata tax Delta's OPTIMIZE + VACUUM and Iceberg's
+        rewrite_data_files + expire_snapshots exist to pay down.
+
+        ``vacuum_after_s`` (r10 verdict item 8): the index table keeps
+        superseded files for ``retain_stale_s`` (1 h — in-flight probe
+        safety), so a resident daemon's stale bytes plateau at one
+        retention window of fold churn and ordinary commits never
+        shrink below it. Passing a grace window here (e.g. 0 for
+        tests, 300 for a daemon whose probes finish in minutes)
+        vacuums retired files older than it, bounding stale bytes by
+        the maintenance cadence instead.
+
+        ``compact_if`` rewrites ONLY buckets whose live file count
+        exceeds the threshold (the trigger reads the manifest — no
+        filesystem walk, free when nothing is hot), range-clustered by
+        id so footer bounds keep point locates one-file; then
+        ``expire_history`` bounds the version log. Value-identical by
+        the compaction contract; in-flight probes survive via the
+        retained-stale grace window. Returns
+        ``{"compacted_partitions": [...], "expired_versions": n}``.
+        """
+        t = self._table()
+        compacted = t.compact_if(
+            max_files_per_partition=max_files_per_partition,
+            target_file_bytes=target_file_bytes,
+        )
+        expired = t.expire_history(keep_last=keep_history)
+        if vacuum_after_s is not None:
+            t.vacuum(retain_s=vacuum_after_s)
+        return {
+            "compacted_partitions": compacted,
+            "expired_versions": expired,
+        }
+
+    def meta(self) -> dict:
+        if self._meta_cache is None:
+            doc = self._table()._read_json(f"{self.path}/{_META_NAME}")
+            if doc is None:
+                raise ValueError(f"no ANN index metadata at {self.path}")
+            self._meta_cache = doc
+        return self._meta_cache
+
+    def _write_meta(self, doc: dict) -> None:
+        self._table()._write_json_atomic(f"{self.path}/{_META_NAME}", doc)
+        self._meta_cache = doc
 
 
 def _centroid_array_df(spark: SparkSession, cents):
@@ -349,56 +712,6 @@ def _blas_assign_udf(cents):
     return assign
 
 
-def _assign_index_rows(
-    df: DataFrame,
-    centroids,
-    vec_col: str,
-    id_col: str,
-) -> DataFrame:
-    """(cluster, id, v, vn) rows for an IVF index — the shared
-    quantizer of build and apply_changes. ivf_assign emits
-    "__cluster"; partition DIRECTORIES must not be underscore-prefixed
-    (Spark's FileIndex treats _-paths as hidden), so the index column
-    is plain "cluster".
-
-    Two strategies by k: up to _EXPR_ASSIGN_MAX the oracle-replayed
-    literal expression (narrow, fold-exact); beyond it an
-    Arrow-batched BLAS quantizer — at corpus×k this is the one place
-    built-ins genuinely can't keep up (struct aggregates fall back to
-    SortAggregate: ~700 GB spill then heap OOM at 500k×4096; a pure
-    HOF argmin is interpreter-bound: 0/32 tasks in 15 min), while one
-    float64 matmul per Arrow batch is seconds of dgemm. Documented
-    arithmetic note (ADVICE r9): the BLAS path expands ``|v-c|²`` to
-    ``|v|² − 2·v·c + |c|²``, which suffers catastrophic cancellation
-    when ``|v-c|² ≪ |v||c|`` — its absolute error scales like
-    ``|v||c|·eps``, not the fold's ``d·eps`` — so NEAR-equidistant
-    centroids (not only exact ulp-ties) can assign differently than
-    the fold-exact expression path. Oracle faces at this k therefore
-    use well-separated fixture centroids (ivf_blas_knn_bulk jitters
-    them apart); probe-face identities are unaffected regardless
-    (all faces probe the SAME index)."""
-    if len(centroids) <= _EXPR_ASSIGN_MAX:
-        return ivf_assign_rows(df, centroids, vec_col, id_col)
-    return (
-        df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-        .withColumn("cluster", _blas_assign_udf(centroids)(F.col("v")))
-        .select("cluster", "id", "v", _norm(F.col("v")).alias("vn"))
-    )
-
-
-def ivf_assign_rows(
-    df: DataFrame, centroids, vec_col: str, id_col: str
-) -> DataFrame:
-    from otrrentetl_spark.operators.similarity import ivf_assign
-
-    return ivf_assign(df, centroids, vec_col).select(
-        F.col("__cluster").alias("cluster"),
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
-        _norm(F.col(vec_col)).alias("vn"),
-    )
-
-
 def _dist_structs(v_col, cs_col):
     """array<struct<d, cid>> of L2² distances from ``v_col`` to every
     centroid in ``cs_col`` — each distance computed ONCE (transform
@@ -427,24 +740,25 @@ def _hamming_ball(sig: int, n_bits: int, radius: int) -> list[int]:
     return out
 
 
-class AnnLshIndex(_IndexTelemetryMixin):
+class AnnLshIndex(_BucketedVectorIndex):
     """Persisted random-hyperplane LSH index over an embedding table.
 
-    On disk: a KeyedParquetTable at ``path`` keyed
-    ``(pfx, <id_col>)`` with columns (id, vector, sig, precomputed L2
-    norm), plus a ``_ANN_META.json`` pinning (n_planes, prefix_bits,
-    dim, seed) so a reader reconstructs the exact hyperplane family
-    (deterministic from the seed — the same contract the inline form
-    relies on).
+    On disk: keyed ``(pfx, id)`` with columns (id, vector, sig,
+    precomputed L2 norm), plus a ``_ANN_META.json`` pinning (n_planes,
+    prefix_bits, dim, seed) so a reader reconstructs the exact
+    hyperplane family (deterministic from the seed — the same contract
+    the inline form relies on).
+
+    The two bucketing decisions: ``_assign`` is the ``lsh_bucket``
+    signature projection, bucketed by its top ``prefix_bits`` (``pfx``);
+    a query probes its Hamming ball of signatures (``_prober``) —
+    read by the ball's distinct prefixes and matched on the full
+    ``sig`` — and the bulk faces expand that ball executor-side with
+    literal XOR masks (``_ball_scored``).
     """
 
-    def __init__(self, spark: SparkSession, path: str):
-        self.spark = spark
-        self.path = path.rstrip("/")
-        self._meta_cache: dict | None = None
-        # routing tallies of the most recent apply_changes fold —
-        # monitors watch located_fallback_ids for the O(index) path
-        self.last_fold_stats: dict = {}
+    _BUCKET = "pfx"
+    _PROBE_COL = "sig"
 
     # ------------------------------------------------------------ build
     @classmethod
@@ -488,45 +802,61 @@ class AnnLshIndex(_IndexTelemetryMixin):
             first = df.select(F.size(vec_col).alias("d")).first()
             dim = 1 if first is None else int(first["d"])
         idx = cls(spark, path)
-        planes = hyperplanes(dim, n_planes, seed)
-        rows = df.select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).alias("v"),
-            lsh_bucket(F.col(vec_col), planes).alias("sig"),
-            # norm precomputed once at build: a probe's per-pair cost
-            # drops to one dot product (_cos_stored)
-            _norm(F.col(vec_col)).alias("vn"),
-        ).withColumn(
-            "pfx",
-            F.shiftrightunsigned(
-                F.col("sig"), n_planes - prefix_bits
-            ).cast("long"),
-        )
-        # Bucket-aligned layout BEFORE the partitioned write: without
-        # it every write task emits one file into every prefix dir it
-        # touches (tasks × 2^prefix_bits files — measured 8,156 files
-        # for a 100k-vector build). Range-partitioning on
-        # (pfx, sig, id) gives each task one contiguous slice — ~one
-        # file per prefix dir (more for oversized buckets, each with
-        # disjoint sig/id footer ranges, so in-file sig pruning holds).
-        n_tasks = min(
-            max(2**prefix_bits, df.rdd.getNumPartitions()),
-            _MAX_BUILD_TASKS,
-        )
-        rows = rows.repartitionByRange(
-            n_tasks, "pfx", "sig", "id"
-        ).sortWithinPartitions("pfx", "sig", "id")
-        idx._table().overwrite(rows)
-        idx._write_meta(
+        idx._build(
+            df,
+            vec_col,
+            id_col,
+            2**prefix_bits,
             {
                 "kind": "lsh",
                 "n_planes": int(n_planes),
                 "prefix_bits": int(prefix_bits),
                 "dim": int(dim),
                 "seed": int(seed),
-            }
+            },
         )
         return idx
+
+    def _planes(self) -> np.ndarray:
+        m = self.meta()
+        return hyperplanes(m["dim"], m["n_planes"], m["seed"])
+
+    @property
+    def _shift(self) -> int:
+        """Signature → prefix (bucket) shift."""
+        m = self.meta()
+        return m["n_planes"] - m["prefix_bits"]
+
+    def _assign(self, df: DataFrame) -> DataFrame:
+        return df.select(
+            "id",
+            "v",
+            lsh_bucket(F.col("v"), self._planes()).alias("sig"),
+            # norm precomputed once at build: a probe's per-pair cost
+            # drops to one dot product (_cos_stored)
+            _norm(F.col("v")).alias("vn"),
+        ).withColumn(
+            "pfx",
+            F.shiftrightunsigned(F.col("sig"), self._shift).cast("long"),
+        )
+
+    def _bucket_of(self, key: int) -> int:
+        return key >> self._shift
+
+    def _prober(self, max_hamming: int):
+        """Query vector → its Hamming ball of signatures. lsh_signature
+        replays the lsh_bucket expression's exact fold order: the
+        signature computed here is bit-identical to the stored ``sig``
+        column even on near-zero projections, where np.dot's pairwise
+        accumulation could flip a sign bit."""
+        planes = self._planes()
+        masks = _hamming_ball(0, self.meta()["n_planes"], max_hamming)
+
+        def ball(v) -> list[int]:
+            sig = lsh_signature(v, planes)
+            return [sig ^ mk for mk in masks]
+
+        return ball
 
     # ------------------------------------------------------------ probe
     def topk(
@@ -536,31 +866,9 @@ class AnnLshIndex(_IndexTelemetryMixin):
         read (manifest-pinned file subset), the exact ball filtered
         in-file, exact cosine on survivors. Bit-identical to the
         inline ``ann_topk_lsh`` on the same corpus/params."""
-        m = self.meta()
-        planes = hyperplanes(m["dim"], m["n_planes"], m["seed"])
-        # lsh_signature replays the lsh_bucket expression's exact fold
-        # order: the signature computed here is bit-identical to the
-        # stored `sig` column even on near-zero projections, where
-        # np.dot's pairwise accumulation could flip a sign bit
-        q_sig = lsh_signature(query_vec, planes)
-        ball = _hamming_ball(q_sig, m["n_planes"], max_hamming)
-        shift = m["n_planes"] - m["prefix_bits"]
-        prefixes = sorted({s >> shift for s in ball})
-        q = F.array(*[F.lit(float(x)) for x in query_vec])
-        qn = F.lit(norm_fold(query_vec))
-        return (
-            self._table()
-            .read_partitions(prefixes)
-            .filter(F.col("sig").isin(ball))
-            .select(
-                F.col("id").alias("vec_id"),
-                F.round(
-                    _cos_stored(F.col("v"), q, F.col("vn"), qn), 6
-                ).alias("cosine_sim"),
-            )
-            .orderBy(F.col("cosine_sim").desc(), F.col("vec_id"))
-            .limit(k)
-        )
+        ball = self._prober(max_hamming)(query_vec)
+        rows = self._read_probed(ball).filter(F.col("sig").isin(ball))
+        return self._topk(rows, query_vec, k)
 
     # ------------------------------------------------------- batch face
     def knn_join(
@@ -577,87 +885,16 @@ class AnnLshIndex(_IndexTelemetryMixin):
         where per-query ``topk`` probes would pay the fixed plan cost
         per row.
 
-        Plan: each query expands into its hamming ball — |ball| rows
-        per query (an index row matches at most ONE ball row per
-        query — sig^qsig is a single fixed mask — so the equi-join on
-        full signature is duplicate-free); the index side reads only
-        the union of the balls' prefix partitions; the per-query
-        top-k is one window over the ball survivors.
-
-        The query side is the SMALL side by contract (it is broadcast
-        wholesale), so the one driver-side ``collect`` of it — which
-        both resolves the partition prune set AND computes each
-        query's signature with ``lsh_signature``, the bit-identical
-        driver twin of the executor-side ``lsh_bucket`` fold — is
-        bounded by the query count, not the corpus. For query corpora
-        too large to collect, use :meth:`knn_join_bulk`.
+        Each query expands into its hamming ball — |ball| rows per
+        query (an index row matches at most ONE ball row per query —
+        sig^qsig is a single fixed mask — so the equi-join on full
+        signature is duplicate-free). The one driver-side ``collect``
+        of the queries is bounded by the query count, not the corpus.
+        For query corpora too large to collect, use
+        :meth:`knn_join_bulk`.
         """
-        from pyspark.sql.window import Window
-
-        if qid_col == "vec_id":
-            raise ValueError(
-                "qid_col='vec_id' collides with the index id output"
-                " column; alias the query id first"
-            )
-        m = self.meta()
-        planes = hyperplanes(m["dim"], m["n_planes"], m["seed"])
-        shift = m["n_planes"] - m["prefix_bits"]
-        masks = _hamming_ball(0, m["n_planes"], max_hamming)
-        qrows = queries.select(qid_col, qvec_col).collect()
-        qitems = [
-            (
-                r[qid_col],
-                [float(x) for x in r[qvec_col]],
-            )
-            for r in qrows
-        ]
-        sig_of = {
-            qid: lsh_signature(v, planes) for qid, v in qitems
-        }
-        if len(sig_of) != len(qitems):
-            # a duplicate qid would keep only the LAST vector's
-            # signature while ball rows carry each row's own vector —
-            # candidates from the wrong ball, mixed per-qid top-k
-            raise ValueError(
-                "duplicate values in query column"
-                f" {qid_col!r}: knn_join requires one row per query id"
-            )
-        prefixes = sorted({
-            (s ^ mk) >> shift for s in sig_of.values() for mk in masks
-        })
-        qid_type = queries.schema[qid_col].dataType.simpleString()
-        # ball frame built wholly driver-side (vectors + norms ride
-        # along) — the query plan is never re-scanned and the probe's
-        # inputFiles are index files only
-        ball = self.spark.createDataFrame(
-            [
-                (qid, v, sig_of[qid] ^ mk, norm_fold(v))
-                for qid, v in qitems
-                for mk in masks
-            ],
-            f"`__qid` {qid_type}, __qv array<double>, __bsig long,"
-            " __qn double",
-        )
-        joined = self._table().read_partitions(prefixes).join(
-            F.broadcast(ball), F.col("sig") == F.col("__bsig"), "inner"
-        )
-        scored = joined.select(
-            F.col("__qid").alias(qid_col),
-            F.col("id").alias("vec_id"),
-            F.round(
-                _cos_stored(
-                    F.col("v"), F.col("__qv"), F.col("vn"), F.col("__qn")
-                ),
-                6,
-            ).alias("cosine_sim"),
-        )
-        w = Window.partitionBy(qid_col).orderBy(
-            F.col("cosine_sim").desc(), F.col("vec_id")
-        )
-        return (
-            scored.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= k)
-            .select(qid_col, "vec_id", "cosine_sim", "rk")
+        return self._knn_join(
+            queries, k, qid_col, qvec_col, self._prober(max_hamming)
         )
 
     # ------------------------------------------------------ bulk face
@@ -704,33 +941,15 @@ class AnnLshIndex(_IndexTelemetryMixin):
         raises; pass True to skip that pass when the producer
         guarantees it (e.g. qid IS the source primary key).
         """
-        from pyspark.sql.window import Window
-
-        if not assume_unique_qids:
-            dup = (
-                queries.groupBy(qid_col)
-                .count()
-                .filter(F.col("count") > 1)
-                .limit(1)
-                .count()
-            )
-            if dup:
-                raise ValueError(
-                    "duplicate values in query column"
-                    f" {qid_col!r}: knn_join_bulk requires one row per"
-                    " query id (or assume_unique_qids=True)"
-                )
         scored = self._ball_scored(
-            queries, max_hamming, qid_col, qvec_col, prune_partitions
+            queries,
+            max_hamming,
+            qid_col,
+            qvec_col,
+            prune_partitions,
+            unique=not assume_unique_qids,
         )
-        w = Window.partitionBy(qid_col).orderBy(
-            F.col("cosine_sim").desc(), F.col("vec_id")
-        )
-        return (
-            scored.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= k)
-            .select(qid_col, "vec_id", "cosine_sim", "rk")
-        )
+        return _ranked(scored, qid_col, k)
 
     def _ball_scored(
         self,
@@ -739,6 +958,7 @@ class AnnLshIndex(_IndexTelemetryMixin):
         qid_col: str,
         qvec_col: str,
         prune_partitions: bool,
+        unique: bool = False,
     ) -> DataFrame:
         """The shared distributed ball pipeline of ``knn_join_bulk``
         and ``near_dup_join``: executor-side signatures + norms, ball
@@ -763,21 +983,9 @@ class AnnLshIndex(_IndexTelemetryMixin):
         leaves the JVM. (Contrast _blas_assign_udf, where one row's
         transfer amortizes k=4096 distance computations — there the
         Arrow path wins by orders of magnitude.)"""
-        if qid_col == "vec_id":
-            raise ValueError(
-                "qid_col='vec_id' collides with the index id output"
-                " column; alias the query id first"
-            )
-        m = self.meta()
-        planes = hyperplanes(m["dim"], m["n_planes"], m["seed"])
-        shift = m["n_planes"] - m["prefix_bits"]
-        masks = _hamming_ball(0, m["n_planes"], max_hamming)
-        sigged = queries.select(
-            F.col(qid_col).alias("__qid"),
-            F.col(qvec_col).alias("__qv"),
-            lsh_bucket(F.col(qvec_col), planes).alias("__qsig"),
-            _norm(F.col(qvec_col)).alias("__qn"),
-        )
+        base = self._queries(queries, qid_col, qvec_col, unique)
+        planes, shift = self._planes(), self._shift
+        masks = _hamming_ball(0, self.meta()["n_planes"], max_hamming)
         if prune_partitions:
             # XOR never carries: (sig ^ mask) >> shift ==
             # (sig >> shift) ^ (mask >> shift), so the ball's prefix
@@ -796,25 +1004,19 @@ class AnnLshIndex(_IndexTelemetryMixin):
             idx = self._table().read_partitions(prefixes)
         else:
             idx = self._table().read()
-        ball = sigged.withColumn(
-            "__mask",
-            F.explode(
-                F.array(*[F.lit(int(mk)).cast("long") for mk in masks])
-            ),
-        ).withColumn(
-            "__bsig", F.col("__qsig").bitwiseXOR(F.col("__mask"))
-        )
-        joined = idx.join(ball, F.col("sig") == F.col("__bsig"), "inner")
-        return joined.select(
-            F.col("__qid").alias(qid_col),
-            F.col("id").alias("vec_id"),
-            F.round(
-                _cos_stored(
-                    F.col("v"), F.col("__qv"), F.col("vn"), F.col("__qn")
+        ball = (
+            base.withColumn("__qsig", lsh_bucket(F.col("__qv"), planes))
+            .withColumn(
+                "__mask",
+                F.explode(
+                    F.array(*[F.lit(int(mk)).cast("long") for mk in masks])
                 ),
-                6,
-            ).alias("cosine_sim"),
+            )
+            .withColumn(
+                "__probe", F.col("__qsig").bitwiseXOR(F.col("__mask"))
+            )
         )
+        return self._probe_join(idx, ball, qid_col)
 
     # --------------------------------------------------- dedup face
     def near_dup_join(
@@ -862,209 +1064,26 @@ class AnnLshIndex(_IndexTelemetryMixin):
             raise ValueError(
                 f"max_pairs_per_query must be >= 1: {max_pairs_per_query}"
             )
-        from pyspark.sql.window import Window
-
-        w = Window.partitionBy(qid_col).orderBy(
-            F.col("cosine_sim").desc(), F.col("vec_id")
-        )
-        return (
-            pairs.withColumn("__rk", F.row_number().over(w))
-            .filter(F.col("__rk") <= int(max_pairs_per_query))
-            .drop("__rk")
-        )
-
-    # ---------------------------------------------------------- refresh
-    def apply_changes(self, batch: DataFrame) -> None:
-        """Fold one change-feed batch (columns: <id>, <vector>,
-        change_type ∈ insert/update/update_preimage/delete — the K8
-        shape projected to the vector column) into the index without a
-        rebuild. BATCH-PROPORTIONAL (r9 verdict item 1): the OLD
-        bucket of every removed row is recomputed from the batch's own
-        vectors — the same build-time ``lsh_bucket`` expression on the
-        same stored doubles reproduces the stored ``sig``
-        bit-identically — so locating it needs ZERO index reads:
-
-        1. delete rows (change feeds emit them with the last stored
-           values — ``KeyedParquetTable.changes``) and
-           ``update_preimage`` rows (feeds created with
-           ``include_preimage=True``) re-derive (pfx, id) directly and
-           are delete-by-key'd out — touching only their own bucket
-           partitions;
-        2. insert/update (postimage) rows recompute signature/prefix
-           and partition-scoped upsert.
-
-        Legacy fallback: plain ``update`` rows in a batch carrying no
-        preimages (and delete rows passed with a NULL vector) cannot
-        reveal their old bucket, so those ids — and only those — are
-        located by a broadcast join against the full (column-pruned)
-        index. That path is O(index) per batch; feed the index with
-        ``ChangeFeed(..., include_preimage=True)`` to stay
-        batch-proportional at scale.
-
-        An update whose vector moved buckets is thereby a K5-style
-        re-key (delete old partition entry + insert new), which the
-        keyed table's commit makes atomic at the manifest level.
-        """
-        m = self.meta()
-        planes = hyperplanes(m["dim"], m["n_planes"], m["seed"])
-        # lazy pin (r14): the tally aggregate below is the first
-        # action, so the checkpoint materializes inside it — one job
-        batch = batch.localCheckpoint(eager=False)  # pin: read twice
-        ct = F.col("change_type")
-        shift = m["n_planes"] - m["prefix_bits"]
-        t = self._table()
-        # ONE aggregate over the pinned batch answers every routing
-        # question (r10 verdict "what's wrong" #2): has-preimage,
-        # needs-locate, has-direct-removals, has-fresh — the four
-        # limit(1).count() probe jobs this replaces each cost a full
-        # driver job round-trip per fold, which a high-frequency
-        # resident daemon paid before any real work.
-        tallies = _fold_tallies(batch)
-        has_pre = tallies["preimage"] > 0
-        n_locate = tallies["null_delete"] + (
-            0 if has_pre else tallies["update"]
-        )
-        direct = batch.filter(
-            ct.isin("delete", "update_preimage") & F.col("v").isNotNull()
-        )
-        old_keys = direct.select(
-            F.shiftrightunsigned(lsh_bucket(F.col("v"), planes), shift)
-            .cast("long")
-            .alias("pfx"),
-            "id",
-        )
-        if n_locate > 0:
-            _warn_locate_fallback(self, n_locate)
-            need_locate = batch.filter(
-                (ct == "delete") & F.col("v").isNull()
-            )
-            if not has_pre:
-                need_locate = need_locate.unionByName(
-                    batch.filter(ct == "update")
-                )
-            locate_ids = need_locate.select(
-                F.col("id").alias("__gid")
-            ).distinct()
-            located = (
-                t.read()
-                .join(
-                    F.broadcast(locate_ids),
-                    F.col("id") == F.col("__gid"),
-                    "inner",
-                )
-                # directory-derived partition columns read back as
-                # string (partitionColumnTypeInference off) — align
-                # with the computed keys' long type for the union
-                .select(F.col("pfx").cast("long").alias("pfx"), "id")
-            )
-            old_keys = old_keys.unionByName(located)
-        self.last_fold_stats = {
-            "located_fallback_ids": n_locate,
-            "direct_removals": tallies["direct"],
-            "fresh_rows": tallies["fresh"],
-        }
-        if tallies["direct"] + n_locate > 0:
-            # delete_by_keys no-ops cleanly when the locate join
-            # matched nothing — no pre-probe job needed
-            t.delete_by_keys(old_keys)
-        if tallies["fresh"] > 0:
-            fresh = batch.filter(
-                ct.isin("insert", "update")
-            ).select(
-                "id",
-                F.col("v"),
-                lsh_bucket(F.col("v"), planes).alias("sig"),
-                _norm(F.col("v")).alias("vn"),
-            ).withColumn(
-                "pfx",
-                F.shiftrightunsigned(F.col("sig"), shift).cast("long"),
-            )
-            t.upsert_replace_partitions(fresh)
-
-    # ---------------------------------------------------------- plumbing
-    def _table(self) -> KeyedParquetTable:
-        t = KeyedParquetTable(self.spark, self.path, keys=("pfx", "id"))
-        t.retain_stale_s = 3600.0  # in-flight probes keep their files
-        return t
-
-    def maintain(
-        self,
-        max_files_per_partition: int = 8,
-        keep_history: int = 10,
-        target_file_bytes: int = 128 * 1024 * 1024,
-        vacuum_after_s: float | None = None,
-    ) -> dict:
-        """Physical maintenance after repeated CDC folds. Every
-        ``apply_changes`` rewrites its touched bucket partitions (one
-        file per shuffle task per fold) and commits one-to-two manifest
-        versions; ungated, a long-lived continuously-refreshed index
-        fragments its hot buckets into thousands of tiny files and
-        grows O(versions × files) manifest metadata — the same
-        small-file/metadata tax Delta's OPTIMIZE + VACUUM and Iceberg's
-        rewrite_data_files + expire_snapshots exist to pay down.
-
-        ``vacuum_after_s`` (r10 verdict item 8): the index table keeps
-        superseded files for ``retain_stale_s`` (1 h — in-flight probe
-        safety), so a resident daemon's stale bytes plateau at one
-        retention window of fold churn and ordinary commits never
-        shrink below it. Passing a grace window here (e.g. 0 for
-        tests, 300 for a daemon whose probes finish in minutes)
-        vacuums retired files older than it, bounding stale bytes by
-        the maintenance cadence instead.
-
-        ``compact_if`` rewrites ONLY buckets whose live file count
-        exceeds the threshold (the trigger reads the manifest — no
-        filesystem walk, free when nothing is hot), range-clustered by
-        id so footer bounds keep point locates one-file; then
-        ``expire_history`` bounds the version log. Value-identical by
-        the compaction contract; in-flight probes survive via the
-        retained-stale grace window. Returns
-        ``{"compacted_partitions": [...], "expired_versions": n}``.
-        """
-        t = self._table()
-        compacted = t.compact_if(
-            max_files_per_partition=max_files_per_partition,
-            target_file_bytes=target_file_bytes,
-        )
-        expired = t.expire_history(keep_last=keep_history)
-        if vacuum_after_s is not None:
-            t.vacuum(retain_s=vacuum_after_s)
-        return {
-            "compacted_partitions": compacted,
-            "expired_versions": expired,
-        }
-
-    def meta(self) -> dict:
-        if self._meta_cache is None:
-            t = self._table()
-            doc = t._read_json(f"{self.path}/{_META_NAME}")
-            if doc is None:
-                raise ValueError(f"no ANN index metadata at {self.path}")
-            self._meta_cache = doc
-        return self._meta_cache
-
-    def _write_meta(self, doc: dict) -> None:
-        self._table()._write_json_atomic(
-            f"{self.path}/{_META_NAME}", doc
-        )
-        self._meta_cache = doc
+        return _ranked(pairs, qid_col, int(max_pairs_per_query)).drop("rk")
 
 
-class IvfIndex(_IndexTelemetryMixin):
+class IvfIndex(_BucketedVectorIndex):
     """Persisted IVF index: vectors partitioned by their coarse
-    centroid assignment; a probe reads the ``nprobe`` nearest
-    clusters' partitions only. Centroids live in the metadata doc
-    (k × dim doubles — trivially small), so probe selection is a
-    driver-side argsort with no Spark job."""
+    centroid assignment (``cluster``); a probe reads the ``nprobe``
+    nearest clusters' partitions only. Centroids live in the metadata
+    doc (k × dim doubles — trivially small; a parquet sidecar beyond
+    _INLINE_CENTROIDS_MAX), so probe selection is a driver-side sort
+    with no Spark job.
 
-    def __init__(self, spark: SparkSession, path: str):
-        self.spark = spark
-        self.path = path.rstrip("/")
-        self._meta_cache: dict | None = None
-        self._cent_cache: list[tuple[int, list[float]]] | None = None
-        # routing tallies of the most recent apply_changes fold —
-        # monitors watch located_fallback_ids for the O(index) path
-        self.last_fold_stats: dict = {}
+    The two bucketing decisions: ``_assign`` is the nearest-centroid
+    quantizer; a query probes its ``nprobe`` nearest centroids —
+    ranked driver-side by ``_prober``, and executor-side (with a
+    k-aware strategy) by ``knn_join_bulk``.
+    """
+
+    _BUCKET = "cluster"
+    _PROBE_COL = "cluster"
+    _cent_cache: list[tuple[int, list[float]]] | None = None
 
     @classmethod
     def build(
@@ -1076,42 +1095,27 @@ class IvfIndex(_IndexTelemetryMixin):
         vec_col: str = "embedding",
         id_col: str = "vec_id",
     ) -> IvfIndex:
-        """One corpus pass: nearest-centroid assignment (narrow
-        projection over the literal centroid table — operators.
-        similarity.ivf_assign, the oracle-replayed quantizer — for
-        small k; the Arrow-batched BLAS quantizer beyond
-        _EXPR_ASSIGN_MAX — see _assign_index_rows) → partitioned
-        write keyed (cluster, id)."""
+        """One corpus pass: nearest-centroid assignment (``_assign``)
+        → partitioned write keyed (cluster, id)."""
         idx = cls(spark, path)
-        rows = _assign_index_rows(df, centroids, vec_col, id_col)
-        # cluster-aligned layout (same rationale as the LSH build):
-        # one contiguous (cluster, id) slice per task instead of one
-        # file per (task, cluster) pair
-        n_tasks = min(
-            max(len(centroids), df.rdd.getNumPartitions()),
-            _MAX_BUILD_TASKS,
-        )
-        rows = rows.repartitionByRange(
-            n_tasks, "cluster", "id"
-        ).sortWithinPartitions("cluster", "id")
-        idx._table().overwrite(rows)
-        cents = [
-            [int(cid), [float(x) for x in c]] for cid, c in centroids
+        idx._cent_cache = [
+            (int(cid), [float(x) for x in c]) for cid, c in centroids
         ]
-        if len(cents) > _INLINE_CENTROIDS_MAX:
+        doc = {
+            "kind": "ivf",
+            "centroids": [[cid, c] for cid, c in idx._cent_cache],
+        }
+        if len(idx._cent_cache) > _INLINE_CENTROIDS_MAX:
             # k x dim doubles as inline JSON is a multi-hundred-MB
             # parse per reader at IVF-realistic k (2^14-2^17); park
             # them in a parquet sidecar instead (r8 verdict item 7)
             spark.createDataFrame(
-                [(cid, v) for cid, v in cents],
-                "cid long, c array<double>",
+                idx._cent_cache, "cid long, c array<double>"
             ).coalesce(1).write.mode("overwrite").parquet(
                 f"{idx.path}/{_CENTROIDS_NAME}"
             )
-            idx._write_meta({"kind": "ivf", "centroids": "sidecar"})
-            idx._cent_cache = [(cid, v) for cid, v in cents]
-        else:
-            idx._write_meta({"kind": "ivf", "centroids": cents})
+            doc = {"kind": "ivf", "centroids": "sidecar"}
+        idx._build(df, vec_col, id_col, len(idx._cent_cache), doc)
         return idx
 
     def centroids(self) -> list[tuple[int, list[float]]]:
@@ -1138,17 +1142,54 @@ class IvfIndex(_IndexTelemetryMixin):
                 ]
         return self._cent_cache
 
-    def _probe_order(
-        self, query_vec: list[float]
-    ) -> list[tuple[int, list[float]]]:
-        """Centroids by (L2²(query, c), cid) — l2sq_fold replays the
-        executor-side ``_l2sq_mul`` fold exactly, so the driver faces
-        and the bulk face rank clusters identically; the cid tie-break
-        matches the oracle's window ordering."""
-        return sorted(
-            self.centroids(),
-            key=lambda c: (l2sq_fold(query_vec, c[1]), int(c[0])),
-        )
+    def _assign(self, df: DataFrame) -> DataFrame:
+        """(cluster, id, v, vn) rows. Partition DIRECTORIES must not be
+        underscore-prefixed (Spark's FileIndex treats _-paths as
+        hidden), so ivf_assign's "__cluster" becomes plain "cluster".
+
+        Two strategies by k: up to _EXPR_ASSIGN_MAX the oracle-replayed
+        literal expression (narrow, fold-exact); beyond it an
+        Arrow-batched BLAS quantizer — at corpus×k this is the one place
+        built-ins genuinely can't keep up (struct aggregates fall back to
+        SortAggregate: ~700 GB spill then heap OOM at 500k×4096; a pure
+        HOF argmin is interpreter-bound: 0/32 tasks in 15 min), while one
+        float64 matmul per Arrow batch is seconds of dgemm. Documented
+        arithmetic note (ADVICE r9): the BLAS path expands ``|v-c|²`` to
+        ``|v|² − 2·v·c + |c|²``, which suffers catastrophic cancellation
+        when ``|v-c|² ≪ |v||c|`` — its absolute error scales like
+        ``|v||c|·eps``, not the fold's ``d·eps`` — so NEAR-equidistant
+        centroids (not only exact ulp-ties) can assign differently than
+        the fold-exact expression path. Oracle faces at this k therefore
+        use well-separated fixture centroids (ivf_blas_knn_bulk jitters
+        them apart); probe-face identities are unaffected regardless
+        (all faces probe the SAME index)."""
+        cents = self.centroids()
+        if len(cents) <= _EXPR_ASSIGN_MAX:
+            rows = ivf_assign(df, cents, "v").withColumnRenamed(
+                "__cluster", "cluster"
+            )
+        else:
+            rows = df.select("id", "v").withColumn(
+                "cluster", _blas_assign_udf(cents)(F.col("v"))
+            )
+        return rows.select("cluster", "id", "v", _norm(F.col("v")).alias("vn"))
+
+    def _bucket_of(self, key: int) -> int:
+        return key
+
+    def _prober(self, nprobe: int):
+        """Query vector → its ``nprobe`` nearest cluster ids by
+        (L2²(query, c), cid) — l2sq_fold replays the executor-side
+        ``_l2sq_mul`` fold exactly, so the driver faces and the bulk
+        face rank clusters identically; the cid tie-break matches the
+        oracle's window ordering."""
+        cents = self.centroids()
+
+        def nearest(v) -> list[int]:
+            order = sorted(cents, key=lambda c: (l2sq_fold(v, c[1]), c[0]))
+            return [cid for cid, _ in order[:nprobe]]
+
+        return nearest
 
     def topk(
         self, query_vec: list[float], k: int = 10, nprobe: int = 4
@@ -1156,21 +1197,8 @@ class IvfIndex(_IndexTelemetryMixin):
         """nprobe nearest clusters by driver-side L2 over the metadata
         centroids (same ordering as the inline ``ivf_topk``), then
         exact cosine over ONLY those partitions' manifest files."""
-        probes = [cid for cid, _ in self._probe_order(query_vec)[:nprobe]]
-        qcol = F.array(*[F.lit(float(x)) for x in query_vec])
-        qn = F.lit(norm_fold(query_vec))
-        return (
-            self._table()
-            .read_partitions(probes)
-            .select(
-                F.col("id").alias("vec_id"),
-                F.round(
-                    _cos_stored(F.col("v"), qcol, F.col("vn"), qn), 6
-                ).alias("cosine_sim"),
-            )
-            .orderBy(F.col("cosine_sim").desc(), F.col("vec_id"))
-            .limit(k)
-        )
+        probes = self._prober(nprobe)(query_vec)
+        return self._topk(self._read_probed(probes), query_vec, k)
 
     def knn_join(
         self,
@@ -1180,66 +1208,13 @@ class IvfIndex(_IndexTelemetryMixin):
         qid_col: str = "qid",
         qvec_col: str = "qvec",
     ) -> DataFrame:
-        """Batch top-k join over the IVF index (the LSH ``knn_join``
-        pattern with cluster probing): the query set — small by
-        contract, it is broadcast wholesale — is collected once and
-        each query's ``nprobe`` nearest centroids are picked with the
-        IDENTICAL driver-side numpy sort ``topk`` uses (same distance
-        accumulation, same stable tie order over the metadata
-        centroid list), so the batch face matches per-query ``topk``
-        row-for-row by construction. The index reads only the union
-        of probed clusters' partitions; one broadcast equi-join on
-        cluster; one top-k window."""
-        from pyspark.sql.window import Window
-
-        if qid_col == "vec_id":
-            raise ValueError(
-                "qid_col='vec_id' collides with the index id output"
-                " column; alias the query id first"
-            )
-        qrows = queries.select(qid_col, qvec_col).collect()
-        if len({r[qid_col] for r in qrows}) != len(qrows):
-            raise ValueError(
-                "duplicate values in query column"
-                f" {qid_col!r}: knn_join requires one row per query id"
-            )
-        probe_rows = []
-        for r in qrows:
-            v = [float(x) for x in r[qvec_col]]
-            qn = norm_fold(v)
-            probe_rows += [
-                (r[qid_col], v, cid, qn)
-                for cid, _ in self._probe_order(v)[:nprobe]
-            ]
-        probes = sorted({p for _, _, p, _ in probe_rows})
-        qid_type = queries.schema[qid_col].dataType.simpleString()
-        # probe frame built wholly driver-side (vectors + norms ride
-        # along) — no re-scan of the query plan, index-only inputFiles
-        qs = self.spark.createDataFrame(
-            probe_rows,
-            f"`__qid` {qid_type}, __qv array<double>, __probe long,"
-            " __qn double",
-        )
-        joined = self._table().read_partitions(probes).join(
-            F.broadcast(qs), F.col("cluster") == F.col("__probe"), "inner"
-        )
-        scored = joined.select(
-            F.col("__qid").alias(qid_col),
-            F.col("id").alias("vec_id"),
-            F.round(
-                _cos_stored(
-                    F.col("v"), F.col("__qv"), F.col("vn"), F.col("__qn")
-                ),
-                6,
-            ).alias("cosine_sim"),
-        )
-        w = Window.partitionBy(qid_col).orderBy(
-            F.col("cosine_sim").desc(), F.col("vec_id")
-        )
-        return (
-            scored.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= k)
-            .select(qid_col, "vec_id", "cosine_sim", "rk")
+        """Batch top-k join over the IVF index: each query's ``nprobe``
+        nearest centroids are picked with the IDENTICAL driver-side
+        ranking ``topk`` uses, so the batch face matches per-query
+        ``topk`` row-for-row by construction; one broadcast equi-join
+        on cluster."""
+        return self._knn_join(
+            queries, k, qid_col, qvec_col, self._prober(nprobe)
         )
 
     # ------------------------------------------------------ bulk face
@@ -1289,27 +1264,9 @@ class IvfIndex(_IndexTelemetryMixin):
         which a crawl-sized query set saturates anyway, without
         holding the materialized frame.
         """
-        from pyspark.sql.window import Window
-
-        if qid_col == "vec_id":
-            raise ValueError(
-                "qid_col='vec_id' collides with the index id output"
-                " column; alias the query id first"
-            )
-        if not assume_unique_qids:
-            dup = (
-                queries.groupBy(qid_col)
-                .count()
-                .filter(F.col("count") > 1)
-                .limit(1)
-                .count()
-            )
-            if dup:
-                raise ValueError(
-                    "duplicate values in query column"
-                    f" {qid_col!r}: knn_join_bulk requires one row per"
-                    " query id (or assume_unique_qids=True)"
-                )
+        base = self._queries(
+            queries, qid_col, qvec_col, unique=not assume_unique_qids
+        )
         cents = self.centroids()
         if prune_partitions is None:
             # k-aware default: below the expression-assignment bound
@@ -1318,11 +1275,6 @@ class IvfIndex(_IndexTelemetryMixin):
             # join is the better default (an explicit True pins the
             # assigned frame instead — see below)
             prune_partitions = len(cents) <= _EXPR_ASSIGN_MAX
-        base = queries.select(
-            F.col(qid_col).alias("__qid"),
-            F.col(qvec_col).alias("__qv"),
-            _norm(F.col(qvec_col)).alias("__qn"),
-        )
         if len(cents) <= _EXPR_ASSIGN_MAX:
             structs = F.array(
                 *[
@@ -1369,152 +1321,10 @@ class IvfIndex(_IndexTelemetryMixin):
                 assigned = assigned.localCheckpoint(eager=False)
         if prune_partitions:
             # bounded by the centroid count, never the query count
-            probes = sorted(
+            idx = self._read_probed(
                 int(r["__probe"])
                 for r in assigned.select("__probe").distinct().collect()
             )
-            idx = self._table().read_partitions(probes)
         else:
             idx = self._table().read()
-        joined = idx.join(
-            assigned, F.col("cluster") == F.col("__probe"), "inner"
-        )
-        scored = joined.select(
-            F.col("__qid").alias(qid_col),
-            F.col("id").alias("vec_id"),
-            F.round(
-                _cos_stored(
-                    F.col("v"), F.col("__qv"), F.col("vn"), F.col("__qn")
-                ),
-                6,
-            ).alias("cosine_sim"),
-        )
-        w = Window.partitionBy(qid_col).orderBy(
-            F.col("cosine_sim").desc(), F.col("vec_id")
-        )
-        return (
-            scored.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= k)
-            .select(qid_col, "vec_id", "cosine_sim", "rk")
-        )
-
-    # ---------------------------------------------------------- refresh
-    def apply_changes(self, batch: DataFrame) -> None:
-        """Fold one change-feed batch (columns: id, v, change_type ∈
-        insert/update/update_preimage/delete) into the IVF index
-        without a rebuild — the same BATCH-PROPORTIONAL contract as
-        :meth:`AnnLshIndex.apply_changes` (r9 verdict item 1): the OLD
-        cluster of delete rows (which carry the last stored vector —
-        the change-feed contract) and ``update_preimage`` rows is
-        re-derived by re-quantizing the old vector through the shared
-        ``_assign_index_rows`` (deterministic: same centroids, same
-        expression/BLAS path as the build), so the delete-key set
-        needs ZERO index reads. Plain ``update`` rows without
-        preimages — and NULL-vector deletes — fall back to an
-        id-restricted broadcast locate join against the full index
-        (O(index); prefer ``include_preimage=True`` feeds).
-        Insert/update (postimage) rows re-quantize and
-        partition-scoped upsert, so a moved vector is a K5-style
-        re-key."""
-        cents = self.centroids()
-        # lazy pin (r14): the tally aggregate below is the first
-        # action, so the checkpoint materializes inside it — one job
-        batch = batch.localCheckpoint(eager=False)  # pin: read twice
-        ct = F.col("change_type")
-        t = self._table()
-        # one aggregate job answers every routing question — see
-        # AnnLshIndex.apply_changes (r10 verdict "what's wrong" #2)
-        tallies = _fold_tallies(batch)
-        has_pre = tallies["preimage"] > 0
-        n_locate = tallies["null_delete"] + (
-            0 if has_pre else tallies["update"]
-        )
-        direct = batch.filter(
-            ct.isin("delete", "update_preimage") & F.col("v").isNotNull()
-        ).select("id", "v")
-        old_keys = _assign_index_rows(direct, cents, "v", "id").select(
-            "cluster", "id"
-        )
-        if n_locate > 0:
-            _warn_locate_fallback(self, n_locate)
-            need_locate = batch.filter(
-                (ct == "delete") & F.col("v").isNull()
-            )
-            if not has_pre:
-                need_locate = need_locate.unionByName(
-                    batch.filter(ct == "update")
-                )
-            locate_ids = need_locate.select(
-                F.col("id").alias("__gid")
-            ).distinct()
-            located = (
-                t.read()
-                .join(
-                    F.broadcast(locate_ids),
-                    F.col("id") == F.col("__gid"),
-                    "inner",
-                )
-                # string partition column → long, matching the
-                # re-quantized keys' type for the union
-                .select(
-                    F.col("cluster").cast("long").alias("cluster"), "id"
-                )
-            )
-            old_keys = old_keys.unionByName(located)
-        self.last_fold_stats = {
-            "located_fallback_ids": n_locate,
-            "direct_removals": tallies["direct"],
-            "fresh_rows": tallies["fresh"],
-        }
-        if tallies["direct"] + n_locate > 0:
-            t.delete_by_keys(old_keys)
-        if tallies["fresh"] > 0:
-            fresh_src = batch.filter(
-                ct.isin("insert", "update")
-            ).select("id", "v")
-            t.upsert_replace_partitions(
-                _assign_index_rows(fresh_src, cents, "v", "id")
-            )
-
-    def _table(self) -> KeyedParquetTable:
-        t = KeyedParquetTable(
-            self.spark, self.path, keys=("cluster", "id")
-        )
-        t.retain_stale_s = 3600.0
-        return t
-
-    def maintain(
-        self,
-        max_files_per_partition: int = 8,
-        keep_history: int = 10,
-        target_file_bytes: int = 128 * 1024 * 1024,
-        vacuum_after_s: float | None = None,
-    ) -> dict:
-        """Compact fragmented cluster partitions + expire manifest
-        history after repeated CDC folds — same contract as
-        :meth:`AnnLshIndex.maintain` (see that docstring, incl. the
-        ``vacuum_after_s`` stale-bytes bound)."""
-        t = self._table()
-        compacted = t.compact_if(
-            max_files_per_partition=max_files_per_partition,
-            target_file_bytes=target_file_bytes,
-        )
-        expired = t.expire_history(keep_last=keep_history)
-        if vacuum_after_s is not None:
-            t.vacuum(retain_s=vacuum_after_s)
-        return {
-            "compacted_partitions": compacted,
-            "expired_versions": expired,
-        }
-
-    def meta(self) -> dict:
-        if self._meta_cache is None:
-            doc = self._table()._read_json(f"{self.path}/{_META_NAME}")
-            if doc is None:
-                raise ValueError(f"no ANN index metadata at {self.path}")
-            self._meta_cache = doc
-        return self._meta_cache
-
-    def _write_meta(self, doc: dict) -> None:
-        self._table()._write_json_atomic(f"{self.path}/{_META_NAME}", doc)
-        self._meta_cache = doc
+        return _ranked(self._probe_join(idx, assigned, qid_col), qid_col, k)

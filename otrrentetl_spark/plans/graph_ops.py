@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from otrrentetl_spark.catalog import load_table
+from otrrentetl_spark.catalog import load_table, source_stamp
 from otrrentetl_spark.operators import dedup
 from otrrentetl_spark.operators.graph import cluster_sizes, connected_components
 from otrrentetl_spark.registry import register
@@ -316,8 +316,9 @@ _GRAPH_BUILD_LOCK = _threading.Lock()
 
 def _graph_suffix(sf_dir: str) -> str:
     """Cache key for the derived graph tables: the source parquet's
-    identity AND content version — (path, mtime_ns, size) of both
-    input tables, like llm_ops._ndocs' memo key. A fixture rebuilt
+    identity AND content version — the path plus the
+    catalog.source_stamp (mtime_ns, size) of both input tables, like
+    llm_ops._ndocs' memo key. A fixture rebuilt
     in place at the same path changes mtime/size, changes the
     suffix, and forces fresh tables — the r5 shape (path-only key)
     silently served the old graph."""
@@ -326,8 +327,8 @@ def _graph_suffix(sf_dir: str) -> str:
 
     parts = [sf_dir]
     for t in ("orders", "lineitem"):
-        st = os.stat(os.path.join(sf_dir, f"{t}.parquet"))
-        parts.append(f"{t}:{st.st_mtime_ns}:{st.st_size}")
+        mtime_ns, size = source_stamp(os.path.join(sf_dir, f"{t}.parquet"))
+        parts.append(f"{t}:{mtime_ns}:{size}")
     return hashlib.md5("|".join(parts).encode()).hexdigest()[:10]
 
 

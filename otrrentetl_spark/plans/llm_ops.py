@@ -9,10 +9,12 @@ the oracle checks the *pipeline semantics*, not just row counts.
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from otrrentetl_spark.catalog import fan_out, load_table
+from otrrentetl_spark.catalog import fan_out, load_table, source_stamp
 from otrrentetl_spark.functions.exprs import bind
 from otrrentetl_spark.operators import dedup, multimodal, similarity, text
 from otrrentetl_spark.registry import register
@@ -67,23 +69,28 @@ def _ann_scratch(kind: str, sf_dir: str) -> str:
     return root
 
 
-_ANN_SHARE_LOCK = __import__("threading").Lock()
+_ANN_SHARE_LOCK = threading.Lock()
 _ANN_SHARED: dict[tuple, object] = {}
+# one build lock per key: a build runs under its own key's lock only,
+# so builds of different keys overlap and a build may itself ask for
+# another key's artifact
+_ANN_BUILD_LOCKS: dict[tuple, threading.Lock] = {}
 
 
 def _ann_source_fingerprint(sf_dir: str) -> str:
-    """mtime_ns+size fingerprint of the embeddings source (the
-    graph_ops._graph_suffix staleness pattern): a refreshed fixture
-    gets fresh shared artifacts instead of a stale memo hit."""
+    """Content-stamp fingerprint of the embeddings source
+    (catalog.source_stamp, shared with graph_ops._graph_suffix): a
+    refreshed fixture gets fresh shared artifacts instead of a stale
+    memo hit."""
     import hashlib
     import os
     import uuid
 
     try:
-        st = os.stat(os.path.join(sf_dir, "embeddings.parquet"))
+        mtime_ns, size = source_stamp(os.path.join(sf_dir, "embeddings.parquet"))
     except OSError:
         return uuid.uuid4().hex  # un-stat-able source: never share
-    raw = f"{sf_dir}:{st.st_mtime_ns}:{st.st_size}"
+    raw = f"{sf_dir}:{mtime_ns}:{size}"
     return hashlib.md5(raw.encode()).hexdigest()[:10]
 
 
@@ -100,7 +107,12 @@ def shared_ann_artifact(spark, kind: str, sf_dir: str, build):
     with the build cost inside that run's timed region), and staleness
     is carried by the source fingerprint. Only READ-ONLY artifacts may
     use this; the mutating lifecycle (ann_refresh_probe) keeps its
-    per-invocation rebuild."""
+    per-invocation rebuild.
+
+    The global lock only reserves and publishes keys; ``build()`` runs
+    under its own key's lock, so each key builds once, different keys
+    build concurrently, and a build may call this function for another
+    key (never for its own — that would wait on itself)."""
     key = (
         spark.sparkContext.applicationId,
         kind,
@@ -108,13 +120,21 @@ def shared_ann_artifact(spark, kind: str, sf_dir: str, build):
     )
     with _ANN_SHARE_LOCK:
         hit = _ANN_SHARED.get(key)
+        if hit is not None:
+            return hit
+        # one live session per process: entries keyed to a previous
+        # (stopped) session are dead weight — prune them
+        for memo in (_ANN_SHARED, _ANN_BUILD_LOCKS):
+            for stale in [k for k in memo if k[0] != key[0]]:
+                del memo[stale]
+        build_lock = _ANN_BUILD_LOCKS.setdefault(key, threading.Lock())
+    with build_lock:
+        with _ANN_SHARE_LOCK:
+            hit = _ANN_SHARED.get(key)
         if hit is None:
             hit = build()
-            # one live session per process: entries keyed to a previous
-            # (stopped) session are dead weight — prune them
-            for stale in [k for k in _ANN_SHARED if k[0] != key[0]]:
-                del _ANN_SHARED[stale]
-            _ANN_SHARED[key] = hit
+            with _ANN_SHARE_LOCK:
+                _ANN_SHARED[key] = hit
         return hit
 
 
@@ -2837,7 +2857,7 @@ register(
 # memoized documents row count per sf_dir (parquet footer metadata —
 # a column-less count never touches data pages; caching it drops a
 # ~0.1 s job from every rebuild of the plan). Keyed on the parquet
-# file's (mtime, size) as well as the path so an in-process fixture
+# source's catalog.source_stamp as well as the path so an in-process fixture
 # rebuild at the same path invalidates the memo instead of silently
 # scoring tf-idf against the old corpus size — unlike fan_out's memo,
 # row count is NOT an immutable property of a directory name.
@@ -2847,10 +2867,8 @@ _NDOCS_MEMO: dict[tuple, float] = {}
 def _ndocs(docs: DataFrame, sf_dir: str) -> float:
     import os
 
-    p = os.path.join(sf_dir, "documents.parquet")
     try:
-        st = os.stat(p)
-        key = (sf_dir, st.st_mtime_ns, st.st_size)
+        key = (sf_dir, *source_stamp(os.path.join(sf_dir, "documents.parquet")))
     except OSError:  # non-local/derived layout: fall back to path-only
         key = (sf_dir,)
     if key not in _NDOCS_MEMO:

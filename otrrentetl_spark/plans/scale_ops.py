@@ -332,7 +332,7 @@ def similarity_ivf_blas_knn_bulk(
     """IVF bulk face at LARGE k (r9 verdict item 2 — the one engine
     path that had no DuckDB-checked face): k=288 centroids force all
     three large-k mechanisms at once — the Arrow/BLAS quantizer for
-    the index build (annindex._assign_index_rows beyond
+    the index build (annindex.IvfIndex._assign beyond
     _EXPR_ASSIGN_MAX), the parquet centroid SIDECAR (beyond
     _INLINE_CENTROIDS_MAX), and the one-row-broadcast HOF assignment
     on the query side of knn_join_bulk (with the k-aware

@@ -864,3 +864,27 @@ def test_near_dup_join_max_pairs_per_query_bounds_degenerate_output(
 
     with _pytest.raises(ValueError, match="max_pairs_per_query"):
         idx.near_dup_join(q, max_pairs_per_query=0)
+
+
+@pytest.mark.parametrize("kind", ["lsh", "ivf"])
+def test_null_vector_delete_locates_and_counts(spark, emb, tmp_path, kind):
+    """A delete row with a NULL vector cannot reveal its old bucket:
+    the fold locates it against the full index, removes it, and counts
+    the located ids in last_fold_stats and the persisted stats()."""
+    corpus = emb.filter(F.col("vec_id") <= 200)
+    path = str(tmp_path / kind)
+    if kind == "lsh":
+        idx = AnnLshIndex.build(spark, corpus, path, n_planes=12, prefix_bits=6)
+    else:
+        cents = similarity.kmeans_centroids(emb, k=16, iters=1)
+        idx = IvfIndex.build(spark, corpus, path, cents)
+    batch = spark.createDataFrame(
+        [(7, None, "delete"), (8, None, "delete")],
+        "id long, v array<double>, change_type string",
+    )
+    with pytest.warns(RuntimeWarning, match="include_preimage"):
+        idx.apply_changes(batch)
+    ids = {r["id"] for r in idx._table().read().select("id").collect()}
+    assert len(ids) == 199 and not ids & {7, 8}
+    assert idx.last_fold_stats["located_fallback_ids"] == 2
+    assert idx.stats()["locate_fallback_ids_total"] == 2

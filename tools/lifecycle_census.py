@@ -3,6 +3,11 @@ verdict item 1): wraps the KeyedParquetTable / index / feed verbs so
 every Spark job is attributed to the innermost verb that submitted it,
 then runs a registry query once and prints the job count per step.
 
+A step is labelled by the class it was called on (an index verb
+inherited from the shared index base still counts as
+``AnnLshIndex.apply_changes``), and a method inherited by several of
+the wrapped classes is wrapped once.
+
 Jobs are attributed by snapshotting statusTracker job ids around each
 wrapped call (driver calls are sequential inside one query, so new ids
 between enter/exit belong to that call; nested wrapped calls subtract
@@ -44,10 +49,13 @@ def _wrap(cls, name: str) -> None:
         return None
     is_cm = isinstance(raw, classmethod)
     orig = raw.__func__ if is_cm else raw
-    label = f"{cls.__name__}.{name}"
+    if getattr(orig, "_census_wrapped", False):
+        return None  # inherited by a class wrapped before
 
     @functools.wraps(orig)
     def inner(*args, **kwargs):
+        owner = args[0] if is_cm else type(args[0])
+        label = f"{owner.__name__}.{name}"
         before = _jobs_now()
         frame = {"label": label, "child": set()}
         _STACK.append(frame)
@@ -62,6 +70,7 @@ def _wrap(cls, name: str) -> None:
             _COUNTS[label] += len(own)
             _CALLS[label] += 1
 
+    inner._census_wrapped = True
     setattr(cls, name, classmethod(inner) if is_cm else inner)
     return None
 
