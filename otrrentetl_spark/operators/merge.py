@@ -45,6 +45,10 @@ _STATE_CACHE_MAX = 8
 # not read the pointer (time-travel folds) — distinct from None,
 # which is a real lineage value on pre-lineage pointers
 _ANY_LINEAGE = object()
+# DRIVER-SIZED VERBS (KeyedParquetTable class docstring): an upsert or
+# delete whose batch rows plus the rows of the files it rewrites stay
+# within this bound merges on the driver in pyarrow, not in Spark jobs
+_ARROW_MAX_ROWS = 100_000
 
 
 from contextlib import contextmanager as _contextmanager
@@ -361,6 +365,27 @@ class KeyedParquetTable:
     A fully-emptied table (every row deleted) reads as a zero-row
     frame typed from the pinned schema, with the columns in the same
     order as a non-empty read.
+
+    DRIVER-SIZED VERBS: at the batch sizes an ETL cycle or an index
+    refresh writes, a verb's Spark jobs are almost all scheduler floor
+    (~70-160 ms each), not data work. So ``upsert_replace_partitions``
+    and ``delete_by_keys`` share one body that branches once, at the
+    write step. It takes the ARROW path when the table is on a local
+    path with two string/integral keys, the batch carries exactly the
+    pinned columns and types, and the batch rows plus the manifest
+    row counts of the files to rewrite are at most ``_ARROW_MAX_ROWS``
+    (every such file having stats). The pinned batch is collected
+    once (``toArrow``), the COW split bisects its keys against the
+    footer bounds in Python, and the touched partitions merge in
+    pyarrow on the driver — 2 Spark jobs per call (the routing
+    aggregate and the collect). Everything else — larger batches,
+    non-local stores, schema drift, a rewrite file without stats —
+    and ``overwrite``, ``compact``, ``changes`` and the first write
+    into an empty table take the SPARK path. Both paths commit
+    through the same ``_commit_snapshot``, agree row for row, and
+    write files either path reads (the Arrow writer casts every
+    column to the pinned schema's Arrow type; see ``_arrow_write``
+    for why the timestamp cast matters).
     """
 
     def __init__(self, spark, path: str, keys: Sequence[str] = DEFAULT_KEYS):
@@ -1833,7 +1858,8 @@ class KeyedParquetTable:
         return out
 
     def _cow_split(
-        self, key_set: DataFrame, parts, has_null: bool | None = None
+        self, key_set: DataFrame, parts, has_null: bool | None = None,
+        collected=None,
     ) -> tuple[list[str], list[str]] | None:
         """File-level copy-on-write split of the touched partitions'
         live files: ``(hit, clean)``, where *hit* files MAY contain a
@@ -1855,11 +1881,14 @@ class KeyedParquetTable:
         rows) lands in *hit*. Returns None — caller keeps its
         whole-partition path — for single-key tables, non-int/string
         row-key dtypes (float NaN never enters footer bounds;
-        decimal/date bounds aren't JSON-plain anyway), and hit sets
-        confined to the NULL partition directory (whose
-        subset read infers an unusable VOID partition column)."""
+        decimal/date bounds aren't JSON-plain anyway).
+
+        ``collected``: ``key_set``'s rows already on the driver as an
+        Arrow table (the Arrow path of the verbs). The range probe then
+        bisects its sorted keys against each file's bounds in Python
+        and runs no Spark job; the classification is the same."""
         vals = list(parts)
-        if len(self.keys) < 2 or not vals or all(v is None for v in vals):
+        if len(self.keys) < 2 or not vals:
             return None
         rk = self.keys[1]
         rk_type = dict(key_set.dtypes)[rk]
@@ -1914,7 +1943,17 @@ class KeyedParquetTable:
             has_null = False
         need_null = has_null is None and bool(null_sensitive)
         sess = key_set.sparkSession
-        if ranged:
+        if ranged and collected is not None:
+            import bisect
+
+            ks = sorted(
+                k for k in collected.column(rk).to_pylist() if k is not None
+            )
+            for f, mn, mx in ranged:
+                i = bisect.bisect_left(ks, mn)
+                if i < len(ks) and ks[i] <= mx:
+                    hit.append(f)
+        elif ranged:
             # the bounds frame is typed at the WIDEST member of the
             # key's type family, not the caller's dtype (ADVICE r10):
             # stored footer bounds can exceed a narrow caller type's
@@ -1979,9 +2018,6 @@ class KeyedParquetTable:
                 )
         if has_null and null_sensitive:
             hit += null_sensitive
-        null_dir = self._partition_dir_of(None)
-        if hit and all(f.split("/", 1)[0] == null_dir for f in hit):
-            return None  # VOID partition-column inference hazard
         hit_set = set(hit)
         return sorted(hit_set), [f for f in cand if f not in hit_set]
 
@@ -2044,6 +2080,17 @@ class KeyedParquetTable:
             old_df = new_df.filter(F.lit(False))
         if new_df is None:
             new_df = old_df.filter(F.lit(False))
+        # a side read only from the NULL partition directory infers a
+        # VOID partition column, whose null-safe join key never matches
+        # (every unchanged NULL-partition row read as delete + insert):
+        # type it as the table pins it
+        pk = self.keys[0]
+        pk_type = self._pinned_struct()[pk].dataType
+        old_df, new_df = (
+            df.withColumn(pk, F.col(pk).cast(pk_type))
+            if dict(df.dtypes)[pk] == "void" else df
+            for df in (old_df, new_df)
+        )
         # schema-evolution alignment: a column only one side has reads
         # back as typed NULL on the other
         cols = list(
@@ -2173,23 +2220,28 @@ class KeyedParquetTable:
         )
 
     def _append_and_commit(
-        self, rows: DataFrame, op: str, dirs: set[str], hit=None,
+        self, rows, op: str, dirs: set[str], hit=None,
         written_schema=None,
     ) -> None:
-        """Append ``rows`` under the partition directories ``dirs`` and
-        commit the appended files live in place of the files they
+        """Commit the files a mutation appended under the partition
+        directories ``dirs`` live in place of the files they
         supersede: ``hit`` (a COW split's hit files) when given, else
-        every live file under ``dirs``. The before/after listings walk
-        only ``dirs`` — the write lands nowhere else — so a
+        every live file under ``dirs``. ``rows`` is either a DataFrame,
+        which Spark's writer appends here, or the list of files
+        :meth:`_arrow_write` already wrote. The before/after listings
+        walk only ``dirs`` — the write lands nowhere else — so a
         partition-scoped mutation never pays a table walk."""
         prev = self._require_snapshot()["files"]
-        before = set(self._list_data_files(dirs))
-        rows.write.mode("append").partitionBy(self.keys[0]).parquet(
-            self.path
-        )
-        new_files = [
-            f for f in self._list_data_files(dirs) if f not in before
-        ]
+        if isinstance(rows, DataFrame):
+            before = set(self._list_data_files(dirs))
+            rows.write.mode("append").partitionBy(self.keys[0]).parquet(
+                self.path
+            )
+            new_files = [
+                f for f in self._list_data_files(dirs) if f not in before
+            ]
+        else:
+            new_files = list(rows)
         gone = (
             set(hit)
             if hit is not None
@@ -2202,9 +2254,21 @@ class KeyedParquetTable:
         )
 
     def partition_is_empty(self, partition_value: str) -> bool:
-        """I2 idempotency gate (otrrentetl/server/etl.py:29,71): a
-        LIMIT-1 probe against one partition — partition-pruned scan."""
-        if not self.exists():
+        """I2 idempotency gate (otrrentetl/server/etl.py:29,71), read
+        off the manifest at zero Spark jobs: the partition holds a row
+        iff a live file under its directory records ``rows > 0`` in
+        its footer stats. Only a file without stats (single-key
+        tables, non-local stores) leaves it to a LIMIT-1
+        partition-pruned probe."""
+        snap = self._read_snapshot()
+        if snap is None:
+            return True
+        pdir = self._partition_dir_of(partition_value)
+        files = [f for f in snap["files"] if f.split("/", 1)[0] == pdir]
+        stats = snap["stats"]
+        if any(stats[f]["rows"] > 0 for f in files if f in stats):
+            return False
+        if all(f in stats for f in files):
             return True
         # three-valued logic: `col == None` is NULL for every row, so
         # probing the NULL partition needs isNull explicitly
@@ -2213,8 +2277,7 @@ class KeyedParquetTable:
             if partition_value is None
             else F.col(self.keys[0]) == partition_value
         )
-        probe = self.read().filter(pred).limit(1).collect()
-        return len(probe) == 0
+        return not self.read().filter(pred).limit(1).collect()
 
     def _partition_path(self, partition_value: str | None):
         """Hadoop Path of one PartitionKey=<v> directory (works on any
@@ -2238,6 +2301,216 @@ class KeyedParquetTable:
             f"{self.path}/{self.keys[0]}={escaped}"
         )
 
+    def _empty_partition_as_null(self, df: DataFrame) -> DataFrame:
+        """``df`` with an empty-string partition value mapped to NULL.
+        Spark's writer files ``""`` under the NULL partition directory,
+        so the row reads back NULL; mapping it up front lets both verbs
+        route, split and commit against the directory the row actually
+        lands in (and match it against the NULL partition's rows)."""
+        pk = self.keys[0]
+        if dict(df.dtypes).get(pk) != "string":
+            return df
+        return df.withColumn(pk, F.nullif(F.col(pk), F.lit("")))
+
+    def _arrow_sized(self, batch: DataFrame, op: str, n_rows: int) -> bool:
+        """The half of the Arrow gate known before the batch is
+        collected: a local two-key table whose keys are pinned as
+        string or an integral type, and at most
+        ``_ARROW_MAX_ROWS`` batch rows typed exactly as the pinned
+        schema — every pinned column for an upsert (no added, missing
+        or drifted column), the two keys for a delete."""
+        if (
+            n_rows > _ARROW_MAX_ROWS
+            or len(self.keys) != 2
+            or self._local_path_of(self.path) is None
+        ):
+            return False
+        pinned = {
+            f.name: f.dataType.simpleString()
+            for f in self._pinned_struct().fields
+        }
+        want = pinned if op == "upsert" else {
+            k: pinned.get(k) for k in self.keys
+        }
+        return dict(batch.dtypes) == want and all(
+            pinned[k] in ("string", "tinyint", "smallint", "int", "bigint")
+            for k in self.keys
+        )
+
+    def _merge_touched(
+        self, batch: DataFrame, op: str, drift: bool = False
+    ) -> None:
+        """The one body of :meth:`upsert_replace_partitions` (``op``
+        "upsert": ``batch`` holds the pinned, aligned incoming rows)
+        and :meth:`delete_by_keys` ("delete": the pinned key set):
+        route, COW-split, write the touched partitions, commit.
+        ``drift``: some column drifted wider than the stored type, so
+        the upsert rewrites the touched partitions through Spark's
+        union coercion.
+
+        ONE routing aggregate answers every question asked before the
+        write: the touched partitions, whether any row key is NULL
+        (the COW split's null-sensitivity flag) and the batch's row
+        count (the Arrow gate). The write step then branches once —
+        see "DRIVER-SIZED VERBS" in the class docstring."""
+        sess = batch.sparkSession
+        pk = self.keys[0]
+        rk = self.keys[1] if len(self.keys) >= 2 else None
+        # plan on the batch's OWN session (foreachBatch hands verbs
+        # frames owned by a cloned session whose conf is separate)
+        with _no_aqe(sess):
+            part_rows = (
+                batch.groupBy(pk)
+                .agg(
+                    F.max(
+                        F.col(rk).isNull() if rk else F.lit(False)
+                    ).alias("__n"),
+                    F.count(F.lit(1)).alias("__c"),
+                )
+                .collect()
+            )
+        parts = [r[0] for r in part_rows]
+        if op == "delete" and not parts:
+            return
+        has_null = bool(rk) and any(r["__n"] for r in part_rows)
+        n_rows = sum(r["__c"] for r in part_rows)
+        dirs = {self._partition_dir_of(p) for p in parts}
+        # reads the pinned blocks: one job, none on the Spark path
+        collected = (
+            batch.toArrow()
+            if not drift and self._arrow_sized(batch, op, n_rows)
+            else None
+        )
+        # file-level copy-on-write (r10): only the files whose footer
+        # row-key range can contain a batch key are rewritten; files
+        # the manifest stats prove clean stay live untouched. Wider
+        # drift rewrites the whole touched partitions (split=None).
+        split = None if drift else self._cow_split(
+            batch.select(*self.keys), parts, has_null=has_null,
+            collected=collected,
+        )
+        stats = self._require_snapshot()["stats"]
+        if (
+            collected is not None
+            and split is not None
+            and all(f in stats for f in split[0])
+            and n_rows + sum(stats[f]["rows"] for f in split[0])
+            <= _ARROW_MAX_ROWS
+        ):
+            self._append_and_commit(
+                self._arrow_write(collected, split[0], op == "upsert"),
+                op, dirs, hit=split[0],
+            )
+            return
+        null_dir = self._partition_dir_of(None)
+        if split and split[0] and all(
+            f.split("/", 1)[0] == null_dir for f in split[0]
+        ):
+            # a subset read of the NULL directory alone infers an
+            # unusable VOID partition column: read the whole touched
+            # partitions instead (NULL keys handled in _read_touched)
+            split = None
+        part_type = dict(batch.dtypes)[pk]
+        if split is None:
+            old = self._read_touched(sess, parts, part_type=part_type)
+        elif split[0]:
+            old = self._read_rels(sess, split[0], part_type=part_type)
+        else:
+            old = None  # no live file can hold a batch key
+        # lazy on purpose: the append is each plan's ONLY consumer,
+        # and its input files stay live until the commit after the
+        # write — no pin needed. A delete with nothing to drop still
+        # commits, so the verb always flips a version.
+        if op == "delete":
+            rows = [] if old is None else delete_keys(old, batch, self.keys)
+        elif old is None:
+            rows = batch.dropDuplicates(list(self.keys))
+        else:
+            rows = upsert_replace(old, batch, self.keys)
+        self._append_and_commit(
+            rows, op, dirs,
+            hit=None if split is None else split[0],
+            written_schema=rows.schema if op == "upsert" else None,
+        )
+
+    def _arrow_write(self, batch, hit: list[str], upsert: bool) -> list[str]:
+        """The Arrow twin of the Spark merge-write. For each partition
+        the collected ``batch`` touches: read its ``hit`` files, drop
+        the rows whose row key is among that partition's batch keys
+        (null-aware ``is_in`` ≡ ``eqNullSafe``), append the
+        partition's batch rows on an upsert (the first occurrence of a
+        key wins, as ``dropDuplicates`` keeps it), and write one snappy
+        parquet file under the partition's directory — none for an
+        emptied partition. Returns the written files' relative paths.
+
+        Every column is cast to the pinned schema's Arrow type, never
+        left at pyarrow's read default: a Spark-written INT96
+        timestamp reads back naive (``timestamp[ns]`` by default, here
+        ``[us]`` so that no year past 2262 overflows), which written
+        back as it is is refused under the pinned ``timestamp``
+        (PARQUET_COLUMN_DATA_TYPE_MISMATCH); cast to ``timestamp[us,
+        tz=UTC]`` it reads back equal next to Spark's INT96 files. A
+        column a file predates is written as NULL, as the pinned
+        Spark read gives it."""
+        import os
+        import uuid
+
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        pk, rk = self.keys
+        schema = to_arrow_schema(T.StructType([
+            f for f in _nullable(self._pinned_struct()).fields
+            if f.name != pk
+        ]))
+
+        def conform(t):
+            return pa.table(
+                [
+                    t[f.name].cast(f.type) if f.name in t.column_names
+                    else pa.nulls(t.num_rows, f.type)
+                    for f in schema
+                ],
+                schema=schema,
+            )
+
+        root = self._local_path_of(self.path.rstrip("/"))
+        pks = batch.column(pk).to_pylist()
+        dir_of = {v: self._partition_dir_of(v) for v in set(pks)}
+        take: dict[str, list[int]] = {d: [] for d in dir_of.values()}
+        seen: set = set()
+        for i, key in enumerate(zip(pks, batch.column(rk).to_pylist())):
+            if key not in seen:
+                seen.add(key)
+                take[dir_of[key[0]]].append(i)
+        written = []
+        for d, idx in take.items():
+            rows = batch.take(idx)
+            drop = rows[rk].cast(schema.field(rk).type)
+            pieces = [
+                t.filter(pc.invert(pc.is_in(
+                    t[rk], value_set=drop, skip_nulls=False
+                )))
+                for t in (
+                    conform(pq.ParquetFile(
+                        f"{root}/{f}", coerce_int96_timestamp_unit="us"
+                    ).read())
+                    for f in hit if f.split("/", 1)[0] == d
+                )
+            ] + ([conform(rows)] if upsert else [])
+            if not pieces:
+                continue
+            out = pa.concat_tables(pieces)
+            if out.num_rows == 0:
+                continue
+            rel = f"{d}/part-{uuid.uuid4()}.c000.snappy.parquet"
+            os.makedirs(f"{root}/{d}", exist_ok=True)
+            pq.write_table(out, f"{root}/{rel}", compression="snappy")
+            written.append(rel)
+        return written
+
     @_locked
     def delete_by_keys(self, deletes: DataFrame) -> None:
         """K4 against the stored table, partition-scoped: only the
@@ -2245,16 +2518,17 @@ class KeyedParquetTable:
         (append + manifest flip), mirroring the reference's per-row
         surgical deletes (azurestoragewrapper.py:260-267) without a
         full-table rewrite — at 100 TB, deleting a handful of keys
-        touches a handful of partition directories.
+        touches a handful of partition directories. A driver-sized
+        key set runs on Arrow in 2 Spark jobs, a larger one on Spark
+        (class docstring, "DRIVER-SIZED VERBS"). An empty-string
+        partition key matches the NULL partition, where Spark's
+        writer files it.
 
         Safety: the delete-key set is pinned (localCheckpoint) before
         the write; the surviving rows need no pin of their own — the
         verb only APPENDS new files, and the superseded inputs are
         deleted at the commit AFTER the append completes, so the plan
-        can never observe its own destruction (the pin predated the
-        manifest protocol, when this verb overwrote partitions in
-        place — r14, guide §1.2: it was a full second materialization
-        of the surviving rows per delete).
+        can never observe its own destruction.
 
         Caller contract for MULTI-table purges: ``deletes`` is pinned
         here before this table is mutated, but if the same lazy plan
@@ -2265,70 +2539,16 @@ class KeyedParquetTable:
         """
         if not self.exists():
             return
-        # LAZY checkpoint (r14, the r13 CC/BPE one-action-per-step
-        # pattern): the tally collect right below is the first action,
-        # so the pin materializes inside it — storage-backed from first
-        # computation, every later consumer (COW probe, anti-join)
-        # reads the pinned blocks; the separate eager-materialization
-        # job is gone.
-        key_set = (
-            deletes.select(*self.keys).distinct().localCheckpoint(eager=False)
-        )
-        # bounded driver-side state: the distinct partition keys of the
-        # DELETE SET (small by contract), never of the table. ONE
-        # action answers both routing questions — the partition list
-        # AND whether any delete key is NULL (the COW split's
-        # null-sensitivity flag, formerly its own probe job).
-        rk = self.keys[1] if len(self.keys) >= 2 else None
-        # plan on the key set's OWN session (foreachBatch hands verbs
-        # frames owned by a cloned session whose conf is separate)
-        with _no_aqe(key_set.sparkSession):
-            part_rows = (
-                key_set.groupBy(self.keys[0])
-                .agg(
-                    F.max(
-                        F.col(rk).isNull() if rk else F.lit(False)
-                    ).alias("__n")
-                )
-                .collect()
-            )
-        parts = [r[0] for r in part_rows]
-        if not parts:
-            return
-        has_null = bool(rk) and any(r["__n"] for r in part_rows)
-        part_type = dict(key_set.dtypes)[self.keys[0]]
-        # file-level copy-on-write (r10): rewrite ONLY the files whose
-        # footer row-key range can contain a delete key; files the
-        # manifest stats prove clean stay live untouched. Falls back
-        # to the whole-partition rewrite when the split isn't provable.
-        split = self._cow_split(key_set, parts, has_null=has_null)
-        if split is not None and not split[0]:
-            # no live file can contain any delete key: physical no-op,
-            # committed anyway so the verb still flips a version
-            self._commit_snapshot(
-                self._require_snapshot()["files"], op="delete"
-            )
-            return
-        if split is None:
-            # manifest-pinned touched-slice read: exactly the delete
-            # set's partitions' live files (NULL keys in the helper)
-            touched_rows = self._read_touched(
-                self.spark, parts, part_type=part_type
-            )
-        else:
-            touched_rows = self._read_rels(
-                self.spark, split[0], part_type=part_type
-            )
-        # lazy on purpose: the append below is this plan's ONLY
-        # consumer, and its input files stay live until the commit
-        # after the write — no pin needed (see the docstring). A
-        # fully-emptied partition simply contributes no new files.
-        self._append_and_commit(
-            delete_keys(touched_rows, key_set, self.keys),
-            "delete",
-            {self._partition_dir_of(p) for p in parts},
-            hit=None if split is None else split[0],
-        )
+        # LAZY checkpoint (r14): the routing aggregate is the first
+        # action, so the pin materializes inside it and every later
+        # consumer (collect, COW probe, anti-join) reads the pinned
+        # blocks. No distinct here: under AQE, checkpointing a plan
+        # with a shuffle runs that shuffle's job at once, and neither
+        # the COW probe nor the anti-join needs the keys distinct
+        key_set = self._empty_partition_as_null(
+            deletes.select(*self.keys)
+        ).localCheckpoint(eager=False)
+        self._merge_touched(key_set, "delete")
 
     def stats(self) -> DataFrame:
         """Per-partition table statistics: row count, file count, and
@@ -2951,91 +3171,42 @@ class KeyedParquetTable:
     @_locked
     def upsert_replace_partitions(self, new: DataFrame) -> None:
         """Replace-upsert restricted to the partitions present in
-        ``new`` — append + manifest flip, no full-table rewrite.
+        ``new`` — append + manifest flip, no full-table rewrite. A
+        driver-sized batch runs on Arrow in 2 Spark jobs; a larger or
+        drifted one, and the first write into an empty table, run on
+        Spark (class docstring, "DRIVER-SIZED VERBS"). On a duplicate
+        key the first occurrence wins; an empty-string partition key
+        lands in the NULL partition, where Spark's writer files it.
 
-        The merged plan lazily scans the OLD files of the touched
+        The Spark merge plan lazily scans the OLD files of the touched
         partitions while the append writes the new ones — safe by
         construction, because nothing is deleted until the commit
         after the write completes. Reads and writes go through
         ``new``'s OWN session: under ``foreachBatch`` the micro-batch
         DataFrame belongs to a cloned session.
         """
-        sess = new.sparkSession
+        new = self._empty_partition_as_null(new)
         if not self.exists():
             # unlocked inner form: this verb already holds the lock
             self._overwrite_unlocked(new.dropDuplicates(list(self.keys)))
             return
         # PIN the incoming frame before ANY of it is observed (ADVICE
         # r10): the COW split proves files clean against one evaluation
-        # of ``new``'s keys, and the append below evaluates the plan
-        # again — a nondeterministic plan (sample / limit / rand-derived
-        # keys) could write a key that collides with a file the split
-        # already cleared, committing duplicate keys. delete_by_keys
-        # pins its key_set the same way. LAZY (r14): the tally collect
-        # below is the first action, so the pin materializes inside it
-        # and every later consumer reads the pinned blocks — no
-        # separate materialization job.
+        # of ``new``'s keys, and the write evaluates it again — a
+        # nondeterministic plan (sample / limit / rand-derived keys)
+        # could write a key that collides with a file the split
+        # already cleared, committing duplicate keys. LAZY (r14): the
+        # routing aggregate is the first action and materializes it.
         new = new.localCheckpoint(eager=False)
         # dtype alignment BEFORE the split/append decision (ADVICE r10,
-        # high): every pre-COW write ran through unionByName's type
-        # coercion, so a batch whose column dtype drifted (int vs
-        # stored bigint) was silently coerced — a verbatim pure append
-        # would commit mixed-type files and poison every subsequent
-        # mergeSchema read (CANNOT_MERGE_SCHEMAS, verified on Spark
-        # 4.1). Losslessly upcastable drift is cast to the stored
-        # type here; WIDER / incompatible drift forces the merge path
-        # (split=None), whose union coercion rewrites the touched
-        # partitions at the widened type — the exact pre-COW behavior.
+        # high): a batch whose column dtype drifted (int vs stored
+        # bigint) appended verbatim would commit mixed-type files and
+        # poison every later mergeSchema read (CANNOT_MERGE_SCHEMAS on
+        # Spark 4.1). Losslessly upcastable drift is cast to the stored
+        # type here; WIDER / incompatible drift rewrites the touched
+        # partitions through unionByName's coercion at the widened type.
         aligned = self._align_for_append(new)
-        drift_blocks_append = aligned is None
-        if not drift_blocks_append:
-            new = aligned
-        # ONE action answers both routing questions — the touched
-        # partition list AND whether any incoming row key is NULL (the
-        # COW split's null-sensitivity flag, formerly its own probe)
-        rk = self.keys[1] if len(self.keys) >= 2 else None
-        with _no_aqe(sess):
-            part_rows = (
-                new.groupBy(self.keys[0])
-                .agg(
-                    F.max(
-                        F.col(rk).isNull() if rk else F.lit(False)
-                    ).alias("__n")
-                )
-                .collect()
-            )
-        parts = [r[0] for r in part_rows]
-        has_null = bool(rk) and any(r["__n"] for r in part_rows)
-        part_type = dict(new.dtypes)[self.keys[0]]
-        # file-level copy-on-write (r10): only the files whose footer
-        # row-key range can contain a replaced key are read into the
-        # merge plan and superseded; stat-proven clean files of the
-        # touched partitions stay live untouched. The split costs one
-        # narrow pass over ``new`` (a distinct-key broadcast join
-        # against the touched files' bounds).
-        split = (
-            None
-            if drift_blocks_append
-            else self._cow_split(
-                new.select(*self.keys), parts, has_null=has_null
-            )
-        )
-        if split is None:
-            # manifest-pinned touched-slice read (NULL partition keys
-            # handled inside — the r7 three-valued-logic hazard): only
-            # the touched partitions' live files enter the merge plan
-            old_slice = self._read_touched(sess, parts, part_type=part_type)
-            merged = upsert_replace(old_slice, new, self.keys)
-        elif split[0]:
-            old_slice = self._read_rels(sess, split[0], part_type=part_type)
-            merged = upsert_replace(old_slice, new, self.keys)
-        else:
-            # nothing on disk can collide: a pure keyed append
-            merged = new.dropDuplicates(list(self.keys))
-        self._append_and_commit(
-            merged,
-            "upsert",
-            {self._partition_dir_of(p) for p in parts},
-            hit=None if split is None else split[0],
-            written_schema=merged.schema,
+        self._merge_touched(
+            new if aligned is None else aligned, "upsert",
+            drift=aligned is None,
         )

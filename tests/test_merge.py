@@ -6,6 +6,7 @@ from __future__ import annotations
 
 from contextlib import contextmanager
 
+import pytest
 from pyspark.sql import functions as F
 
 from otrrentetl_spark.operators import merge
@@ -2239,3 +2240,215 @@ def test_oversized_partition_auto_diverts_from_window_funnel(spark, tmp_path):
     bounds.sort()
     for (lo1, hi1), (lo2, hi2) in zip(bounds, bounds[1:]):
         assert hi1 <= lo2, f"overlapping ranges: {(lo1, hi1)} vs {(lo2, hi2)}"
+
+
+
+@pytest.mark.parametrize("arrow_max", [0, merge._ARROW_MAX_ROWS])
+def test_empty_string_partition_is_the_null_partition(
+    spark, tmp_path, monkeypatch, arrow_max
+):
+    """Spark's writer files an empty-string PartitionKey under the NULL
+    partition directory, so it reads back NULL. An upsert into an
+    existing table keeps such a row (it was left in an uncommitted
+    file and lost), and a delete of the same key finds it — on the
+    Spark path (bound 0) and on the Arrow path."""
+    monkeypatch.setattr(merge, "_ARROW_MAX_ROWS", arrow_max)
+    t = merge.KeyedParquetTable(spark, str(tmp_path / "emptypk"), KEYS)
+    t.overwrite(_df(spark, [("a", "k0", "x", 0)]))
+    t.upsert_replace_partitions(
+        _df(spark, [("", "k1", "y", 1), ("b", "k2", "z", 2)])
+    )
+    got = sorted((r.RowKey, r.PartitionKey) for r in t.read().collect())
+    assert got == [("k0", "a"), ("k1", None), ("k2", "b")]
+    assert not t.partition_is_empty(None)
+    t.delete_by_keys(_df(spark, [("", "k1", "", 0)]))
+    assert sorted(r.RowKey for r in t.read().collect()) == ["k0", "k2"]
+    assert t.partition_is_empty(None)
+
+
+def test_partition_is_empty_reads_the_manifest(spark, tmp_path, jobs_in):
+    """The I2 gate answers from the manifest's footer stats at zero
+    Spark jobs; a partition whose files carry no stats still gets the
+    probe's answer."""
+    t = merge.KeyedParquetTable(spark, str(tmp_path / "gate"), KEYS)
+    t.overwrite(_df(spark, [("a", "1", "x", 1), (None, "2", "y", 2)]))
+    answers, n_jobs = jobs_in(
+        "gate_manifest",
+        lambda: [t.partition_is_empty(p) for p in ("a", None, "b", "")],
+    )
+    assert answers == [False, False, True, True]
+    assert n_jobs == 0
+    snap = t._read_snapshot()
+    no_stats = {**snap, "stats": {}}
+    t._read_snapshot = lambda: no_stats
+    answers, n_jobs = jobs_in(
+        "gate_probe", lambda: [t.partition_is_empty(p) for p in ("a", "b")]
+    )
+    assert answers == [False, True]
+    assert n_jobs > 0
+
+
+TYPED = (
+    "PartitionKey long, RowKey bigint, ts timestamp, amount decimal(12,2),"
+    " v array<double>"
+)
+
+
+def _typed(spark, rows):
+    import datetime as dt
+    from decimal import Decimal
+
+    # row key 9 lies past 2262, where an INT96 read at ns overflows
+    base = dt.datetime(2021, 3, 4, 5, 6, 7, 123456)
+    return spark.createDataFrame(
+        [
+            (pk, rk, base.replace(year=2400 if rk == 9 else 2021)
+             + dt.timedelta(seconds=rk, minutes=tag),
+             Decimal(f"{rk}.{tag:02d}"), [float(rk), tag / 3])
+            for pk, rk, tag in rows
+        ],
+        TYPED,
+    )
+
+
+def _typed_state(df):
+    # time travel and the change feed read unpinned, where the
+    # partition column comes back as directory text
+    return sorted(tuple(r) for r in df.select(
+        F.col("PartitionKey").cast("long"), "RowKey", "ts", "amount", "v"
+    ).collect())
+
+
+def _spy_arrow(monkeypatch):
+    calls = []
+    orig = merge.KeyedParquetTable._arrow_write
+
+    def spy(self, *args):
+        calls.append(args[1])
+        return orig(self, *args)
+
+    monkeypatch.setattr(merge.KeyedParquetTable, "_arrow_write", spy)
+    return calls
+
+
+def test_arrow_path_typed_round_trip(spark, tmp_path, monkeypatch, jobs_in):
+    """Timestamp, decimal(12,2) and array<double> columns under a long
+    partition column survive Arrow-path upserts and deletes next to
+    Spark's own files (INT96 timestamps): read, lookup, time travel,
+    the change feed with pre-images, compaction, a later Spark-path
+    upsert over the Arrow-written files, and COW skipping of a clean
+    Arrow-written file."""
+    calls = _spy_arrow(monkeypatch)
+    t = merge.KeyedParquetTable(spark, str(tmp_path / "typed"), KEYS)
+    t.retain_stale_s = 3600.0
+    model = {(pk, rk): 0 for pk in (1, 2) for rk in range(10)}
+
+    def want():
+        return _typed_state(
+            _typed(spark, [(pk, rk, tag) for (pk, rk), tag in model.items()])
+        )
+
+    t.overwrite(_typed(spark, [(pk, rk, 0) for pk, rk in model]))
+    v1 = t._read_snapshot()["version"]
+    dtypes = t.read().dtypes
+    up = [(1, 5, 1), (1, 6, 1), (1, 7, 1), (3, 0, 1), (3, 1, 1)]
+    _, n_jobs = jobs_in(
+        "typed_up", lambda: t.upsert_replace_partitions(_typed(spark, up))
+    )
+    assert n_jobs <= 2 and len(calls) == 1
+    model.update({(pk, rk): tag for pk, rk, tag in up})
+    dels = spark.createDataFrame(
+        [(2, 3), (2, 4), (2, 99)], "PartitionKey long, RowKey bigint"
+    )
+    _, n_jobs = jobs_in("typed_del", lambda: t.delete_by_keys(dels))
+    assert n_jobs <= 2 and len(calls) == 2
+    del model[(2, 3)], model[(2, 4)]
+    v3 = t._read_snapshot()["version"]
+
+    assert t.read().dtypes == dtypes
+    assert _typed_state(t.read()) == want()
+    assert len(t._lookup_files(1, 6)) == 1
+    assert _typed_state(t.lookup(1, 6)) == _typed_state(_typed(spark, [(1, 6, 1)]))
+    assert _typed_state(t.read(version=v1)) == _typed_state(
+        _typed(spark, [(pk, rk, 0) for pk in (1, 2) for rk in range(10)])
+    )
+    feed = t.changes(v1, v3, include_preimage=True)
+    kinds = sorted(
+        (int(r.PartitionKey), r.RowKey, r.change_type) for r in feed.collect()
+    )
+    assert kinds == sorted(
+        [(1, k, c) for k in (5, 6, 7) for c in ("update", "update_preimage")]
+        + [(3, 0, "insert"), (3, 1, "insert"), (2, 3, "delete"), (2, 4, "delete")]
+    )
+    post = feed.filter(F.col("change_type").isin("update", "insert")).drop("change_type")
+    assert _typed_state(post) == _typed_state(_typed(spark, up))
+
+    # COW skipping: new keys past a clean Arrow-written file's bounds
+    (clean,) = [f for f in t._read_snapshot()["files"] if f.startswith("PartitionKey=3/")]
+    t.upsert_replace_partitions(_typed(spark, [(3, 50, 3), (3, 51, 3)]))
+    assert len(calls) == 3
+    snap = t._read_snapshot()
+    assert clean in snap["files"]
+    (fresh,) = [f for f in snap["files"] if f.startswith("PartitionKey=3/") and f != clean]
+    assert snap["stats"][fresh]["rows"] == 2
+    model.update({(3, 50): 3, (3, 51): 3})
+    assert _typed_state(t.read()) == want()
+
+    # a Spark-path upsert over the Arrow-written files
+    monkeypatch.setattr(merge, "_ARROW_MAX_ROWS", 0)
+    t.upsert_replace_partitions(_typed(spark, [(1, 6, 2), (1, 8, 2), (3, 1, 2)]))
+    assert len(calls) == 3
+    model.update({(1, 6): 2, (1, 8): 2, (3, 1): 2})
+    assert _typed_state(t.read()) == want()
+
+    t.compact()
+    assert _typed_state(t.read()) == want()
+    assert t.read().dtypes == dtypes
+
+
+@pytest.mark.parametrize(
+    "case", ["dtype_drift", "added_column", "missing_column", "no_stats", "above_bound"]
+)
+def test_arrow_path_hands_over_to_spark(spark, tmp_path, monkeypatch, case):
+    """Each condition the Arrow gate refuses sends the upsert to the
+    Spark path, with the same result."""
+    if case == "no_stats":
+        monkeypatch.setattr(
+            merge.KeyedParquetTable, "_file_stats", lambda self, rel: None
+        )
+    t = merge.KeyedParquetTable(spark, str(tmp_path / case), KEYS)
+    t.overwrite(_df(spark, [("p", str(i), "old", i) for i in range(6)]))
+    monkeypatch.undo()
+    calls = _spy_arrow(monkeypatch)
+    rows = [("p", "1", "new", 10), ("p", "9", "ins", 9)]
+    batch = _df(spark, rows)
+    if case == "dtype_drift":
+        batch = batch.withColumn("n", F.col("n").cast("double"))
+    elif case == "added_column":
+        batch = batch.withColumn("extra", F.lit("e"))
+    elif case == "missing_column":
+        batch = batch.drop("n")
+    elif case == "above_bound":
+        monkeypatch.setattr(merge, "_ARROW_MAX_ROWS", 1)
+    t.upsert_replace_partitions(batch)
+    assert calls == []
+    got = sorted((r.RowKey, r.val) for r in t.read().collect())
+    assert got == [("0", "old"), ("1", "new"), ("2", "old"), ("3", "old"),
+                   ("4", "old"), ("5", "old"), ("9", "ins")]
+    n = {r.RowKey: r.n for r in t.read().collect()}
+    assert n["1"] == (None if case == "missing_column" else 10)
+
+
+def test_changes_match_rows_of_the_null_partition(spark, tmp_path):
+    """A version whose changed files all lie in the NULL partition
+    directory reads its partition column back as VOID. The change feed
+    must still match the rows by key: an unchanged row is no change,
+    a changed one an update (both read as delete + insert)."""
+    t = merge.KeyedParquetTable(spark, str(tmp_path / "cdcnull"), KEYS)
+    t.retain_stale_s = 3600.0
+    t.overwrite(
+        _df(spark, [(None, "1", "a", 1), (None, "2", "b", 2), ("p", "1", "c", 3)])
+    )
+    t.upsert_replace_partitions(_df(spark, [(None, "1", "a", 1), (None, "2", "B", 2)]))
+    got = [(r.PartitionKey, r.RowKey, r.val, r.change_type) for r in t.changes(1, 2).collect()]
+    assert got == [(None, "2", "B", "update")]

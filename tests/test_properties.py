@@ -283,6 +283,35 @@ def test_boilerplate_removal_matches_pure_python_model(spark, docs):
     assert got == _boiler_model(rows, 3, 0.5)
 
 
+# keys that exercise the table's directory escaping, the COW bounds
+# (ordering of backslash, quote and non-ASCII) and the rule that an
+# empty-string partition key is the NULL partition
+_TABLE_KEYS = ["p1", "", "a/b", "50%", "ü x", "\\", "'", None]
+table_rows = st.lists(
+    st.tuples(
+        st.tuples(st.sampled_from(_TABLE_KEYS), st.sampled_from(_TABLE_KEYS)),
+        vals,
+    ),
+    max_size=8,
+)
+
+
+def _model_rows(state):
+    return sorted(((pk, rk, v) for (pk, rk), v in state.items()), key=_nskey)
+
+
+def _model_changes(old, new):
+    out = []
+    for k in old.keys() | new.keys():
+        if k not in old:
+            out.append((*k, new[k], "insert"))
+        elif k not in new:
+            out.append((*k, old[k], "delete"))
+        elif old[k] != new[k]:
+            out.append((*k, new[k], "update"))
+    return sorted(out, key=_nskey)
+
+
 @settings(
     max_examples=6,
     deadline=None,
@@ -292,58 +321,80 @@ def test_boilerplate_removal_matches_pure_python_model(spark, docs):
     steps=st.lists(
         st.tuples(
             st.sampled_from(["upsert", "delete", "overwrite", "compact"]),
-            rows_strategy,
+            table_rows,
         ),
         min_size=1,
         max_size=5,
     )
 )
-def test_keyed_table_model_equivalence(spark, tmp_path, steps):
+def test_keyed_table_model_equivalence(spark, tmp_path, monkeypatch, steps):
     """Model-based check of the snapshot write protocol (r7): a random
-    sequence of disk-backed verbs must end in exactly the state an
-    in-memory dict model predicts, and the _SNAPSHOT manifest must
-    match the on-disk file set after every sequence (retention 0)."""
+    sequence of disk-backed verbs must match an in-memory dict model
+    at EVERY committed version — ``read(version=v)`` and
+    ``changes(v-1, v)`` — on both write paths of the driver-sized
+    verbs (the Arrow bound forced to 0 sends every call to Spark).
+    The files on disk must be exactly the live and the retired files,
+    and after ``vacuum(0)`` exactly the manifest."""
     import os
     import uuid
 
+    from otrrentetl_spark.operators import merge
     from otrrentetl_spark.operators.merge import KeyedParquetTable
 
-    path = str(tmp_path / f"model_{uuid.uuid4().hex[:8]}")
-    t = KeyedParquetTable(spark, path, ("PartitionKey", "RowKey"))
-    model: dict = {}
-    for verb, rows in steps:
-        df = _kv_df(spark, rows)
-        dd = {}
-        for (pk, rk), v in rows or [(("z", "z"), 0)]:
-            dd.setdefault((pk, rk), v)  # dropDuplicates keeps one
-        if not rows:
-            dd = {("z", "z"): 0}
-        if verb == "overwrite":
-            t.overwrite(df.dropDuplicates(["PartitionKey", "RowKey"]))
-            model = dict(dd)
-        elif verb == "upsert":
-            t.upsert_replace_partitions(df)
-            # replace-upsert: same-key rows replaced wholesale,
-            # other keys in the touched partitions survive
-            for k, v in dd.items():
-                model[k] = v
-        elif verb == "delete":
-            t.delete_by_keys(df)
-            for k in dd:
-                model.pop(k, None)
-        elif verb == "compact":
-            t.compact()
-        if not model:
-            continue
-    want = sorted(((pk, rk, v) for (pk, rk), v in model.items()), key=_nskey)
-    if model:
-        got = sorted(
-            ((r["PartitionKey"], r["RowKey"], r["v"]) for r in t.read().collect()),
-            key=_nskey,
-        )
-        assert got == want
-    snap = t._read_snapshot()
-    if snap is not None:
-        assert sorted(snap["files"]) == t._list_data_files()
-        assert snap["retired"] == []
-        assert os.path.exists(os.path.join(path, "_SNAPSHOT"))
+    for arrow_max in (0, 10**9):
+        monkeypatch.setattr(merge, "_ARROW_MAX_ROWS", arrow_max)
+        path = str(tmp_path / f"model_{uuid.uuid4().hex[:8]}")
+        t = KeyedParquetTable(spark, path, ("PartitionKey", "RowKey"))
+        t.retain_stale_s = 3600.0  # every version stays readable
+        model: dict = {}
+        history: dict = {}
+        for verb, rows in steps:
+            df = _kv_df(spark, rows)
+            dd = {}
+            for (pk, rk), v in rows or [(("z", "z"), 0)]:
+                # "" is the NULL partition; dropDuplicates keeps the
+                # first occurrence of a key
+                dd.setdefault((None if pk == "" else pk, rk), v)
+            if verb == "overwrite":
+                t.overwrite(_kv_df(spark, list(dd.items())))
+                model = dict(dd)
+            elif verb == "upsert":
+                t.upsert_replace_partitions(df)
+                # replace-upsert: same-key rows replaced wholesale,
+                # other keys in the touched partitions survive
+                model.update(dd)
+            elif verb == "delete":
+                t.delete_by_keys(df)
+                for k in dd:
+                    model.pop(k, None)
+            elif verb == "compact":
+                t.compact()
+            snap = t._read_snapshot()
+            if snap is not None:
+                history[snap["version"]] = dict(model)
+        for v, state in history.items():
+            got = sorted(
+                ((r["PartitionKey"], r["RowKey"], r["v"])
+                 for r in t.read(version=v).collect()),
+                key=_nskey,
+            )
+            assert got == _model_rows(state), (arrow_max, v)
+            if v - 1 in history:
+                got = sorted(
+                    ((r["PartitionKey"], r["RowKey"], r["v"], r["change_type"])
+                     for r in t.changes(v - 1, v).collect()),
+                    key=_nskey,
+                )
+                assert got == _model_changes(history[v - 1], state), (
+                    arrow_max, v,
+                )
+        snap = t._read_snapshot()
+        if snap is not None:
+            assert os.path.exists(os.path.join(path, "_SNAPSHOT"))
+            assert sorted(
+                snap["files"] + [f for f, _ in snap["retired"]]
+            ) == t._list_data_files()
+            t.vacuum(0.0)
+            snap = t._read_snapshot()
+            assert sorted(snap["files"]) == t._list_data_files()
+            assert snap["retired"] == []

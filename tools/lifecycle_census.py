@@ -95,6 +95,7 @@ def main() -> None:
         "expire_history",
         "vacuum",
         "_cow_split",
+        "_arrow_write",
         "_commit_snapshot",
         "_distributed_file_stats",
         "changes",
