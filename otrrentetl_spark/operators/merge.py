@@ -47,7 +47,12 @@ _STATE_CACHE_MAX = 8
 _ANY_LINEAGE = object()
 # DRIVER-SIZED VERBS (KeyedParquetTable class docstring): an upsert or
 # delete whose batch rows plus the rows of the files it rewrites stay
-# within this bound merges on the driver in pyarrow, not in Spark jobs
+# within this bound merges on the driver in pyarrow, not in Spark jobs.
+# Measured on 4 cores with a 64-d vector column, the Arrow merge beat
+# the Spark one up to 300k rows (upsert 0.29 vs 0.72 s at 100k rows in
+# one partition; 6.2 vs 9.5 s at 300k rows over 256 partitions) and
+# met it near 1M, so the bound sits well below the crossover and caps
+# what the driver holds (~60 MB at 100k such rows)
 _ARROW_MAX_ROWS = 100_000
 
 

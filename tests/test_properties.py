@@ -331,8 +331,9 @@ def test_keyed_table_model_equivalence(spark, tmp_path, monkeypatch, steps):
     """Model-based check of the snapshot write protocol (r7): a random
     sequence of disk-backed verbs must match an in-memory dict model
     at EVERY committed version — ``read(version=v)`` and
-    ``changes(v-1, v)`` — on both write paths of the driver-sized
-    verbs (the Arrow bound forced to 0 sends every call to Spark).
+    ``changes(v-1, v)`` — and in the current, pinned-schema
+    ``read()``, on both write paths of the driver-sized verbs (the
+    Arrow bound forced to 0 sends every call to Spark).
     The files on disk must be exactly the live and the retired files,
     and after ``vacuum(0)`` exactly the manifest."""
     import os
@@ -390,6 +391,14 @@ def test_keyed_table_model_equivalence(spark, tmp_path, monkeypatch, steps):
                 )
         snap = t._read_snapshot()
         if snap is not None:
+            # the current read goes through the pinned schema, which
+            # every file the Arrow path wrote must satisfy
+            got = sorted(
+                ((r["PartitionKey"], r["RowKey"], r["v"])
+                 for r in t.read().collect()),
+                key=_nskey,
+            )
+            assert got == _model_rows(model), arrow_max
             assert os.path.exists(os.path.join(path, "_SNAPSHOT"))
             assert sorted(
                 snap["files"] + [f for f, _ in snap["retired"]]
