@@ -483,48 +483,33 @@ class _BucketedVectorIndex:
         self._bump_fallback_counter(n_ids)
 
     def _bump_fallback_counter(self, n_ids: int) -> None:
-        import time
-        import uuid
-
         t = self._table()
         uri = f"{self.path}/{_TELEMETRY_NAME}"
-        sfx = self._TELEMETRY_LOCK_SUFFIX
-        token = uuid.uuid4().hex
         try:
-            deadline = time.monotonic() + self._TELEMETRY_LOCK_TIMEOUT_S
-            while not t._try_lock(token, suffix=sfx):
-                age = t._lock_age_s(suffix=sfx)
-                if age is not None and age > self._TELEMETRY_LOCK_STALE_S:
-                    # crashed bumper (the critical section is a
-                    # single tiny JSON read-modify-write): release by
-                    # identity and re-race. No continue past the
-                    # deadline check: an old-but-token-unreadable
-                    # lock file would otherwise spin this loop
-                    # forever (stale branch re-taken every pass).
-                    victim = t._read_lock_token(suffix=sfx)
-                    if victim is not None:
-                        t._unlock(expected_token=victim, suffix=sfx)
-                if time.monotonic() > deadline:
-                    _LOG.warning(
-                        "ANN telemetry lock at %s%s busy for %.0fs —"
-                        " dropping this increment (telemetry is"
-                        " advisory; the fold itself proceeds)",
-                        self.path,
-                        sfx,
-                        self._TELEMETRY_LOCK_TIMEOUT_S,
-                    )
-                    return
-                time.sleep(0.05)
-            try:
+            # the table's acquire/break loop under the telemetry suffix:
+            # a crashed bumper's lock (the critical section is a single
+            # tiny JSON read-modify-write) is broken by identity
+            with t._held(
+                self._TELEMETRY_LOCK_SUFFIX,
+                timeout_s=self._TELEMETRY_LOCK_TIMEOUT_S,
+                stale_s=self._TELEMETRY_LOCK_STALE_S,
+            ):
                 self._bump_locked(t, uri, n_ids)
-            finally:
-                t._unlock(expected_token=token, suffix=sfx)
+        except TimeoutError:
+            _LOG.warning(
+                "ANN telemetry lock at %s%s busy for %.0fs —"
+                " dropping this increment (telemetry is"
+                " advisory; the fold itself proceeds)",
+                self.path,
+                self._TELEMETRY_LOCK_SUFFIX,
+                self._TELEMETRY_LOCK_TIMEOUT_S,
+            )
         except Exception:  # noqa: BLE001 — telemetry must never fail a fold
             _LOG.warning("could not persist ANN telemetry at %s", uri)
 
     def _bump_locked(self, t, uri: str, n_ids: int) -> None:
         doc = t._read_json(uri)
-        if doc is None and self._telemetry_exists(t, uri):
+        if doc is None and t._store.exists(uri):
             # the sidecar is there but unreadable (transient IO
             # / torn bytes): overwriting would silently RESET a
             # cumulative counter — skip this increment instead
@@ -542,18 +527,6 @@ class _BucketedVectorIndex:
             int(doc.get("locate_fallback_ids_total", 0)) + int(n_ids)
         )
         t._write_json_atomic(uri, doc)
-
-    @staticmethod
-    def _telemetry_exists(t, uri: str) -> bool:
-        import os
-
-        local = t._local_path_of(uri)
-        if local is not None:
-            return os.path.exists(local)
-        jvm = t.spark._jvm
-        jpath = jvm.org.apache.hadoop.fs.Path(uri)
-        fs = jpath.getFileSystem(t.spark._jsc.hadoopConfiguration())
-        return bool(fs.exists(jpath))
 
     # ---------------------------------------------------------- plumbing
     def _table(self) -> KeyedParquetTable:

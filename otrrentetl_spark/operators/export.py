@@ -33,6 +33,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from otrrentetl_spark.table.store import store_for
+
 # planner guard for the sliced layout: a small max_task_weight on a
 # huge corpus must not request an unbounded repartitionByRange (the
 # same blow-up annindex.py bounds with _MAX_BUILD_TASKS)
@@ -262,12 +264,8 @@ def write_shards(
         "max_task_weight": int(max_task_weight) if max_task_weight else None,
         "shards": shards,
     }
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(f"{path}/_SHARD_MANIFEST.json")
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    out = fs.create(jpath, True)
-    try:
-        out.write(bytearray(json.dumps(manifest, indent=1).encode()))
-    finally:
-        out.close()
+    store_for(spark, path).write_atomic(
+        f"{path}/_SHARD_MANIFEST.json",
+        json.dumps(manifest, indent=1).encode(),
+    )
     return manifest

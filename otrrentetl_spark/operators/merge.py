@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from otrrentetl_spark.session import local_relation
+from otrrentetl_spark.table.store import store_for
 
 DEFAULT_KEYS = ("PartitionKey", "RowKey")
 
@@ -397,6 +398,8 @@ class KeyedParquetTable:
         self.spark = spark
         self.path = path
         self.keys = tuple(keys)
+        # local disk or Hadoop FileSystem, by the path's scheme
+        self._store = store_for(spark, path)
         # seconds a superseded file stays on disk after its manifest
         # flip (protects in-flight readers); 0 = delete at commit
         self.retain_stale_s: float = 0.0
@@ -451,113 +454,21 @@ class KeyedParquetTable:
     # plain filesystem offers (the same caveat every file-based commit
     # protocol carries).
     _LOCK_SUFFIX = "._WRITE_LOCK"
-    _BREAK_SUFFIX = "._WRITE_LOCK.BREAK"
+    _BREAK_SUFFIX = ".BREAK"
 
     def _lock_uri(self, suffix: str | None = None) -> str:
         return self.path.rstrip("/") + (suffix or self._LOCK_SUFFIX)
 
-    def _local_lock_path(self, suffix: str | None = None) -> str | None:
-        """Filesystem path when the table lives on local disk (no
-        scheme or file:), else None — local paths take the exact
-        os.O_EXCL branch, everything else the Hadoop FS API."""
-        if "://" not in self.path:
-            return self._lock_uri(suffix)
-        if self.path.startswith("file:"):
-            from urllib.parse import urlparse
-
-            return urlparse(self._lock_uri(suffix)).path
-        return None
-
     def _try_lock(self, token: str, suffix: str | None = None) -> bool:
-        import os
-
-        local = self._local_lock_path(suffix)
-        if local is not None:
-            os.makedirs(os.path.dirname(local), exist_ok=True)
-            try:
-                fd = os.open(local, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            except FileExistsError:
-                return False
-            try:
-                os.write(fd, token.encode())
-            finally:
-                os.close(fd)
-            return True
-        jvm = self.spark._jvm
-        jpath = jvm.org.apache.hadoop.fs.Path(self._lock_uri(suffix))
-        fs = jpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        try:
-            out = fs.create(jpath, False)  # fails if exists
-            out.write(token.encode())
-            out.close()
-            return True
-        except Exception:  # noqa: BLE001 — disambiguate below
-            # ADVICE r6: don't swallow genuine FS failures (auth,
-            # connectivity, bad path) as "lock held" — that spins for
-            # the whole timeout and reports a misleading TimeoutError.
-            # Probe existence: lock-held iff the path is actually there.
-            if fs.exists(jpath):
-                return False
-            raise
-
-    def _uri_age_s(self, uri: str) -> float | None:
-        """Seconds since ``uri`` was last written (None if missing)."""
-        import os
-        import time
-
-        local = self._local_path_of(uri)
-        try:
-            if local is not None:
-                return time.time() - os.stat(local).st_mtime
-            jvm = self.spark._jvm
-            jpath = jvm.org.apache.hadoop.fs.Path(uri)
-            fs = jpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
-            return time.time() - fs.getFileStatus(
-                jpath
-            ).getModificationTime() / 1000.0
-        except Exception:  # noqa: BLE001 — vanished between probes
-            return None
-
-    def _lock_age_s(self, suffix: str | None = None) -> float | None:
-        import os
-        import time
-
-        local = self._local_lock_path(suffix)
-        try:
-            if local is not None:
-                return time.time() - os.stat(local).st_mtime
-            jvm = self.spark._jvm
-            jpath = jvm.org.apache.hadoop.fs.Path(self._lock_uri(suffix))
-            fs = jpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
-            return time.time() - fs.getFileStatus(
-                jpath
-            ).getModificationTime() / 1000.0
-        except Exception:  # noqa: BLE001 — vanished between probes
-            return None
+        return self._store.create_exclusive(
+            self._lock_uri(suffix), token.encode()
+        )
 
     def _read_lock_token(self, suffix: str | None = None) -> str | None:
         """Current lock file's writer token, or None if the lock is
         missing/unreadable. Identity source for break-by-identity."""
-        local = self._local_lock_path(suffix)
-        try:
-            if local is not None:
-                with open(local, "rb") as f:
-                    return f.read(4096).decode("utf-8", "replace")
-            jvm = self.spark._jvm
-            jpath = jvm.org.apache.hadoop.fs.Path(self._lock_uri(suffix))
-            fs = jpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
-            stream = fs.open(jpath)
-            try:
-                data = bytearray()
-                b = stream.read()
-                while b != -1 and len(data) < 4096:
-                    data.append(b)
-                    b = stream.read()
-            finally:
-                stream.close()
-            return bytes(data).decode("utf-8", "replace")
-        except Exception:  # noqa: BLE001 — vanished between probes
-            return None
+        data = self._store.read_bytes(self._lock_uri(suffix), 4096)
+        return None if data is None else data.decode("utf-8", "replace")
 
     def _unlock(
         self,
@@ -568,24 +479,17 @@ class KeyedParquetTable:
         if the file still carries that token (break-by-identity /
         release-by-identity) — a foreign token means another writer
         legitimately holds the lock now, so leave it alone."""
-        import os
-
         if expected_token is not None:
             if self._read_lock_token(suffix) != expected_token:
                 return
-        local = self._local_lock_path(suffix)
-        if local is not None:
-            try:
-                os.remove(local)
-            except FileNotFoundError:
-                pass
-            return
-        jvm = self.spark._jvm
-        jpath = jvm.org.apache.hadoop.fs.Path(self._lock_uri(suffix))
-        fs = jpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        fs.delete(jpath, False)
+        self._store.delete(self._lock_uri(suffix))
 
-    def _break_stale(self, stale_s: float, break_timeout_s: float = 30.0):
+    def _break_stale(
+        self,
+        stale_s: float,
+        break_timeout_s: float = 30.0,
+        suffix: str | None = None,
+    ):
         """Break a crashed writer's stale lock, safely under
         contention: breakers serialize through a short-lived breaker
         meta-lock, and the victim is re-verified (still present, still
@@ -597,66 +501,74 @@ class KeyedParquetTable:
         import time
         import uuid
 
+        brk = (suffix or self._LOCK_SUFFIX) + self._BREAK_SUFFIX
         btoken = uuid.uuid4().hex
         bdeadline = time.monotonic() + break_timeout_s
-        while not self._try_lock(btoken, self._BREAK_SUFFIX):
-            bage = self._lock_age_s(self._BREAK_SUFFIX)
+        while not self._try_lock(btoken, brk):
+            bage = self._store.age_s(self._lock_uri(brk))
             if bage is not None and bage > 15.0:
                 # breaker crashed mid-break (its critical section is
                 # milliseconds): token-matched removal, then re-race
-                dead = self._read_lock_token(self._BREAK_SUFFIX)
+                dead = self._read_lock_token(brk)
                 if dead is not None:
-                    self._unlock(
-                        expected_token=dead, suffix=self._BREAK_SUFFIX
-                    )
+                    self._unlock(expected_token=dead, suffix=brk)
                 continue
             if time.monotonic() > bdeadline:
                 return  # give up; outer loop re-polls or times out
             time.sleep(0.05)
         try:
-            victim = self._read_lock_token()
-            age = self._lock_age_s()
+            victim = self._read_lock_token(suffix)
+            age = self._store.age_s(self._lock_uri(suffix))
             if victim is not None and age is not None and age > stale_s:
-                self._unlock(expected_token=victim)
+                self._unlock(expected_token=victim, suffix=suffix)
         finally:
-            self._unlock(expected_token=btoken, suffix=self._BREAK_SUFFIX)
+            self._unlock(expected_token=btoken, suffix=brk)
 
-    def _write_lock(self, timeout_s: float = 300.0, stale_s: float = 3600.0):
-        """Context manager: acquire the single-writer lock (polling,
+    @_contextmanager
+    def _held(
+        self,
+        suffix: str | None = None,
+        timeout_s: float = 300.0,
+        stale_s: float = 3600.0,
+    ):
+        """Context manager: acquire the lock at ``suffix`` (polling,
         breaking locks older than ``stale_s`` by identity — see the
-        class-level CONCURRENCY INVARIANT note), release on exit.
-        Release is token-verified: if this writer's lock was broken
-        for staleness while the mutation ran, the successor's lock is
-        left untouched."""
-        import contextlib
+        class-level CONCURRENCY INVARIANT note), yield its token,
+        release on exit. Release is token-verified: if this holder's
+        lock was broken for staleness meanwhile, the successor's lock
+        is left untouched. The deadline is checked after every break
+        too: an old lock whose token cannot be read is never deleted,
+        and must not spin this loop forever."""
         import time
         import uuid
 
-        table = self
+        token = uuid.uuid4().hex
+        deadline = time.monotonic() + timeout_s
+        while not self._try_lock(token, suffix):
+            age = self._store.age_s(self._lock_uri(suffix))
+            if age is not None and age > stale_s:
+                # crashed holder: break by identity and re-race
+                self._break_stale(stale_s, suffix=suffix)
+            if time.monotonic() > deadline:
+                raise TimeoutError(
+                    f"timed out waiting for lock {self._lock_uri(suffix)}"
+                )
+            time.sleep(0.05)
+        try:
+            yield token
+        finally:
+            self._unlock(expected_token=token, suffix=suffix)
 
-        @contextlib.contextmanager
-        def _cm():
-            token = uuid.uuid4().hex
-            deadline = time.monotonic() + timeout_s
-            while not table._try_lock(token):
-                age = table._lock_age_s()
-                if age is not None and age > stale_s:
-                    # crashed writer: break by identity and re-race
-                    table._break_stale(stale_s)
-                    continue
-                if time.monotonic() > deadline:
-                    raise TimeoutError(
-                        f"timed out waiting for write lock on {table.path}"
-                    )
-                time.sleep(0.05)
-            table._lock_token = token
+    @_contextmanager
+    def _write_lock(self, timeout_s: float = 300.0, stale_s: float = 3600.0):
+        """The table's single-writer lock (:meth:`_held` at the default
+        suffix); its token is what :meth:`_assert_lock_fresh` checks."""
+        with self._held(None, timeout_s, stale_s) as token:
+            self._lock_token = token
             try:
                 yield
             finally:
-                table._lock_token = None
-                table._unlock(expected_token=token)
-
-        return _cm()
+                self._lock_token = None
 
     def _assert_lock_fresh(self) -> None:
         """Fence the manifest flip against a broken lock (r11 verdict
@@ -723,35 +635,8 @@ class KeyedParquetTable:
         # appends — nothing ever deletes the directory wholesale.
         return self.path.rstrip("/") + "/" + self._SNAPSHOT_NAME
 
-    # URI schemes where objects appear atomically on PUT-complete but
-    # rename is non-atomic copy+delete and create-exclusive needs the
-    # store's conditional-put support (see BASELINE.md, "Commit
-    # protocol store requirements")
-    _OBJECT_STORE_SCHEMES = frozenset({
-        "s3", "s3a", "s3n", "gs", "abfs", "abfss", "oss", "cos",
-        "wasb", "wasbs", "swift", "o3fs",
-    })
-
-    def _is_object_store(self) -> bool:
-        if "://" not in self.path:
-            return False
-        scheme = self.path.split("://", 1)[0].lower()
-        return scheme in self._OBJECT_STORE_SCHEMES
-
-    def _local_path_of(self, uri: str) -> str | None:
-        if "://" not in self.path:
-            return uri
-        if self.path.startswith("file:"):
-            from urllib.parse import urlparse
-
-            return urlparse(uri).path
-        return None
-
     def _ckpt_uri(self, version: int) -> str:
-        return (
-            self.path.rstrip("/")
-            + f"/{self._HISTORY_DIR}/ckpt_v{int(version)}.json"
-        )
+        return f"{self._history_dir_uri()}/ckpt_v{int(version)}.json"
 
     def _read_pointer(self) -> dict | None:
         """The ``_SNAPSHOT`` pointer, or None when there is no table
@@ -915,25 +800,10 @@ class KeyedParquetTable:
     def _read_json(self, uri: str) -> dict | None:
         import json
 
-        local = self._local_path_of(uri)
+        data = self._store.read_bytes(uri)
         try:
-            if local is not None:
-                with open(local, "rb") as f:
-                    return json.loads(f.read().decode())
-            jvm = self.spark._jvm
-            jpath = jvm.org.apache.hadoop.fs.Path(uri)
-            fs = jpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
-            stream = fs.open(jpath)
-            try:
-                data = bytearray()
-                b = stream.read()
-                while b != -1:
-                    data.append(b)
-                    b = stream.read()
-            finally:
-                stream.close()
-            return json.loads(bytes(data).decode())
-        except Exception:  # noqa: BLE001 — missing or unreadable
+            return None if data is None else json.loads(data.decode())
+        except ValueError:  # torn or not JSON
             return None
 
     def _write_snapshot_atomic(self, doc: dict) -> None:
@@ -953,114 +823,12 @@ class KeyedParquetTable:
         commit uses this as its arbitration point — a writer whose
         stale lock was broken can no longer clobber a successor's
         committed delta during the fence→write race window; its
-        delayed write FAILS. Maps to O_EXCL-hardlink on local disk,
-        ``create(path, overwrite=false)`` on Hadoop FS, and the
-        store's conditional-put (S3 If-None-Match, GCS
-        x-goog-if-generation-match, Azure If-None-Match ETag) on
-        object stores — see BASELINE.md "Commit protocol store
-        requirements" for what each backend must provide."""
+        delayed write FAILS. How each store provides it:
+        ``table/store.py``; what each backend must provide: BASELINE.md
+        "Commit protocol store requirements"."""
         import json
-        import os
-        import uuid
 
-        payload = json.dumps(doc).encode()
-        local = self._local_path_of(uri)
-        if local is not None:
-            os.makedirs(os.path.dirname(local), exist_ok=True)
-            tmp = f"{local}.tmp.{uuid.uuid4().hex}"
-            with open(tmp, "wb") as f:
-                f.write(payload)
-                f.flush()
-                os.fsync(f.fileno())
-            if exclusive:
-                # link(2) is atomic create-if-absent WITH content —
-                # unlike O_EXCL+write, the doc appears fully formed
-                try:
-                    os.link(tmp, local)
-                except FileExistsError:
-                    raise
-                finally:
-                    os.unlink(tmp)
-                return
-            os.replace(tmp, local)  # atomic flip
-            return
-        jvm = self.spark._jvm
-        hconf = self.spark._jsc.hadoopConfiguration()
-        jpath = jvm.org.apache.hadoop.fs.Path(uri)
-        fs = jpath.getFileSystem(hconf)
-        if self._is_object_store():
-            # r12 verdict item 2 — rename-less stores: on S3-class
-            # stores a completed single-object PUT is atomic (the
-            # object appears complete-or-not-at-all at close, and
-            # reads are strongly consistent), while EVERY rename is
-            # copy+delete and the delete+rename fallback below opens
-            # a manifest-MISSING window. Writing directly to the
-            # target is therefore strictly stronger here: no rename,
-            # no missing window, readers see the old or the new doc.
-            # (On HDFS/local, create() is visible while streaming, so
-            # those keep the tmp+atomic-rename dance below.) See the
-            # "Commit protocol store requirements" note in BASELINE.md
-            # for the lock-side requirement (conditional-put).
-            try:
-                out = fs.create(jpath, not exclusive)
-            except Exception as exc:  # noqa: BLE001 — disambiguate
-                if exclusive and fs.exists(jpath):
-                    raise FileExistsError(uri) from exc
-                raise
-            self._stream_payload(out, payload)
-            return
-        jtmp = jvm.org.apache.hadoop.fs.Path(f"{uri}.tmp.{uuid.uuid4().hex}")
-        out = fs.create(jtmp, True)
-        self._stream_payload(out, payload)
-        if exclusive:
-            # rename-without-overwrite: fails if the target appeared
-            try:
-                if not fs.rename(jtmp, jpath):
-                    fs.delete(jtmp, False)
-                    raise FileExistsError(uri)
-            except FileExistsError:
-                raise
-            except Exception as exc:  # noqa: BLE001
-                fs.delete(jtmp, False)
-                if fs.exists(jpath):
-                    raise FileExistsError(uri) from exc
-                raise
-            return
-        # ADVICE r7: delete-then-rename leaves a window where a polling
-        # reader sees NO manifest at all. Prefer FileContext.rename with
-        # Options.Rename.OVERWRITE — a single atomic flip on HDFS.
-        # Stores whose FileContext doesn't support overwrite-rename fall
-        # back to delete+rename; readers cover that residual window by
-        # retrying a missing pointer (_read_pointer).
-        try:
-            fctx = jvm.org.apache.hadoop.fs.FileContext.getFileContext(
-                fs.getUri(), hconf
-            )
-            overwrite = getattr(
-                jvm.org.apache.hadoop.fs.Options.Rename, "OVERWRITE"
-            )
-            fctx.rename(jtmp, jpath, overwrite)
-        except Exception:  # noqa: BLE001 — no FileContext overwrite
-            fs.delete(jpath, False)
-            fs.rename(jtmp, jpath)
-
-    @staticmethod
-    def _stream_payload(out, payload: bytes, chunk: int = 1 << 16) -> None:
-        """Write ``payload`` to a Hadoop ``FSDataOutputStream`` in
-        64 KiB slices and close it. Small docs (pointer/delta, the
-        steady state) go in one call; a large doc — a first checkpoint
-        over a 100k-file table is ~10 MB — would otherwise cross py4j
-        as ONE base64-framed command, a measurable single-shot driver
-        stall and peak allocation (ADVICE r13). Chunking bounds both;
-        the visible result is unchanged (the doc appears at close)."""
-        try:
-            if len(payload) <= chunk:
-                out.write(payload)
-            else:
-                for i in range(0, len(payload), chunk):
-                    out.write(payload[i : i + chunk])
-        finally:
-            out.close()
+        self._store.write_atomic(uri, json.dumps(doc).encode(), exclusive)
 
     def _list_data_files(self, dirs: set[str] | None = None) -> list[str]:
         """Relative paths of every data file under the table root
@@ -1077,63 +845,8 @@ class KeyedParquetTable:
     ) -> dict[str, int]:
         """Relative path → byte size for every data file under the
         table root (or only the partition directories in ``dirs``) —
-        one recursive walk. Local paths use os.scandir directly: the
-        py4j RemoteIterator costs a JVM round trip PER
-        FILE (~1–2 ms each — a 1,000-file table spent seconds of every
-        commit/history call in the iterator alone)."""
-        import os
-
-        local = self._local_path_of(self.path)
-        if local is not None:
-            out: dict[str, int] = {}
-            base = local.rstrip("/")
-            roots = (
-                [base]
-                if dirs is None
-                else [os.path.join(base, d) for d in sorted(dirs)]
-            )
-            for root_dir in roots:
-                if not os.path.isdir(root_dir):
-                    continue
-                for dirpath, dirnames, filenames in os.walk(root_dir):
-                    dirnames[:] = [
-                        d for d in dirnames if not d.startswith(("_", "."))
-                    ]
-                    for fn in filenames:
-                        if fn.startswith(("_", ".")):
-                            continue
-                        full = os.path.join(dirpath, fn)
-                        rel = os.path.relpath(full, base)
-                        out[rel] = os.path.getsize(full)
-            return out
-        jvm = self.spark._jvm
-        hconf = self.spark._jsc.hadoopConfiguration()
-        root = jvm.org.apache.hadoop.fs.Path(self.path)
-        fs = root.getFileSystem(hconf)
-        if not fs.exists(root):
-            return {}
-        base = fs.makeQualified(root).toString()
-        jout: dict[str, int] = {}
-        jroots = (
-            [root]
-            if dirs is None
-            else [
-                jvm.org.apache.hadoop.fs.Path(f"{self.path}/{d}")
-                for d in sorted(dirs)
-            ]
-        )
-        for jroot in jroots:
-            if dirs is not None and not fs.exists(jroot):
-                continue
-            it = fs.listFiles(jroot, True)
-            while it.hasNext():
-                st = it.next()
-                p = st.getPath().toString()
-                rel = p[len(base) + 1:]
-                if any(s.startswith(("_", ".")) for s in rel.split("/")):
-                    continue
-                jout[rel] = int(st.getLen())
-        return jout
+        one recursive walk."""
+        return self._store.file_sizes(self.path, dirs)
 
     def _partition_dir_of(self, value) -> str:
         """PartitionKey=<escaped> directory name for a partition
@@ -1149,29 +862,23 @@ class KeyedParquetTable:
         return f"{self.keys[0]}={esc}"
 
     def _delete_rel(self, rel: str) -> None:
-        jvm = self.spark._jvm
-        jpath = jvm.org.apache.hadoop.fs.Path(f"{self.path}/{rel}")
-        fs = jpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        fs.delete(jpath, False)
+        self._store.delete(f"{self.path}/{rel}")
 
-    def _prune_empty_partition_dirs(self) -> None:
-        jvm = self.spark._jvm
-        hconf = self.spark._jsc.hadoopConfiguration()
-        root = jvm.org.apache.hadoop.fs.Path(self.path)
-        fs = root.getFileSystem(hconf)
-        if not fs.exists(root):
-            return
-        prefix = f"{self.keys[0]}="
-        for st in fs.listStatus(root):
-            name = st.getPath().getName()
-            if (
-                st.isDirectory()
-                and name.startswith(prefix)
-                and len(fs.listStatus(st.getPath())) == 0
-            ):
-                fs.delete(st.getPath(), False)
+    def _prune_empty_partition_dirs(self, dirs=None) -> None:
+        """Remove the empty ones among the partition directories
+        ``dirs`` — the directories of the files a commit just deleted —
+        or, with None, among every partition directory (a full root
+        listing: only checkpoint commits and vacuum pay it)."""
+        if dirs is None:
+            prefix = f"{self.keys[0]}="
+            dirs = [
+                n for n in self._store.list_names(self.path)
+                if n.startswith(prefix)
+            ]
+        for d in sorted(dirs):
+            self._store.remove_dir_if_empty(f"{self.path}/{d}")
 
-    def _distributed_file_stats(self, rels: list[str]) -> dict:
+    def _distributed_file_stats(self, rels: list[str], pin: str) -> dict:
         """Per-file row-key min/max/null stats from ONE distributed
         pass over the key column of the named files — the beyond-cap
         twin of :meth:`_file_stats` (data-derived ranges are exact
@@ -1179,18 +886,17 @@ class KeyedParquetTable:
         identical). Files whose key type isn't JSON-plain get no
         entry (never-skip).
 
-        ``pinned=False`` deliberately (ADVICE r11): this runs INSIDE
-        _commit_snapshot, before the new pin is flipped — reading the
-        freshly written files through the OLD pointer's table_schema
-        would break after a type-widening or column-adding commit
-        (exactly the big commits this distributed path exists for).
-        mergeSchema over only the fresh rels is O(batch) and always
-        consistent with what was just written."""
+        ``pin`` is the schema this commit is about to flip (ADVICE
+        r11): this runs INSIDE _commit_snapshot, before the flip, and
+        reading the freshly written files through the OLD pointer's
+        table_schema would break after a type-widening or
+        column-adding commit (exactly the big commits this
+        distributed path exists for)."""
         if len(self.keys) < 2 or not rels:
             return {}
         rk = self.keys[1]
         agg = (
-            self._read_files(self.spark, rels, pinned=False)
+            self._read_files(self.spark, rels, pin=pin)
             .select(
                 F.input_file_name().alias("__f"),
                 F.col(rk).alias("__rk"),
@@ -1238,7 +944,7 @@ class KeyedParquetTable:
         always correct."""
         if len(self.keys) < 2:
             return None  # no row-key column to index
-        local_root = self._local_path_of(self.path.rstrip("/"))
+        local_root = self._store.local_path(self.path.rstrip("/"))
         if local_root is None:
             return None
         try:
@@ -1285,11 +991,11 @@ class KeyedParquetTable:
     # bound); overflow commits simply carry no stats for the new files
     _STATS_FILE_CAP = 4096
 
+    def _history_dir_uri(self) -> str:
+        return self.path.rstrip("/") + "/" + self._HISTORY_DIR
+
     def _history_uri(self, version: int) -> str:
-        return (
-            self.path.rstrip("/")
-            + f"/{self._HISTORY_DIR}/v{int(version)}.json"
-        )
+        return f"{self._history_dir_uri()}/v{int(version)}.json"
 
     def _commit_snapshot(
         self,
@@ -1354,6 +1060,14 @@ class KeyedParquetTable:
             or (len(adds) + len(removes)) * 2 >= len(live) + 1
             or not live
         )
+        # pinned table schema: base ∪ written (written wins); reset on
+        # overwrite
+        table_schema_json = prev["table_schema"]
+        if written_schema is not None:
+            table_schema_json = self._fold_pin(
+                table_schema_json if op != "overwrite" else None,
+                written_schema,
+            )
         # data-skipping index: footer stats for the NEWLY appended
         # files only — driver-side IO, thread-pooled and CAPPED; a
         # commit appending more than the cap takes one distributed
@@ -1371,19 +1085,13 @@ class KeyedParquetTable:
                         add_stats[f] = s
         elif fresh:
             try:
-                add_stats.update(self._distributed_file_stats(fresh))
+                add_stats.update(
+                    self._distributed_file_stats(fresh, table_schema_json)
+                )
             except Exception:  # noqa: BLE001 — absence = never-skip
                 pass
         stats = {f: prev_stats[f] for f in live if f in prev_stats}
         stats.update(add_stats)
-        # pinned table schema: base ∪ written (written wins); reset on
-        # overwrite
-        table_schema_json = prev["table_schema"]
-        if written_schema is not None:
-            table_schema_json = self._fold_pin(
-                table_schema_json if op != "overwrite" else None,
-                written_schema,
-            )
         # lineage token (ADVICE r11): minted once at the table's first
         # commit (or a pre-lineage table's next commit) and carried
         # forever — lets the state cache tell THIS table apart from a
@@ -1422,6 +1130,9 @@ class KeyedParquetTable:
             "add": adds,
             "remove": removes,
             "add_stats": add_stats,
+            # the pin this commit flips: read(version=) and changes()
+            # read this version's files through it
+            "table_schema": table_schema_json,
         }
         # The delta write is the commit's ARBITRATION POINT (r12
         # verdict item 2): create-EXCLUSIVE, so a writer whose stale
@@ -1454,7 +1165,7 @@ class KeyedParquetTable:
             # crash, so the leftover is far older than this floor and
             # reclaim proceeds; the fence keeps two SOUND-lock writers
             # from ever reaching this branch concurrently.
-            age = self._uri_age_s(self._history_uri(version))
+            age = self._store.age_s(self._history_uri(version))
             if age is not None and age < self._RECLAIM_MIN_AGE_S:
                 raise RuntimeError(
                     f"commit conflict on {self.path} v{version}: a"
@@ -1504,8 +1215,11 @@ class KeyedParquetTable:
             ]
         for rel in expired + orphans:
             self._delete_rel(rel)
-        if expired or orphans or removes:
-            self._prune_empty_partition_dirs()
+        if expired or orphans:
+            self._prune_empty_partition_dirs(
+                None if is_ckpt or op == "vacuum"
+                else {f.split("/", 1)[0] for f in expired}
+            )
 
     def vacuum(self, retain_s: float = 0.0) -> None:
         """Delete retired files older than ``retain_s`` (and orphans),
@@ -1543,27 +1257,10 @@ class KeyedParquetTable:
         readable) from the immutable ``_history`` manifests —
         ``readable`` says whether every file of that version is still
         on disk (time-travel-able right now)."""
-        import os
-
         # refuse a torn pointer up front: below, an unresolvable
         # version is skipped, and a torn one must not read as expired
         self._read_pointer()
-        hist_uri = self.path.rstrip("/") + "/" + self._HISTORY_DIR
-        local = self._local_path_of(hist_uri)
-        if local is not None:
-            try:
-                names = sorted(os.listdir(local))
-            except FileNotFoundError:
-                names = []
-        else:
-            jvm = self.spark._jvm
-            jpath = jvm.org.apache.hadoop.fs.Path(hist_uri)
-            fs = jpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
-            names = (
-                [st.getPath().getName() for st in fs.listStatus(jpath)]
-                if fs.exists(jpath)
-                else []
-            )
+        names = self._store.list_names(self._history_dir_uri())
         on_disk = set(self._list_data_files())
         versions = sorted(
             int(n[1:-5])
@@ -1663,40 +1360,35 @@ class KeyedParquetTable:
             return self._empty_read(self.spark)
         return self._read_files(self.spark, files)
 
-    def _empty_read(self, sess) -> DataFrame:
+    def _empty_read(self, sess, pin: str | None = None) -> DataFrame:
         """A zero-row frame typed as :meth:`read` types the table —
         data columns in pin order, the partition column last, all
-        nullable — built from the pinned schema as a local relation.
+        nullable — built from the pinned schema (``pin``, default the
+        current one) as a local relation.
         A filtered ``read()`` returns the same nothing, but first
         builds a file index over every live file, which past 32 files
         is a "Listing leaf files" Spark job."""
-        pin = self._pinned_struct()
+        st = self._pinned_struct(pin)
         pk = self.keys[0]
-        fields = [f for f in pin.fields if f.name != pk] + [pin[pk]]
+        fields = [f for f in st.fields if f.name != pk] + [st[pk]]
         return local_relation(sess, _nullable(T.StructType(fields)))
-
-    def _rel_exists(self, rel: str) -> bool:
-        import os
-
-        local = self._local_path_of(f"{self.path}/{rel}")
-        if local is not None:
-            return os.path.exists(local)
-        jvm = self.spark._jvm
-        jpath = jvm.org.apache.hadoop.fs.Path(f"{self.path}/{rel}")
-        fs = jpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        return bool(fs.exists(jpath))
 
     def _version_doc(self, version: int) -> dict:
         """The state of committed ``version`` ({version, files, ts,
-        op}), validated readable. Validation is DIFF-cheap: a file of
-        the CURRENT snapshot is on disk by the commit invariant, so
-        only the old version's files that have since been superseded
-        need an existence probe — O(version diff) stat calls, never a
-        full table walk."""
+        op, table_schema}), validated readable. Validation is
+        DIFF-cheap: a file of the CURRENT snapshot is on disk by the
+        commit invariant, so only the old version's files that have
+        since been superseded need an existence probe — O(version
+        diff) stat calls, never a full table walk."""
         doc = self._read_json(self._history_uri(version))
         if doc is None:
             raise ValueError(
                 f"no committed version {version} at {self.path}"
+            )
+        if not doc.get("table_schema"):
+            raise ValueError(
+                f"version {version} of {self.path} records no pinned"
+                " table_schema — refusing to read it"
             )
         state = self._state_at(int(version), cache=False)
         doc = {**doc, "files": list(state["files"])}
@@ -1705,7 +1397,8 @@ class KeyedParquetTable:
             missing = [
                 f
                 for f in doc["files"]
-                if f not in cur_live and not self._rel_exists(f)
+                if f not in cur_live
+                and not self._store.exists(f"{self.path}/{f}")
             ]
             if missing:
                 raise ValueError(
@@ -1717,87 +1410,54 @@ class KeyedParquetTable:
                 )
         return doc
 
-    def _read_touched(self, sess, parts, part_type: str | None = None) -> DataFrame:
-        """Manifest-pinned read of the partitions whose VALUES are in
-        ``parts`` (None allowed) through session ``sess`` — the
-        executed inputFiles are exactly the touched partitions' live
-        files, by file-list construction rather than by trusting
-        catalyst pruning over the full listing. This is the read the
-        partition-scoped verbs (delete_by_keys,
-        upsert_replace_partitions) use, which keeps their planning
-        cost proportional to the touched set at any table size and
-        makes "only touched buckets were read" directly assertable
-        (tests/test_annindex.py refresh accounting).
-
-        ``part_type``: the caller's dtype for the partition column
-        (simpleString). Directory-name inference over a SUBSET of
-        partitions can disagree with the full table — an all-NULL
-        touched set infers unreadable VOID, a numeric-looking subset
-        of a string-keyed table infers long — so the verbs pass the
-        incoming frame's own key dtype and the slice is cast to it,
-        which is exactly the type the downstream union/anti-join
-        needs."""
-        vals = list(parts)
-        if vals and all(v is None for v in vals):
-            # only the NULL partition is touched: no directory value
-            # to infer a type from (Spark raises on VOID partition
-            # columns) — prune via the full-listing plan instead; the
-            # executed scan still reads only the null dir's files
-            return self._read_with(sess).filter(
-                F.col(self.keys[0]).isNull()
-            )
-        dirs = {self._partition_dir_of(v) for v in vals}
-        files = [
-            f for f in self._require_snapshot()["files"]
-            if f.split("/", 1)[0] in dirs
-        ]
-        if not files:
-            return self._empty_read(sess)
-        df = self._read_files(sess, files)
-        if part_type and dict(df.dtypes).get(self.keys[0]) != part_type:
-            df = df.withColumn(
-                self.keys[0], F.col(self.keys[0]).cast(part_type)
-            )
-        return df
-
-    def _pinned_struct(self) -> T.StructType:
-        """The pointer's pinned table schema (every commit pins one)."""
+    def _pinned_struct(self, pin: str | None = None) -> T.StructType:
+        """The schema ``pin`` (a version's pinned schema JSON), by
+        default the pointer's — every commit pins one."""
         import json as _json
 
-        doc = self._read_pointer()
-        if doc is None:
-            raise self._no_table()
-        return T.StructType.fromJson(_json.loads(doc["table_schema"]))
+        if pin is None:
+            doc = self._read_pointer()
+            if doc is None:
+                raise self._no_table()
+            pin = doc["table_schema"]
+        return T.StructType.fromJson(_json.loads(pin))
 
     def _read_files(
-        self, sess, files: Sequence[str], pinned: bool = True
+        self, sess, files: Sequence[str], pin: str | None = None
     ) -> DataFrame:
-        """Explicit-file read. CURRENT-state reads (``pinned=True``)
-        plan with the manifest's pinned table schema: no footer is
-        touched at planning time — a mergeSchema read runs a
-        DISTRIBUTED footer-merge job per read, O(table files) work
-        that at 10⁶ COW-sized files dwarfs the query itself. The
-        parquet reader widens older narrow files to the pinned type
-        (Spark 4 type-widening) and returns typed NULL for columns a
-        file predates — the same semantics mergeSchema gives.
-        TIME-TRAVEL / CDC reads pass ``pinned=False``: an old version
-        may carry columns since dropped by an overwrite, which the
-        current pin would silently hide."""
-        reader = sess.read.option("basePath", self.path)
-        pin = self._pinned_struct() if pinned else None
-        if pin is not None:
-            reader = reader.schema(pin)
-        else:
-            reader = reader.option("mergeSchema", "true")
-        return reader.parquet(*[f"{self.path}/{f}" for f in files])
+        """Explicit-file read through a pinned table schema: ``pin``,
+        the schema a version's commit flipped, by default the current
+        one. No footer is touched at planning time — a mergeSchema
+        read runs a DISTRIBUTED footer-merge job per read, O(table
+        files) work that at 10⁶ COW-sized files dwarfs the query
+        itself, and types a partition column from directory names
+        alone. The parquet reader widens older narrow files to the
+        pinned type (Spark 4 type-widening) and returns typed NULL for
+        columns a file predates. Time travel and CDC pass their
+        version's pin, so an old version keeps the columns and types
+        it was committed with, even after an overwrite dropped or a
+        later upsert widened them."""
+        return (
+            sess.read.option("basePath", self.path)
+            .schema(self._pinned_struct(pin))
+            .parquet(*[f"{self.path}/{f}" for f in files])
+        )
 
     def _read_rels(
         self, sess, rels: Sequence[str], part_type: str | None = None
     ) -> DataFrame:
-        """Explicit-file read with the partition column cast to the
-        caller's dtype — the file-level twin of :meth:`_read_touched`
-        (subset directory inference can disagree with the full
-        table)."""
+        """Manifest-pinned read of exactly the live files ``rels``
+        through session ``sess``, with the partition column cast to
+        the caller's dtype (simpleString). The partition-scoped verbs
+        (delete_by_keys, upsert_replace_partitions) read the touched
+        partitions' live files this way — by file-list construction
+        rather than by trusting catalyst pruning over the full listing
+        — which keeps their planning cost proportional to the touched
+        set at any table size and makes "only touched buckets were
+        read" directly assertable (tests/test_annindex.py refresh
+        accounting). The pin types the partition column as the table
+        does, while the verbs' union and anti-join against the
+        incoming frame want that frame's own key dtype."""
         df = self._read_files(sess, rels)
         if part_type and dict(df.dtypes).get(self.keys[0]) != part_type:
             df = df.withColumn(
@@ -2064,37 +1724,16 @@ class KeyedParquetTable:
         fa, fb = set(doc_a["files"]), set(doc_b["files"])
         old_only, new_only = sorted(fa - fb), sorted(fb - fa)
         if not old_only and not new_only:
-            return (
-                self._read_with(self.spark)
-                .withColumn("change_type", F.lit(""))
-                .filter(F.lit(False))
-            )
-        # CDC reads UNPINNED (mergeSchema): the old side may carry
-        # columns the current pin no longer has
-        old_df = (
-            self._read_files(self.spark, old_only, pinned=False)
-            if old_only
-            else None
-        )
-        new_df = (
-            self._read_files(self.spark, new_only, pinned=False)
-            if new_only
-            else None
-        )
-        if old_df is None:
-            old_df = new_df.filter(F.lit(False))
-        if new_df is None:
-            new_df = old_df.filter(F.lit(False))
-        # a side read only from the NULL partition directory infers a
-        # VOID partition column, whose null-safe join key never matches
-        # (every unchanged NULL-partition row read as delete + insert):
-        # type it as the table pins it
-        pk = self.keys[0]
-        pk_type = self._pinned_struct()[pk].dataType
+            return self._empty_read(
+                self.spark, doc_b["table_schema"]
+            ).withColumn("change_type", F.lit(""))
+        # each side reads through its own version's pin: the old side
+        # may carry columns the newer pin no longer has
         old_df, new_df = (
-            df.withColumn(pk, F.col(pk).cast(pk_type))
-            if dict(df.dtypes)[pk] == "void" else df
-            for df in (old_df, new_df)
+            self._read_files(self.spark, rels, pin=doc["table_schema"])
+            if rels
+            else self._empty_read(self.spark, doc["table_schema"])
+            for rels, doc in ((old_only, doc_a), (new_only, doc_b))
         )
         # schema-evolution alignment: a column only one side has reads
         # back as typed NULL on the other
@@ -2172,10 +1811,10 @@ class KeyedParquetTable:
         if version is not None:
             doc = self._version_doc(version)
             if not doc["files"]:
-                return self._empty_read(sess)
-            # time travel reads UNPINNED: the old version may carry
-            # columns an overwrite has since dropped from the pin
-            return self._read_files(sess, doc["files"], pinned=False)
+                return self._empty_read(sess, doc["table_schema"])
+            return self._read_files(
+                sess, doc["files"], pin=doc["table_schema"]
+            )
         # the manifest pins the exact committed file set and the
         # schema; basePath keeps directory-derived partition columns
         # and pruning. A fully-emptied table is a typed empty frame —
@@ -2188,22 +1827,10 @@ class KeyedParquetTable:
 
     def _has_history(self) -> bool:
         """True iff at least one committed _history manifest exists."""
-        import os
-
-        hist_uri = self.path.rstrip("/") + "/" + self._HISTORY_DIR
-        local = self._local_path_of(hist_uri)
-        if local is not None:
-            try:
-                return any(
-                    n.startswith("v") and n.endswith(".json")
-                    for n in os.listdir(local)
-                )
-            except FileNotFoundError:
-                return False
-        jvm = self.spark._jvm
-        jpath = jvm.org.apache.hadoop.fs.Path(hist_uri)
-        fs = jpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        return bool(fs.exists(jpath))
+        return any(
+            n.startswith("v") and n.endswith(".json")
+            for n in self._store.list_names(self._history_dir_uri())
+        )
 
     def overwrite(self, df: DataFrame) -> None:
         with self._write_lock():
@@ -2284,28 +1911,6 @@ class KeyedParquetTable:
         )
         return not self.read().filter(pred).limit(1).collect()
 
-    def _partition_path(self, partition_value: str | None):
-        """Hadoop Path of one PartitionKey=<v> directory (works on any
-        Hadoop-compatible FS, not just local disk).
-
-        Escaping MUST byte-match what the writer produced, so delegate
-        to Spark's own ExternalCatalogUtils.escapePathName (spaces and
-        commas stay literal; only control chars and a specific symbol
-        set are %XX-escaped — a urllib-style quote targets the wrong
-        directory for e.g. 'user 1'). A NULL partition value lands in
-        Hive's __HIVE_DEFAULT_PARTITION__ directory."""
-        jvm = self.spark._jvm
-        if partition_value is None:
-            escaped = "__HIVE_DEFAULT_PARTITION__"
-        else:
-            escaped = (
-                jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-                .escapePathName(str(partition_value))
-            )
-        return jvm.org.apache.hadoop.fs.Path(
-            f"{self.path}/{self.keys[0]}={escaped}"
-        )
-
     def _empty_partition_as_null(self, df: DataFrame) -> DataFrame:
         """``df`` with an empty-string partition value mapped to NULL.
         Spark's writer files ``""`` under the NULL partition directory,
@@ -2327,7 +1932,7 @@ class KeyedParquetTable:
         if (
             n_rows > _ARROW_MAX_ROWS
             or len(self.keys) != 2
-            or self._local_path_of(self.path) is None
+            or self._store.local_path(self.path) is None
         ):
             return False
         pinned = {
@@ -2394,7 +1999,8 @@ class KeyedParquetTable:
             batch.select(*self.keys), parts, has_null=has_null,
             collected=collected,
         )
-        stats = self._require_snapshot()["stats"]
+        snap = self._require_snapshot()
+        stats = snap["stats"]
         if (
             collected is not None
             and split is not None
@@ -2407,21 +2013,14 @@ class KeyedParquetTable:
                 op, dirs, hit=split[0],
             )
             return
-        null_dir = self._partition_dir_of(None)
-        if split and split[0] and all(
-            f.split("/", 1)[0] == null_dir for f in split[0]
-        ):
-            # a subset read of the NULL directory alone infers an
-            # unusable VOID partition column: read the whole touched
-            # partitions instead (NULL keys handled in _read_touched)
-            split = None
-        part_type = dict(batch.dtypes)[pk]
-        if split is None:
-            old = self._read_touched(sess, parts, part_type=part_type)
-        elif split[0]:
-            old = self._read_rels(sess, split[0], part_type=part_type)
-        else:
-            old = None  # no live file can hold a batch key
+        rels = split[0] if split is not None else [
+            f for f in snap["files"] if f.split("/", 1)[0] in dirs
+        ]
+        # no rels: no live file can hold a batch key
+        old = (
+            self._read_rels(sess, rels, dict(batch.dtypes)[pk])
+            if rels else None
+        )
         # lazy on purpose: the append is each plan's ONLY consumer,
         # and its input files stay live until the commit after the
         # write — no pin needed. A delete with nothing to drop still
@@ -2481,7 +2080,7 @@ class KeyedParquetTable:
                 schema=schema,
             )
 
-        root = self._local_path_of(self.path.rstrip("/"))
+        root = self._store.local_path(self.path.rstrip("/"))
         pks = batch.column(pk).to_pylist()
         dir_of = {v: self._partition_dir_of(v) for v in set(pks)}
         take: dict[str, list[int]] = {d: [] for d in dir_of.values()}
@@ -3089,15 +2688,8 @@ class KeyedParquetTable:
         import re
 
         with self._write_lock():
-            hist_uri = self.path.rstrip("/") + "/" + self._HISTORY_DIR
-            jvm = self.spark._jvm
-            jpath = jvm.org.apache.hadoop.fs.Path(hist_uri)
-            fs = jpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
-            if not fs.exists(jpath):
-                return 0
             versions, ckpts = [], []
-            for st in fs.listStatus(jpath):
-                name = st.getPath().getName()
+            for name in self._store.list_names(self._history_dir_uri()):
                 m = re.fullmatch(r"v(\d+)\.json", name)
                 if m:
                     versions.append(int(m.group(1)))
@@ -3142,19 +2734,13 @@ class KeyedParquetTable:
                 )
                 ptr_ckpts.append(int(horizon))
             for v in drop:
-                fs.delete(
-                    jvm.org.apache.hadoop.fs.Path(self._history_uri(v)),
-                    False,
-                )
+                self._store.delete(self._history_uri(v))
             live_ckpts = sorted(c for c in set(ptr_ckpts) if c >= horizon)
             # reap every on-disk checkpoint that is not live:
             # referenced-but-below-horizon (their deltas are gone) AND
             # never-referenced orphans
             for c in set(ckpts) - set(live_ckpts):
-                fs.delete(
-                    jvm.org.apache.hadoop.fs.Path(self._ckpt_uri(c)),
-                    False,
-                )
+                self._store.delete(self._ckpt_uri(c))
             if live_ckpts != sorted(int(c) for c in pointer["checkpoints"]):
                 self._write_snapshot_atomic(
                     {**pointer, "checkpoints": live_ckpts}
@@ -3206,8 +2792,8 @@ class KeyedParquetTable:
         # dtype alignment BEFORE the split/append decision (ADVICE r10,
         # high): a batch whose column dtype drifted (int vs stored
         # bigint) appended verbatim would commit mixed-type files and
-        # poison every later mergeSchema read (CANNOT_MERGE_SCHEMAS on
-        # Spark 4.1). Losslessly upcastable drift is cast to the stored
+        # poison later reads (Spark 4.1 refuses to merge the mixed
+        # footers: CANNOT_MERGE_SCHEMAS). Losslessly upcastable drift is cast to the stored
         # type here; WIDER / incompatible drift rewrites the touched
         # partitions through unionByName's coercion at the widened type.
         aligned = self._align_for_append(new)

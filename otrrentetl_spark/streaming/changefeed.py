@@ -19,13 +19,13 @@ returns), exactly-once when the sink is idempotent on
 from __future__ import annotations
 
 import json
-import os
 import time
-import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from otrrentetl_spark.table.store import store_for
 
 
 class ChangeFeed:
@@ -82,16 +82,9 @@ class ChangeFeed:
             return None
 
     def _write_checkpoint(self, version: int) -> None:
-        os.makedirs(
-            os.path.dirname(os.path.abspath(self.checkpoint_path)),
-            exist_ok=True,
+        store_for(self.table.spark, self.checkpoint_path).write_atomic(
+            self.checkpoint_path, json.dumps({"version": int(version)}).encode()
         )
-        tmp = f"{self.checkpoint_path}.tmp.{uuid.uuid4().hex}"
-        with open(tmp, "wb") as f:
-            f.write(json.dumps({"version": int(version)}).encode())
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self.checkpoint_path)  # atomic flip
 
     # ------------------------------------------------------------ poll
     def poll(

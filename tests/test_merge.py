@@ -2312,10 +2312,8 @@ def _typed(spark, rows):
 
 
 def _typed_state(df):
-    # time travel and the change feed read unpinned, where the
-    # partition column comes back as directory text
     return sorted(tuple(r) for r in df.select(
-        F.col("PartitionKey").cast("long"), "RowKey", "ts", "amount", "v"
+        "PartitionKey", "RowKey", "ts", "amount", "v"
     ).collect())
 
 
@@ -2369,12 +2367,13 @@ def test_arrow_path_typed_round_trip(spark, tmp_path, monkeypatch, jobs_in):
     assert _typed_state(t.read()) == want()
     assert len(t._lookup_files(1, 6)) == 1
     assert _typed_state(t.lookup(1, 6)) == _typed_state(_typed(spark, [(1, 6, 1)]))
+    assert t.read(version=v1).dtypes == dtypes
     assert _typed_state(t.read(version=v1)) == _typed_state(
         _typed(spark, [(pk, rk, 0) for pk in (1, 2) for rk in range(10)])
     )
     feed = t.changes(v1, v3, include_preimage=True)
     kinds = sorted(
-        (int(r.PartitionKey), r.RowKey, r.change_type) for r in feed.collect()
+        (r.PartitionKey, r.RowKey, r.change_type) for r in feed.collect()
     )
     assert kinds == sorted(
         [(1, k, c) for k in (5, 6, 7) for c in ("update", "update_preimage")]
@@ -2452,3 +2451,66 @@ def test_changes_match_rows_of_the_null_partition(spark, tmp_path):
     t.upsert_replace_partitions(_df(spark, [(None, "1", "a", 1), (None, "2", "B", 2)]))
     got = [(r.PartitionKey, r.RowKey, r.val, r.change_type) for r in t.changes(1, 2).collect()]
     assert got == [(None, "2", "B", "update")]
+
+
+def test_version_reads_keep_pinned_long_partition_type(spark, tmp_path):
+    """Time travel, the change feed with pre-images and ChangeFeed's
+    initial snapshot return an integral partition column as the pin
+    types it (bigint), not as directory text — also for a side read
+    only from the NULL partition directory."""
+    from otrrentetl_spark.streaming.changefeed import ChangeFeed
+
+    schema = "PartitionKey long, RowKey string, val string, n long"
+    t = merge.KeyedParquetTable(spark, str(tmp_path / "longpk"), KEYS)
+    t.retain_stale_s = 3600.0
+    t.overwrite(spark.createDataFrame(
+        [(1, "a", "x", 1), (2, "b", "y", 2), (None, "c", "z", 3)], schema
+    ))
+    t.upsert_replace_partitions(spark.createDataFrame(
+        [(1, "a", "x2", 10), (None, "c", "z2", 30), (3, "d", "w", 4)], schema
+    ))
+
+    def pk_type(df):
+        return dict(df.dtypes)["PartitionKey"]
+
+    assert pk_type(t.read()) == "bigint"
+    assert pk_type(t.read(version=1)) == "bigint"
+    assert sorted(
+        ((r.PartitionKey, r.RowKey) for r in t.read(version=1).collect()),
+        key=str,
+    ) == [(1, "a"), (2, "b"), (None, "c")]
+    feed = t.changes(1, 2, include_preimage=True)
+    assert pk_type(feed) == "bigint"
+    assert sorted(
+        (str(r.PartitionKey), r.RowKey, r.change_type) for r in feed.collect()
+    ) == sorted([
+        ("1", "a", "update"), ("1", "a", "update_preimage"),
+        ("None", "c", "update"), ("None", "c", "update_preimage"),
+        ("3", "d", "insert"),
+    ])
+    got = []
+    ChangeFeed(t, str(tmp_path / "ckpt.json"), initial="snapshot").poll(
+        lambda df, a, b: got.append((pk_type(df), df.count()))
+    )
+    assert got == [("bigint", 4)]
+
+
+def test_time_travel_reads_its_version_pin_after_widening(spark, tmp_path):
+    """A later upsert that widened a column (int → bigint) leaves
+    read(version=1) typed as version 1 pinned it, while the current
+    read and the change feed carry the widened type."""
+    t = merge.KeyedParquetTable(spark, str(tmp_path / "widen"), KEYS)
+    t.retain_stale_s = 3600.0
+    t.overwrite(spark.createDataFrame(
+        [("p", "1", 1), ("p", "2", 2)], "PartitionKey string, RowKey string, n int"
+    ))
+    t.upsert_replace_partitions(spark.createDataFrame(
+        [("p", "2", 1 << 40)], "PartitionKey string, RowKey string, n bigint"
+    ))
+    assert dict(t.read().dtypes)["n"] == "bigint"
+    v1 = t.read(version=1)
+    assert dict(v1.dtypes)["n"] == "int"
+    assert sorted((r.RowKey, r.n) for r in v1.collect()) == [("1", 1), ("2", 2)]
+    assert sorted(
+        (r.RowKey, r.n, r.change_type) for r in t.changes(1, 2).collect()
+    ) == [("2", 1 << 40, "update")]

@@ -1,13 +1,14 @@
 """Rename-less-store commit/lock protocol proof (r12 verdict item 2).
 
-The manifest protocol assumes two FS primitives: atomic
-overwrite-rename (`_write_json_atomic`) and atomic create-exclusive
-(`_try_lock`, and since r13 the delta-doc commit itself). Local disk
-and HDFS provide both; S3-class object stores provide NEITHER rename
-atomicity (copy+delete) nor — without conditional-put — create
-exclusivity. These tests simulate the weakened semantics on local
-disk and drive concurrent writers plus a polling reader through
-mutate/commit cycles:
+The manifest protocol assumes two store primitives
+(`otrrentetl_spark/table/store.py`): atomic overwrite-rename
+(`write_atomic`) and atomic create-exclusive (`create_exclusive` for
+the lock, and since r13 `write_atomic(exclusive=True)` for the
+delta-doc commit itself). Local disk and HDFS provide both; S3-class
+object stores provide NEITHER rename atomicity (copy+delete) nor —
+without conditional-put — create exclusivity. These tests simulate
+the weakened semantics with fake local stores and drive concurrent
+writers plus a polling reader through mutate/commit cycles:
 
 - `delete+rename` manifest flips (the pre-r13 object-store fallback)
   open a manifest-MISSING window → the reader-side retry must cover
@@ -31,6 +32,7 @@ import time
 from pyspark.sql import functions as F  # noqa: F401 (parity with peers)
 
 from otrrentetl_spark.operators import merge
+from otrrentetl_spark.table.store import LocalStore
 
 KEYS = ("PartitionKey", "RowKey")
 SCHEMA = "PartitionKey string, RowKey string, val string, n long"
@@ -40,6 +42,41 @@ def _df(spark, rows):
     return spark.createDataFrame(rows, SCHEMA)
 
 
+class _DeleteRenameStore(LocalStore):
+    """A store without overwrite-rename: every pointer flip becomes
+    delete → (visibility gap) → appear atomically (object PUT) — the
+    missing-manifest window."""
+
+    def write_atomic(self, uri, payload, exclusive=False):
+        name = merge.KeyedParquetTable._SNAPSHOT_NAME
+        if exclusive or not uri.endswith(name):
+            return super().write_atomic(uri, payload, exclusive)
+        local = self.local_path(uri)
+        tmp = f"{local}.gaptmp"
+        with open(tmp, "wb") as f:
+            f.write(payload)
+        if os.path.exists(local):
+            os.remove(local)
+        time.sleep(0.08)
+        os.rename(tmp, local)
+
+
+class _CheckThenCreateStore(LocalStore):
+    """A store without conditional-put: create-exclusive degrades to
+    check-then-act with a widened window, so both writers can
+    'acquire' a lock and the file holds the LAST writer's token."""
+
+    def create_exclusive(self, uri, data):
+        local = self.local_path(uri)
+        if os.path.exists(local):
+            return False
+        time.sleep(0.01)
+        os.makedirs(os.path.dirname(local), exist_ok=True)
+        with open(local, "wb") as f:
+            f.write(data)
+        return True
+
+
 def test_reader_retry_covers_delete_rename_manifest_gap(
     spark, tmp_path, monkeypatch
 ):
@@ -47,34 +84,13 @@ def test_reader_retry_covers_delete_rename_manifest_gap(
     becomes delete → (visibility gap) → appear. A polling reader must
     never observe a missing manifest, a torn doc, or a file list
     mixing retired and fresh files — only complete committed states."""
+    monkeypatch.setattr(
+        merge, "store_for", lambda spark, path: _DeleteRenameStore()
+    )
     path = str(tmp_path / "gap")
     t = merge.KeyedParquetTable(spark, path, KEYS)
     t.retain_stale_s = 3600.0  # keep superseded files for in-flight reads
     t.overwrite(_df(spark, [("p", f"{i:03d}", "base", i) for i in range(10)]))
-
-    real_write = merge.KeyedParquetTable._write_json_atomic
-
-    def gap_write(self, uri, doc, exclusive=False):
-        local = self._local_path_of(uri)
-        if (
-            exclusive
-            or local is None
-            or not uri.endswith(self._SNAPSHOT_NAME)
-        ):
-            return real_write(self, uri, doc, exclusive=exclusive)
-        # delete+rename semantics: target vanishes, gap, then appears
-        # atomically (object PUT) — the missing-manifest window
-        tmp = f"{local}.gaptmp"
-        with open(tmp, "wb") as f:
-            f.write(json.dumps(doc).encode())
-        if os.path.exists(local):
-            os.remove(local)
-        time.sleep(0.08)
-        os.rename(tmp, local)
-
-    monkeypatch.setattr(
-        merge.KeyedParquetTable, "_write_json_atomic", gap_write
-    )
 
     n_commits = 6
     writer_err: list[BaseException] = []
@@ -205,31 +221,19 @@ def test_racy_lock_storm_never_silently_loses_a_commit(
     and have its rows in the final state, or raise. Success-then-lost
     is the one forbidden outcome; the create-exclusive delta commit is
     what forbids it."""
+    monkeypatch.setattr(
+        merge, "store_for", lambda spark, path: _CheckThenCreateStore()
+    )
     path = str(tmp_path / "storm")
     seed_t = merge.KeyedParquetTable(spark, path, KEYS)
     seed_t.overwrite(_df(spark, [("seed", "000", "base", 0)]))
 
-    real_try = merge.KeyedParquetTable._try_lock
     real_write = merge.KeyedParquetTable._write_json_atomic
-
-    def racy_try_lock(self, token, suffix=None):
-        # check-then-act with a widened window: both writers can
-        # 'acquire'; the lock file holds the LAST writer's token
-        local = self._local_lock_path(suffix)
-        assert local is not None
-        if os.path.exists(local):
-            return False
-        time.sleep(0.01)
-        os.makedirs(os.path.dirname(local), exist_ok=True)
-        with open(local, "wb") as f:
-            f.write(token.encode())
-        return True
 
     def jitter_write(self, uri, doc, exclusive=False):
         time.sleep(0.005)
         return real_write(self, uri, doc, exclusive=exclusive)
 
-    monkeypatch.setattr(merge.KeyedParquetTable, "_try_lock", racy_try_lock)
     monkeypatch.setattr(
         merge.KeyedParquetTable, "_write_json_atomic", jitter_write
     )

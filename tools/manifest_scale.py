@@ -94,6 +94,7 @@ def build_fixture(spark, path: str, n_files: int):
             "add": fakes,
             "remove": [],
             "add_stats": fake_stats,
+            "table_schema": snap["table_schema"],
         },
     )
     t._write_json_atomic(
