@@ -25,7 +25,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from otrrentetl_spark.table.store import store_for
+from otrrentetl_spark.table.store import LocalStore
 
 
 class ChangeFeed:
@@ -82,7 +82,8 @@ class ChangeFeed:
             return None
 
     def _write_checkpoint(self, version: int) -> None:
-        store_for(self.table.spark, self.checkpoint_path).write_atomic(
+        # a local file, as _read_checkpoint reads it
+        LocalStore().write_atomic(
             self.checkpoint_path, json.dumps({"version": int(version)}).encode()
         )
 
