@@ -69,6 +69,7 @@ from otrrentetl_spark.operators.similarity import (
     lsh_signature,
     norm_fold,
 )
+from otrrentetl_spark.session import local_relation
 
 _META_NAME = "_ANN_META.json"
 _CENTROIDS_NAME = "_ANN_CENTROIDS.parquet"
@@ -115,6 +116,14 @@ def _cos_stored(v, qv, vn, qn):
 # measured as a ~700 GB spill, then a heap OOM, at 500k×4096.)
 _EXPR_ASSIGN_MAX = 64
 
+# IVF knn_join_bulk scores on the driver up to this many multiply-adds
+# ((query, probed row) pairs × dim). Wall s, driver vs Spark, 4 cores,
+# 100k-row index, nprobe 4 of 16, k 10, at 1e5/1e6/1e7/1e8 pairs: 16-d
+# 0.23/0.26/0.76/6.0 vs 1.5/2.7/19.7/213, 64-d 0.26/0.41/1.55/13.3 vs
+# 1.7/2.9/21.6/222. The driver never lost, so memory sets the bound: at
+# 8M the Python driver's RSS grew <= 194 MB (64-d; 145 MB at 768-d).
+_DRIVER_MAX_MACS = 8_000_000
+
 _LOG = logging.getLogger(__name__)
 
 
@@ -151,11 +160,71 @@ _TELEMETRY_NAME = "_ANN_TELEMETRY.json"
 
 
 def _check_qid_col(qid_col: str) -> None:
-    if qid_col == "vec_id":
+    if qid_col in ("vec_id", "cosine_sim", "rk"):
         raise ValueError(
-            "qid_col='vec_id' collides with the index id output"
-            " column; alias the query id first"
+            f"qid_col={qid_col!r} collides with an output column"
+            " (vec_id, cosine_sim, rk); alias the query id first"
         )
+
+
+def _dense(col, dim: int) -> np.ndarray | None:
+    """An Arrow list column as an (n, dim) float64 matrix, or None
+    unless every list holds ``dim`` non-NULL, finite elements."""
+    import pyarrow.compute as pc
+
+    # a NULL list's length and a NULL element read as NaN
+    lengths = pc.list_value_length(col).to_numpy(zero_copy_only=False)
+    if not (lengths == dim).all():
+        return None
+    flat = pc.list_flatten(col).to_numpy(zero_copy_only=False)
+    mat = flat.astype(np.float64, copy=False).reshape(-1, dim)
+    return mat if np.isfinite(mat).all() else None
+
+
+def _parquet_batches(paths: list[str], rows: int, columns: list[str]):
+    """``columns`` of each parquet file, ``rows`` rows per batch."""
+    import pyarrow.parquet as pq
+
+    for path in paths:
+        with pq.ParquetFile(path) as pf:
+            yield from pf.iter_batches(rows, columns=columns)
+
+
+def _fold_dot(a: np.ndarray, bt: np.ndarray) -> np.ndarray:
+    """Dot products of the rows of ``a`` with the columns of ``bt``:
+    ``_dot``'s ``acc + x*y`` fold, vectorized over the pairs only."""
+    acc = np.zeros((a.shape[0], bt.shape[1]))
+    prod = np.empty_like(acc)
+    for x, y in zip(a.T, bt):
+        np.multiply(x[:, None], y, out=prod)
+        acc += prod
+    return acc
+
+
+def _nearest(
+    qmat: np.ndarray, cids: np.ndarray, cmat: np.ndarray, nprobe: int
+) -> np.ndarray:
+    """Each query row's ``nprobe`` nearest centroids (ids ``cids``,
+    rows of ``cmat``) by (L2², cid), as the bulk join's ``array_sort``
+    of ``_l2sq_mul``: the same fold, vectorized over query × centroid."""
+    out = np.empty((len(qmat), min(nprobe, len(cids))), np.int64)
+    step = max(1, (1 << 20) // len(cids))
+    for s in range(0, len(qmat), step):
+        acc = np.zeros((len(qmat[s : s + step]), len(cids)))
+        for j in range(cmat.shape[1]):
+            d = qmat[s : s + step, j, None] - cmat[None, :, j]
+            acc += d * d
+        tie = np.broadcast_to(cids, acc.shape)
+        out[s : s + step] = cids[np.lexsort((tie, acc))[:, :nprobe]]
+    return out
+
+
+def _round6(spark: SparkSession, xs: list[float]) -> list[float]:
+    """``F.round(x, 6)`` of each value, by Spark: HALF_UP on the
+    shortest decimal string (0.1234565 → 0.123457, where Python and
+    numpy give 0.123456). The projection folds into the plan: no job."""
+    lr = local_relation(spark, "x double", {"x": xs})
+    return [r[0] for r in lr.select(F.round("x", 6)).collect()]
 
 
 def _ranked(scored: DataFrame, qid_col: str, k: int) -> DataFrame:
@@ -189,7 +258,7 @@ class _BucketedVectorIndex:
       driver-side map from a query vector to its probe keys (values of
       ``_PROBE_COL``), ``_bucket_of(key)`` names the partition a key
       lives in, and each bulk face expands queries into probe keys
-      executor-side.
+      executor-side (a driver-sized IVF call: in numpy, ``_driver_knn``).
 
     Fold telemetry: a tiny on-disk counter sidecar (written only when
     a locate fallback actually fires — zero cost on the healthy path)
@@ -321,12 +390,14 @@ class _BucketedVectorIndex:
             rows += [(qid, v, key, qn) for key in probe(v)]
         qid_type = queries.schema[qid_col].dataType.simpleString()
         # probe frame built wholly driver-side (vectors + norms ride
-        # along) — the query plan is never re-scanned and the probe's
-        # inputFiles are index files only
-        qs = self.spark.createDataFrame(
-            rows,
+        # along) as a local relation — the query plan is never
+        # re-scanned and the probe's inputFiles are index files only
+        names = ("__qid", "__qv", "__probe", "__qn")
+        qs = local_relation(
+            self.spark,
             f"`__qid` {qid_type}, __qv array<double>, __probe long,"
             " __qn double",
+            dict(zip(names, map(list, zip(*rows)))) or None,
         )
         idx = self._read_probed([key for _, _, key, _ in rows])
         return _ranked(
@@ -360,6 +431,119 @@ class _BucketedVectorIndex:
             F.col(qid_col).alias("__qid"),
             F.col(qvec_col).alias("__qv"),
             _norm(F.col(qvec_col)).alias("__qn"),
+        )
+
+    def _driver_knn(
+        self, queries: DataFrame, k: int, qid_col: str, qvec_col: str,
+        unique: bool, buckets: list[int], dim: int, nprobe: int, probe,
+    ) -> DataFrame | None:
+        """A bulk face's driver path, or None to hand the call to its
+        Spark path. ``probe`` maps a (Q, dim) query matrix to its (Q,
+        ``nprobe``) keys among ``buckets``, as the executor side does.
+        It needs a local index with stats on the probed files, at most
+        ``_DRIVER_MAX_MACS`` multiply-adds, a string or integral qid
+        and non-NULL, finite vectors of length ``dim``. One job collects
+        the queries; numpy replays the expression folds on the probed
+        files; ``_round6`` rounds the candidates that can still rank,
+        ranked per qid like ``_ranked``."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        t = self._table()
+        snap = t._read_snapshot()
+        root = t._store.local_path(self.path)
+        types = dict(queries.dtypes)
+        if (
+            k < 1 or nprobe < 1 or dim < 1 or snap is None or root is None
+            or types.get(qid_col)
+            not in ("string", "tinyint", "smallint", "int", "bigint")
+            or types.get(qvec_col) not in ("array<double>", "array<float>")
+        ):
+            return None
+        files: dict[str, list[str]] = {}
+        for f in snap["files"]:
+            files.setdefault(f.split("/", 1)[0], []).append(f)
+        dirs = {b: t._partition_dir_of(self._bucket_of(b)) for b in buckets}
+        stats = snap["stats"]
+        rows = {  # None: some file of the bucket has no stats
+            b: None if any(f not in stats for f in files.get(d, []))
+            else sum(stats[f]["rows"] for f in files.get(d, []))
+            for b, d in dirs.items()
+        }
+        # every query probes at least the nprobe smallest buckets' rows
+        # (and is dim doubles to hold), so at most qlimit queries fit
+        least = sum(sorted(n or 0 for n in rows.values())[:nprobe])
+        qlimit = _DRIVER_MAX_MACS // (max(1, least) * dim)
+        got = queries.select(qid_col, qvec_col).limit(qlimit + 1).toArrow()
+        qids = got.column(0)
+        qmat = _dense(got.column(1), dim)
+        dup = unique and pc.count_distinct(qids).as_py() != len(qids)
+        if len(qids) > qlimit or qmat is None or qids.null_count or dup:
+            return None  # the Spark path refuses duplicate qids
+        keys = probe(qmat)
+        probed, fan = np.unique(keys, return_counts=True)
+        sizes = [rows[b] for b in probed.tolist()]
+        if None in sizes or np.dot(sizes, fan) * dim > _DRIVER_MAX_MACS:
+            return None
+        qn = np.zeros(len(qmat))
+        for x in qmat.T:  # the _norm fold: sums left to right
+            qn += x * x
+        batch_rows = max(1, (1 << 20) // dim)
+        ids = []  # the id column of each scored batch
+        cand = []  # (query row, row in ids, raw cosine) per block
+        seen = 0
+        for b in probed.tolist():
+            qi = np.nonzero((keys == b).any(axis=1))[0]
+            paths = [f"{root}/{f}" for f in files.get(dirs[b], [])]
+            for part in _parquet_batches(paths, batch_rows, ["id", "v", "vn"]):
+                mat = _dense(part["v"], dim)
+                nulls = part["vn"].null_count + part["id"].null_count
+                if mat is None or nulls:
+                    return None
+                vn = part["vn"].to_numpy().astype(np.float64)
+                mat_t = np.ascontiguousarray(mat.T)
+                # a block's cosines and query rows: <= ~8 MB each
+                step = (1 << 20) // max(len(vn), dim) or 1
+                for s in range(0, len(qi), step):
+                    q = qi[s : s + step]
+                    denom = np.sqrt(qn[q, None]) * vn[None, :]
+                    cos = np.divide(
+                        _fold_dot(qmat[q], mat_t), denom,
+                        out=np.zeros(denom.shape), where=denom > 0,
+                    )
+                    if not np.isfinite(cos).all():
+                        return None
+                    # rounding moves a score at most 0.5e-6, and a
+                    # block's k-th best (its least if fewer, as batches
+                    # are never empty) is at most its query's: every
+                    # row below this floor ranks past k
+                    kth = max(0, cos.shape[1] - k)
+                    floor = np.partition(cos, kth, axis=1)[:, kth] - 2e-6
+                    r, c = np.nonzero(cos >= floor[:, None])
+                    cand.append((q[r], c + seen, cos[r, c]))
+                ids.append(part["id"])
+                seen += len(vn)
+        schema = (
+            f"`{qid_col}` {types[qid_col]}, vec_id"
+            f" {t._pinned_struct()['id'].dataType.simpleString()},"
+            " cosine_sim double, rk int"
+        )
+        if not cand:
+            return local_relation(self.spark, schema)
+        qr, at, raw = (np.concatenate(x) for x in zip(*cand))
+        top = pa.table({
+            qid_col: qids.take(qr),
+            "vec_id": pa.chunked_array(ids).take(at),
+            "cosine_sim": _round6(self.spark, raw.tolist()),
+        }).sort_by([(qid_col, "ascending"), ("cosine_sim", "descending"),
+                    ("vec_id", "ascending")])
+        # _ranked's window: the row number within each qid's run
+        g, pos = top.column(0), np.arange(top.num_rows)
+        new = np.r_[True, pc.not_equal(g[1:], g[:-1]).to_numpy()]
+        rk = pos - np.maximum.accumulate(np.where(new, pos, 0)) + 1
+        top = top.append_column("rk", pa.array(rk)).filter(rk <= k)
+        return local_relation(
+            self.spark, schema, dict(zip(top.column_names, top.columns))
         )
 
     # ---------------------------------------------------------- refresh
@@ -1050,8 +1234,9 @@ class IvfIndex(_BucketedVectorIndex):
 
     The two bucketing decisions: ``_assign`` is the nearest-centroid
     quantizer; a query probes its ``nprobe`` nearest centroids —
-    ranked driver-side by ``_prober``, and executor-side (with a
-    k-aware strategy) by ``knn_join_bulk``.
+    ranked driver-side by ``_prober`` (and, vectorized, by the driver
+    path of ``knn_join_bulk``), and executor-side (with a k-aware
+    strategy) by ``knn_join_bulk``'s Spark path.
     """
 
     _BUCKET = "cluster"
@@ -1202,14 +1387,16 @@ class IvfIndex(_BucketedVectorIndex):
         assume_unique_qids: bool = False,
     ) -> DataFrame:
         """Distributed batch top-k over the IVF index — the LSH
-        ``knn_join_bulk`` shape with cluster probing. The query corpus
-        is never collected: each query's ``nprobe`` nearest centroids
-        are resolved EXECUTOR-side with the same (L2², cid) ordering
-        the driver faces use (``_l2sq_mul`` is the expression twin of
-        ``l2sq_fold`` — identical multiply-form folds, so the bulk and
-        broadcast faces rank clusters identically), then one shuffle
-        equi-join on cluster against the index and one per-query
-        top-k window.
+        ``knn_join_bulk`` shape with cluster probing. A driver-sized
+        call (local index, at most ``_DRIVER_MAX_MACS`` (query, probed
+        row) pairs × dim) is scored by ``_driver_knn`` to exactly the
+        rows of the join below. Above the bound, after that gate's
+        collect of at most ``_DRIVER_MAX_MACS`` query doubles, the
+        query corpus is never collected: each query's ``nprobe``
+        nearest centroids are resolved EXECUTOR-side with the (L2²,
+        cid) ordering of the driver faces (``_l2sq_mul`` is the
+        expression twin of ``l2sq_fold``), then one shuffle equi-join
+        on cluster against the index and one per-query top-k window.
 
         Two assignment strategies by centroid count, both NARROW (no
         extra shuffle, no aggregation):
@@ -1237,10 +1424,21 @@ class IvfIndex(_BucketedVectorIndex):
         which a crawl-sized query set saturates anyway, without
         holding the materialized frame.
         """
-        base = self._queries(
-            queries, qid_col, qvec_col, unique=not assume_unique_qids
-        )
+        _check_qid_col(qid_col)
+        unique = not assume_unique_qids
         cents = self.centroids()
+        cids = np.asarray([cid for cid, _ in cents], dtype=np.int64)
+        if len({len(c) for _, c in cents}) == 1 and np.isfinite(
+            cmat := np.asarray([c for _, c in cents], dtype=np.float64)
+        ).all():
+            scored = self._driver_knn(
+                queries, k, qid_col, qvec_col, unique, cids.tolist(),
+                cmat.shape[1], nprobe,
+                lambda qmat: _nearest(qmat, cids, cmat, nprobe),
+            )
+            if scored is not None:
+                return scored
+        base = self._queries(queries, qid_col, qvec_col, unique)
         if prune_partitions is None:
             # k-aware default: below the expression-assignment bound
             # the extra prune pass is a cheap narrow projection; above

@@ -854,6 +854,8 @@ class KeyedParquetTable:
         jvm = self.spark._jvm
         if value is None:
             esc = "__HIVE_DEFAULT_PARTITION__"
+        elif isinstance(value, int):  # digits and '-' never escape
+            esc = str(value)
         else:
             esc = (
                 jvm.org.apache.spark.sql.catalyst.catalog
@@ -1294,10 +1296,12 @@ class KeyedParquetTable:
                 )
             )
         rows.sort()
-        return self.spark.createDataFrame(
-            rows,
+        names = ("version", "ts", "op", "n_files", "readable")
+        return local_relation(
+            self.spark,
             "version long, ts double, op string, n_files long,"
             " readable boolean",
+            dict(zip(names, map(list, zip(*rows)))) or None,
         )
 
     def _lookup_files(self, partition_value, row_key) -> list[str]:

@@ -240,12 +240,10 @@ register("similarity_ivf_indexed", similarity_ivf_indexed, _IVF_SQL)
 
 
 def similarity_ivf_knn_bulk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF DISTRIBUTED batch face (r8 verdict item 1, the IVF half):
-    the query corpus (vec_id < 25) joins the cluster-partitioned index
-    without a driver collect — each query's nprobe nearest centroids
-    resolve EXECUTOR-side with the same (L2², cid) ordering the
-    broadcast face uses, then one equi-join on cluster + one top-k
-    window. Training, assignment, probe selection, and scoring are all
+    """IVF bulk batch face (r8 verdict item 1, the IVF half): the
+    query corpus (vec_id < 25) against the cluster-partitioned index —
+    driver-sized, so scored on the driver, to the Spark join's rows.
+    Training, assignment, probe selection, and scoring are all
     deterministic, so the oracle replays the whole pipeline (Lloyd
     CTE + windowed argmin + per-query probe ranking)."""
     from otrrentetl_spark.operators.annindex import IvfIndex
@@ -335,9 +333,9 @@ def similarity_ivf_blas_knn_bulk(
     the index build (annindex.IvfIndex._assign beyond
     _EXPR_ASSIGN_MAX), the parquet centroid SIDECAR (beyond
     _INLINE_CENTROIDS_MAX), and the one-row-broadcast HOF assignment
-    on the query side of knn_join_bulk (with the k-aware
-    prune_partitions pinning — an explicit True materializes the
-    narrow assigned frame once).
+    on the query side of knn_join_bulk's Spark path (k-aware
+    prune_partitions pinning; this driver-sized call takes the driver
+    path, to the same rows).
 
     Centroids are 288 actual corpus vectors (vec_id < 288) — fully
     deterministic, SQL-replayable, and WELL-SEPARATED (distinct

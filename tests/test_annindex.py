@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from otrrentetl_spark.catalog import load_table
-from otrrentetl_spark.operators import similarity
+from otrrentetl_spark.operators import annindex, similarity
 from otrrentetl_spark.operators.annindex import (
     AnnLshIndex,
     IvfIndex,
@@ -17,6 +17,7 @@ from otrrentetl_spark.operators.annindex import (
 )
 
 SF = "/root/testdata/sf0.01"
+_DEFAULT_BOUND = annindex._DRIVER_MAX_MACS
 
 
 @pytest.fixture(scope="module")
@@ -278,12 +279,29 @@ def test_ivf_knn_join_matches_per_query_probes(spark, emb, tmp_path):
 
 
 def test_knn_join_rejects_colliding_qid_col(spark, emb, tmp_path):
-    idx = AnnLshIndex.build(
-        spark, emb, str(tmp_path / "clash"), n_planes=12, prefix_bits=6
-    )
-    q = emb.limit(2).select("vec_id", F.col("embedding").alias("qvec"))
-    with pytest.raises(ValueError, match="vec_id"):
-        idx.knn_join(q, qid_col="vec_id")
+    """A qid column named like an output column is refused, by name,
+    by every kNN face of both index kinds: under ``rk`` the ranks would
+    silently replace the query ids, under ``cosine_sim`` the plan
+    fails with an opaque ambiguous reference."""
+    corpus = emb.filter(F.col("vec_id") >= 10)
+    cents = [
+        (int(r["vec_id"]), [float(x) for x in r["embedding"]])
+        for r in emb.filter(F.col("vec_id") < 4).collect()
+    ]
+    for idx in (
+        AnnLshIndex.build(
+            spark, corpus, str(tmp_path / "clash"), n_planes=12,
+            prefix_bits=6,
+        ),
+        IvfIndex.build(spark, corpus, str(tmp_path / "clash_ivf"), cents),
+    ):
+        for name in ("vec_id", "rk", "cosine_sim"):
+            q = emb.limit(2).select(
+                F.col("vec_id").alias(name), F.col("embedding").alias("qvec")
+            )
+            for face in (idx.knn_join, idx.knn_join_bulk):
+                with pytest.raises(ValueError, match=f"qid_col='{name}'"):
+                    face(q, qid_col=name)
 
 
 # -------------------------------------------------- r9: bulk kNN faces
@@ -339,8 +357,39 @@ def test_lsh_bulk_prunes_index_files(spark, emb, tmp_path):
     assert read and read < full, (len(read), len(full))
 
 
-def test_ivf_bulk_matches_broadcast_face(spark, emb, tmp_path):
+@pytest.fixture
+def spark_path_calls(monkeypatch):
+    """A spy on the IVF bulk face's Spark path: one entry per call of
+    ``_queries``, the path's first step (the driver path never calls
+    it)."""
+    calls = []
+    first_step = IvfIndex._queries
+
+    def spy(self, *args, **kwargs):
+        calls.append(args)
+        return first_step(self, *args, **kwargs)
+
+    monkeypatch.setattr(IvfIndex, "_queries", spy)
+    return calls
+
+
+BULK_PATHS = ["spark_path", "driver_path"]
+
+
+def _take_path(path, monkeypatch):
+    """Send driver-sized IVF bulk calls down ``path``: the Spark path
+    with the driver path's bound at 0, else the default bound."""
+    bound = 0 if path == "spark_path" else _DEFAULT_BOUND
+    monkeypatch.setattr(annindex, "_DRIVER_MAX_MACS", bound)
+
+
+@pytest.mark.parametrize("path", BULK_PATHS)
+def test_ivf_bulk_matches_broadcast_face(
+    spark, emb, tmp_path, monkeypatch, spark_path_calls, path
+):
     from otrrentetl_spark.operators.similarity import kmeans_lloyd
+
+    _take_path(path, monkeypatch)
 
     corpus = emb.filter(F.col("vec_id") >= 10)
     _, cents_df = kmeans_lloyd(emb, k=16, iters=1)
@@ -359,15 +408,20 @@ def test_ivf_bulk_matches_broadcast_face(spark, emb, tmp_path):
         _keyed(idx.knn_join_bulk(q, k=3, nprobe=2, prune_partitions=False))
         == want
     )
+    assert len(spark_path_calls) == (2 if path == "spark_path" else 0)
 
 
-def test_ivf_bulk_large_k_agg_path_matches(spark, emb, tmp_path):
+@pytest.mark.parametrize("path", BULK_PATHS)
+def test_ivf_bulk_large_k_agg_path_matches(
+    spark, emb, tmp_path, monkeypatch, spark_path_calls, path
+):
     """Beyond _EXPR_ASSIGN_MAX centroids the bulk face switches to the
     broadcast-frame aggregation path and build switches to the
     min-struct assignment; both must still match the broadcast face
     (which ranks with the same l2sq_fold arithmetic)."""
     from otrrentetl_spark.operators.annindex import _EXPR_ASSIGN_MAX
 
+    _take_path(path, monkeypatch)
     corpus = emb.filter(F.col("vec_id") >= 10)
     k_cents = _EXPR_ASSIGN_MAX + 8
     cent_rows = (
@@ -386,6 +440,7 @@ def test_ivf_bulk_large_k_agg_path_matches(spark, emb, tmp_path):
     want = _keyed(idx.knn_join(q, k=3, nprobe=3))
     assert want
     assert _keyed(idx.knn_join_bulk(q, k=3, nprobe=3)) == want
+    assert len(spark_path_calls) == (path == "spark_path")
 
 
 def test_ivf_centroid_sidecar_roundtrip(spark, emb, tmp_path):
@@ -770,7 +825,7 @@ def test_ivf_apply_changes_preimage_batch_skips_locate_scan(
 
 
 def test_ivf_bulk_large_k_prune_default_and_single_assignment(
-    spark, emb, tmp_path
+    spark, emb, tmp_path, monkeypatch
 ):
     """r9 verdict item 4: at k > _EXPR_ASSIGN_MAX the bulk face
     defaults to prune_partitions=False (single assignment pass), and
@@ -780,6 +835,8 @@ def test_ivf_bulk_large_k_prune_default_and_single_assignment(
     results either way."""
     from otrrentetl_spark.operators.annindex import _EXPR_ASSIGN_MAX
 
+    # the plan shapes below are the Spark path's
+    monkeypatch.setattr(annindex, "_DRIVER_MAX_MACS", 0)
     corpus = emb.filter(F.col("vec_id").between(100, 400))
     k_big = _EXPR_ASSIGN_MAX + 8
     cents = [
@@ -888,3 +945,297 @@ def test_null_vector_delete_locates_and_counts(spark, emb, tmp_path, kind):
     assert len(ids) == 199 and not ids & {7, 8}
     assert idx.last_fold_stats["located_fallback_ids"] == 2
     assert idx.stats()["locate_fallback_ids_total"] == 2
+
+
+# --------------------------------- driver path of the IVF bulk face
+_CENTS4 = [
+    (0, [1.0, 0.0, 0.0, 0.0]),
+    (1, [0.0, 1.0, 0.0, 0.0]),
+    (2, [0.0, 0.0, 1.0, 0.0]),
+    (3, [0.0, 0.0, 0.0, 1.0]),
+    (4, [-1.0, -1.0, -1.0, -1.0]),
+]
+_EDGE_QUERIES = [
+    (1, [1.0, 0.1, 0.0, 0.0]),  # six identical vectors tie
+    (2, [0.0, 0.0, 0.0, 0.0]),  # zero query: every cosine is 0.0
+    (3, [0.0, 0.0, 0.05, 1.0]),  # cluster 3 holds two rows
+    (4, [-1.0, -1.0, -1.0, -0.9]),  # cluster 4 has no file
+]
+
+
+def _edge_rows():
+    """Index rows for the driver path's edge cases in 4-d around
+    ``_CENTS4``: six copies of one vector and a scaled copy (tied
+    rounded cosines), a zero vector, two rows in cluster 3 and none in
+    cluster 4, so that cluster has no file."""
+    import random
+
+    rng = random.Random(7)
+    rows = [(i, [0.9, 0.1, 0.0, 0.0]) for i in range(105, 99, -1)]
+    rows += [(106, [1.8, 0.2, 0.0, 0.0]), (107, [0.0, 0.0, 0.0, 0.0])]
+    rows += [(200, [0.1, 0.0, 0.1, 0.9]), (201, [0.0, 0.2, 0.0, 0.8])]
+    for i in range(30):
+        v = [rng.gauss(0.0, 0.1) for _ in range(4)]
+        v[i % 3] += 1.0
+        rows.append((i, v))
+    return rows
+
+
+def _build_edge(spark, path):
+    corpus = spark.createDataFrame(
+        _edge_rows(), "vec_id long, embedding array<double>"
+    )
+    return IvfIndex.build(spark, corpus, path, _CENTS4)
+
+
+@pytest.fixture(scope="module")
+def edge_ivf(spark, tmp_path_factory):
+    idx = _build_edge(spark, str(tmp_path_factory.mktemp("edge") / "ivf"))
+    files = idx._table()._read_snapshot()["files"]
+    assert not [f for f in files if f.startswith("cluster=4/")]
+    return idx
+
+
+def _queries(spark, rows, schema="qid long, qvec array<double>"):
+    return spark.createDataFrame(rows, schema)
+
+
+def _bulk_both(monkeypatch, calls, idx, q, **kw):
+    """``knn_join_bulk`` rows through the driver path (the spy shows
+    the Spark path did not run) and through the Spark path."""
+    from collections import Counter
+
+    _take_path("driver_path", monkeypatch)
+    driver = idx.knn_join_bulk(q, **kw)
+    assert not calls, "the driver path handed the call over"
+    _take_path("spark_path", monkeypatch)
+    joined = idx.knn_join_bulk(q, **kw)
+    assert len(calls) == 1
+    calls.clear()
+    assert driver.dtypes == joined.dtypes
+    got, want = driver.collect(), joined.collect()
+    assert Counter(map(tuple, got)) == Counter(map(tuple, want))
+    return got
+
+
+@pytest.mark.parametrize("batch_rows", [None, 3])
+@pytest.mark.parametrize("nprobe", [1, 2])
+def test_ivf_driver_path_matches_spark_path_on_edge_cases(
+    spark, edge_ivf, monkeypatch, spark_path_calls, nprobe, batch_rows
+):
+    """Ties on the rounded cosine rank by vec_id; a zero vector (index
+    or query) scores 0.0; a query whose probed clusters hold fewer
+    than k rows gets them all; a probed cluster with no file adds
+    nothing — on both paths, row for row, also when the driver path
+    reads the index a few rows at a time (ties split across
+    batches)."""
+    if batch_rows:
+        batches = annindex._parquet_batches
+        monkeypatch.setattr(
+            annindex, "_parquet_batches",
+            lambda paths, rows, cols: batches(paths, batch_rows, cols),
+        )
+    q = _queries(spark, _EDGE_QUERIES)
+    rows = _bulk_both(
+        monkeypatch, spark_path_calls, edge_ivf, q, k=5, nprobe=nprobe
+    )
+    by_q = {}
+    for r in rows:
+        by_q.setdefault(r["qid"], []).append(r)
+    top = sorted(by_q[1], key=lambda r: r["rk"])
+    assert [r["vec_id"] for r in top] == [100, 101, 102, 103, 104]
+    assert len({r["cosine_sim"] for r in top}) == 1
+    zero = sorted(by_q[2], key=lambda r: r["rk"])
+    assert {r["cosine_sim"] for r in zero} == {0.0}
+    assert [r["vec_id"] for r in zero] == sorted(r["vec_id"] for r in zero)
+    if nprobe == 1:
+        assert sorted(r["vec_id"] for r in by_q[3]) == [200, 201]
+        assert 4 not in by_q  # its one probed cluster has no file
+        lone = _queries(spark, _EDGE_QUERIES[3:])
+        assert not _bulk_both(
+            monkeypatch, spark_path_calls, edge_ivf, lone, k=5, nprobe=1
+        )
+
+
+def test_ivf_driver_path_string_qid_float_vectors_one_job(
+    spark, edge_ivf, monkeypatch, spark_path_calls, jobs_in
+):
+    """A string qid and an array<float> query vector keep their types
+    and rows, and the driver path runs one Spark job (the query
+    collect)."""
+    q = _queries(
+        spark,
+        [(f"q{i}", v) for i, v in _EDGE_QUERIES],
+        "qid string, qvec array<float>",
+    )
+    rows = _bulk_both(monkeypatch, spark_path_calls, edge_ivf, q, k=3, nprobe=2)
+    assert {r["qid"] for r in rows} == {"q1", "q2", "q3", "q4"}
+    _take_path("driver_path", monkeypatch)
+    got, n_jobs = jobs_in(
+        "ivf_driver_path",
+        lambda: edge_ivf.knn_join_bulk(q, k=3, nprobe=2).collect(),
+    )
+    assert n_jobs == 1
+    assert sorted(map(tuple, got)) == sorted(map(tuple, rows))
+
+
+def test_ivf_driver_path_duplicate_qids(
+    spark, edge_ivf, monkeypatch, spark_path_calls
+):
+    """Duplicate qids are refused on both paths; with
+    ``assume_unique_qids=True`` both merge the duplicates' candidates
+    into one top-k per qid."""
+    q = _queries(
+        spark,
+        [(1, _EDGE_QUERIES[0][1]), (1, _EDGE_QUERIES[2][1]),
+         (2, _EDGE_QUERIES[3][1])],
+    )
+    for path in BULK_PATHS:
+        _take_path(path, monkeypatch)
+        with pytest.raises(ValueError, match="duplicate"):
+            edge_ivf.knn_join_bulk(q, k=4, nprobe=1)
+    spark_path_calls.clear()
+    rows = _bulk_both(
+        monkeypatch, spark_path_calls, edge_ivf, q, k=4, nprobe=1,
+        assume_unique_qids=True,
+    )
+    assert sorted(r["rk"] for r in rows if r["qid"] == 1) == [1, 2, 3, 4]
+
+
+def test_driver_folds_match_loop_twins():
+    """The driver path's numpy folds replay the loop twins of the
+    expressions bit for bit: ``dot_fold`` for the scores, and
+    ``l2sq_fold`` ranked with the cid tie-break for the probes, on an
+    exact distance tie too (two equal centroids)."""
+    import numpy as np
+
+    from otrrentetl_spark.operators.annindex import _fold_dot, _nearest
+
+    rng = np.random.default_rng(3)
+    a, b = rng.normal(size=(7, 16)), rng.normal(size=(9, 16)) * 1e3
+    got = _fold_dot(a, np.ascontiguousarray(b.T)).tolist()
+    assert got == [[similarity.dot_fold(x, y) for y in b] for x in a]
+    cmat = rng.normal(size=(12, 16))
+    cmat[5] = cmat[2]
+    cids = np.arange(40, 28, -1)
+    qmat = np.vstack([rng.normal(size=(6, 16)), cmat[2:3] + 0.01])
+    want = [
+        [cid for _, cid in sorted(
+            (similarity.l2sq_fold(q, c), cid)
+            for cid, c in zip(cids.tolist(), cmat)
+        )][:4]
+        for q in qmat
+    ]
+    assert _nearest(qmat, cids, cmat, 4).tolist() == want
+
+
+def test_round6_is_sparks_half_up_rounding(spark, jobs_in):
+    """The driver path rounds through Spark: HALF_UP on the shortest
+    decimal string, which Python's round (on the binary value) misses
+    at half-way values — and it runs no Spark job."""
+    from otrrentetl_spark.operators.annindex import _round6
+
+    xs = [0.1234565, -0.1234565, 0.0000005, 0.5, 1.0]
+    want = [
+        r[0]
+        for r in spark.createDataFrame([(x,) for x in xs], "x double")
+        .select(F.round("x", 6))
+        .collect()
+    ]
+    got, n_jobs = jobs_in("round6", lambda: _round6(spark, xs))
+    assert got == want and n_jobs == 0
+    assert got[0] == 0.123457 and round(xs[0], 6) == 0.123456
+
+
+@pytest.mark.parametrize("bad", ["null_qvec", "ragged_qvec"])
+def test_ivf_driver_path_hands_invalid_vectors_to_spark(
+    spark, edge_ivf, monkeypatch, spark_path_calls, bad
+):
+    """A NULL or ragged query vector takes the Spark path, whatever
+    the bound, and gives the Spark path's rows."""
+    from collections import Counter
+
+    extra = (9, None) if bad == "null_qvec" else (9, [1.0, 0.0, 0.0])
+    q = _queries(spark, _EDGE_QUERIES + [extra])
+    out = []
+    for path in ("driver_path", "spark_path"):
+        _take_path(path, monkeypatch)
+        rows = edge_ivf.knn_join_bulk(q, k=3, nprobe=2).collect()
+        out.append(Counter(map(tuple, rows)))
+    assert len(spark_path_calls) == 2
+    assert out[0] == out[1] and sum(out[0].values()) > 0
+
+
+def test_ivf_driver_path_hands_hadoop_store_to_spark(
+    spark, edge_ivf, tmp_path, monkeypatch, spark_path_calls
+):
+    """An index behind Hadoop's FileSystem (here over ``file://``) is
+    scored by the Spark path, to the driver path's rows on the same
+    data."""
+    from otrrentetl_spark.operators import merge
+    from otrrentetl_spark.table.store import HadoopStore
+
+    q = _queries(spark, _EDGE_QUERIES)
+    _take_path("driver_path", monkeypatch)
+    want = sorted(map(tuple, edge_ivf.knn_join_bulk(q, k=3, nprobe=2).collect()))
+    assert not spark_path_calls
+    monkeypatch.setattr(merge, "store_for", lambda spark, path: HadoopStore(spark))
+    idx = _build_edge(spark, (tmp_path / "hadoop_ivf").as_uri())
+    got = sorted(map(tuple, idx.knn_join_bulk(q, k=3, nprobe=2).collect()))
+    assert len(spark_path_calls) == 1
+    assert got == want
+
+
+def test_ivf_driver_path_bound_is_on_pairs_times_dim(
+    spark, edge_ivf, monkeypatch, spark_path_calls
+):
+    """The driver path runs at exactly ``_DRIVER_MAX_MACS`` multiply-adds
+    ((query, probed row) pairs × dim); at one less it hands the call to
+    the Spark path, which gives the same rows."""
+    sizes = {
+        int(r["cluster"]): r["count"]
+        for r in edge_ivf._table().read().groupBy("cluster").count().collect()
+    }
+    probe = edge_ivf._prober(2)
+    macs = 4 * sum(
+        sizes.get(c, 0) for _, v in _EDGE_QUERIES for c in probe(v)
+    )
+    q = _queries(spark, _EDGE_QUERIES)
+    monkeypatch.setattr(annindex, "_DRIVER_MAX_MACS", macs)
+    want = sorted(map(tuple, edge_ivf.knn_join_bulk(q, k=3, nprobe=2).collect()))
+    assert not spark_path_calls
+    for bound in (macs - 1, 1):
+        monkeypatch.setattr(annindex, "_DRIVER_MAX_MACS", bound)
+        got = edge_ivf.knn_join_bulk(q, k=3, nprobe=2).collect()
+        assert sorted(map(tuple, got)) == want
+    assert len(spark_path_calls) == 2
+
+
+def test_ivf_driver_path_query_collect_is_bounded_in_doubles(
+    spark, edge_ivf, monkeypatch, spark_path_calls
+):
+    """An empty cluster lets a query probe no rows, so the pairs alone
+    cannot cap the query collect: it is capped at ``_DRIVER_MAX_MACS``
+    doubles (queries × dim). A query set above the cap collects at
+    most one query past it, then the Spark path gives the driver
+    path's rows."""
+    q = _queries(spark, [(1000 + i, v) for i, v in _edge_rows()])
+    _take_path("driver_path", monkeypatch)
+    want = sorted(map(tuple, edge_ivf.knn_join_bulk(q, k=3, nprobe=1).collect()))
+    assert not spark_path_calls
+    collected = []
+    frame = type(q)
+    to_arrow = frame.toArrow
+
+    def spy(self):
+        got = to_arrow(self)
+        collected.append(got.num_rows)
+        return got
+
+    monkeypatch.setattr(frame, "toArrow", spy)
+    bound = 8 * 4  # eight 4-d queries
+    monkeypatch.setattr(annindex, "_DRIVER_MAX_MACS", bound)
+    got = sorted(map(tuple, edge_ivf.knn_join_bulk(q, k=3, nprobe=1).collect()))
+    assert len(spark_path_calls) == 1
+    assert collected and max(collected) * 4 <= bound + 4, collected
+    assert got == want

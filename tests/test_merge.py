@@ -879,6 +879,27 @@ def test_history_lists_versions_ops_readability(spark, tmp_path):
         t.read(version=99)
 
 
+def test_history_is_a_local_relation(spark, tmp_path, jobs_in):
+    """history() is built on the driver, so it is a LocalRelation (no
+    RDD scan through Python workers), typed as documented, and
+    collecting it runs no Spark job."""
+    t = merge.KeyedParquetTable(spark, str(tmp_path / "hist_lr"), KEYS)
+    t.overwrite(_df(spark, [("p", "1", "a", 1)]))
+    t.upsert_replace_partitions(_df(spark, [("q", "2", "b", 2)]))
+    h = t.history()
+    plan = h._jdf.queryExecution().optimizedPlan()
+    assert plan.getClass().getSimpleName() == "LocalRelation"
+    assert h.schema.simpleString() == (
+        "struct<version:bigint,ts:double,op:string,n_files:bigint,"
+        "readable:boolean>"
+    )
+    rows, n_jobs = jobs_in("history_lr", h.collect)
+    assert [(r.version, r.op, r.n_files) for r in rows] == [
+        (1, "overwrite", 1), (2, "upsert", 2)
+    ]
+    assert n_jobs == 0
+
+
 def test_unknown_version_raises_before_vacuum(spark, tmp_path):
     import pytest
 

@@ -103,7 +103,10 @@ def main() -> None:
     ):
         _wrap(KeyedParquetTable, m)
     for cls in (AnnLshIndex, IvfIndex):
-        for m in ("build", "apply_changes", "maintain", "topk"):
+        for m in (
+            "build", "apply_changes", "maintain", "topk", "knn_join_bulk",
+            "_driver_knn",
+        ):
             _wrap(cls, m)
     _wrap(ChangeFeed, "poll")
 

@@ -99,6 +99,10 @@ NOTES: dict[str, list[str]] = {
         "r9) where the broadcast face would ship an ~8 GB ball frame",
     ],
     "similarity_ivf_knn_bulk": [
+        "- at registry sizes the call is driver-sized: knn_join_bulk "
+        "scores it in numpy on the driver after one query collect, so "
+        "the final plan is a LocalRelation of the ranked rows; the "
+        "shape below is its Spark path, above the driver bound",
         "- the IVF half of the distributed batch face: per-query "
         "nprobe cluster selection runs executor-side (literal-centroid "
         "array_sort of (d, cid) structs for k<=64; one-row broadcast "
@@ -201,6 +205,9 @@ NOTES: dict[str, list[str]] = {
         "keys+counts, never text",
     ],
     "similarity_ivf_blas_knn_bulk": [
+        "- driver-sized at registry sizes, like similarity_ivf_knn_bulk: "
+        "the final plan is a LocalRelation; the query-side shape below "
+        "is the Spark path's",
         "- the LARGE-k IVF face (r10): k=288 > _EXPR_ASSIGN_MAX=64 "
         "forces the BLAS quantizer on the BUILD (Arrow-batched numpy "
         "matmul per input batch — no literal centroid expression at "
