@@ -73,7 +73,7 @@ HEADLINE = [
 # seed-pinned so the pick is auditable: candidates = registry −
 # driver-sampled(CORRECTNESS_r*.json) − HEADLINE, sorted by
 # md5(f"r{round}:{name}"), take the first 3. Their prior-round floor
-# is measured (tools/microbench.py, quiet host) and recorded in
+# is measured (tools/measure.py, quiet host) and recorded in
 # BASELINE.md before the rotation lands.
 ROTATION = [
     # round 12 (seed "r12")

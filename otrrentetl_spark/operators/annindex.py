@@ -475,10 +475,28 @@ class _BucketedVectorIndex:
         least = sum(sorted(n or 0 for n in rows.values())[:nprobe])
         qlimit = _DRIVER_MAX_MACS // (max(1, least) * dim)
         got = queries.select(qid_col, qvec_col).limit(qlimit + 1).toArrow()
-        qids = got.column(0)
-        qmat = _dense(got.column(1), dim)
+        qtype, batches = got.schema.field(0).type, got.to_batches()
+        del got
+        n = sum(b.num_rows for b in batches)
+        if n > qlimit:
+            return None
+        # fill the matrix batch by batch, dropping each Arrow batch once
+        # copied, so the driver holds one copy of the vectors
+        qmat, chunks, at = np.empty((n, dim)), [], 0
+        batches.reverse()
+        while batches:
+            b = batches.pop()
+            block = _dense(b.column(1), dim)
+            if block is None:
+                return None
+            qmat[at : at + len(block)] = block
+            at += len(block)
+            # a batch's columns share one buffer: copy the ids out of it
+            chunks.append(pa.concat_arrays([b.column(0)]))
+            del b, block
+        qids = pa.chunked_array(chunks, qtype)
         dup = unique and pc.count_distinct(qids).as_py() != len(qids)
-        if len(qids) > qlimit or qmat is None or qids.null_count or dup:
+        if qids.null_count or dup:
             return None  # the Spark path refuses duplicate qids
         keys = probe(qmat)
         probed, fan = np.unique(keys, return_counts=True)

@@ -1,7 +1,8 @@
 """Wall-budget regression harness (r7 verdict item 4): queries whose
 DuckDB oracle DNFs at corpus-scale fixtures have no ratio to catch a
 perf regression, so their committed 1000x pins get an absolute budget
-(1.5x the pin) enforced by tools/microbench.py --budget=<label>.
+(1.5x the pin) enforced by tools/measure.py --budget <label> and by
+the gates of tools/ann_scale.py.
 
 These tests exercise the check itself — including the
 intentional-regression case the verdict asked for — plus the shape of
@@ -13,7 +14,7 @@ from __future__ import annotations
 import json
 from pathlib import Path
 
-from tools.microbench import check_budgets
+from tools.measure import check_budgets
 
 REPO = Path(__file__).resolve().parents[1]
 
@@ -29,6 +30,13 @@ BUDGETS = {
         "pinned_s": 70.0,
         "budget_s": 105.0,
         "pinned_round": 8,
+    },
+    # a ratio row: the value checked is a fraction, not seconds
+    "ann_refresh_cow_ratio": {
+        "fixture": "ann2m_refresh",
+        "pinned_s": 0.121,
+        "budget_s": 0.25,
+        "pinned_round": 11,
     },
 }
 
@@ -47,6 +55,14 @@ def test_intentional_regression_is_flagged():
     assert "90.0s" in out[0]
 
 
+def test_ratio_row_is_checked_like_a_wall():
+    results = {"ann_refresh_cow_ratio": 0.2}
+    assert check_budgets(results, BUDGETS, "ann2m_refresh") == []
+    results = {"ann_refresh_cow_ratio": 0.5, "dedup_clusters": 999.0}
+    out = check_budgets(results, BUDGETS, "ann2m_refresh")
+    assert len(out) == 1 and "ann_refresh_cow_ratio" in out[0]
+
+
 def test_other_fixture_and_unbudgeted_queries_ignored():
     # A sf0.1 run of the same query must not trip the x1000 budget,
     # and queries with no budget row are never checked.
@@ -61,7 +77,7 @@ def test_committed_budget_file_is_coherent():
         if name.startswith("_"):
             continue  # comment/metadata keys
         assert row["budget_s"] >= 1.4 * row["pinned_s"], name
-        # xN = scale_fixture multiples (microbench --budget);
+        # xN = scale_fixture multiples (measure.py --budget);
         # ann2m = the 2M-vector ANN fixture (ann_scale.py probes);
         # ann2m_bulk = the 100k x 2M bulk faces (ann_scale.py bulk);
         # ann2m_refresh = the fixed-batch CDC fold + post-compaction

@@ -53,6 +53,8 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(REPO))
 
+from tools.measure import enforce_budgets  # noqa: E402
+
 BASE = "/root/testdata/sf0.1/embeddings.parquet"
 
 
@@ -162,23 +164,7 @@ def cmd_probes(argv: list[str]) -> None:
     # wall-budget gate for the 2M probe (tools/budgets.json ann2m row,
     # r8 verdict item 3) — only meaningful at the canonical R=1000
     if replicas == 1000:
-        import json
-
-        row = json.loads(
-            (REPO / "tools" / "budgets.json").read_text()
-        ).get("ann_lsh_probe_2m")
-        if row and min(probe_walls) > row["budget_s"]:
-            print(
-                f"BUDGET VIOLATION: ann_lsh_probe_2m best"
-                f" {min(probe_walls):.2f}s > {row['budget_s']}s"
-                f" (pin {row['pinned_s']}s)"
-            )
-            sys.exit(1)
-        elif row:
-            print(
-                f"budget OK: ann_lsh_probe_2m best {min(probe_walls):.2f}s"
-                f" <= {row['budget_s']}s"
-            )
+        enforce_budgets({"ann_lsh_probe_2m": min(probe_walls)}, "ann2m")
 
     # ---- IVF index ---------------------------------------------------
     _, cents_df = kmeans_lloyd(base, k=64, iters=2)
@@ -294,29 +280,10 @@ def cmd_bulk(argv: list[str]) -> None:
     # 3 — the probe row was gated in r8, the bulk joins weren't) at
     # the canonical 2M x 100k scale only
     if replicas == 1000 and q_replicas == 50:
-        import json
-
-        budgets = json.loads((REPO / "tools" / "budgets.json").read_text())
-        violations = []
-        for name, wall in (
-            ("ann_bulk_knn_2m", min(knn_walls)),
-            ("ann_near_dup_join_2m", nd_wall),
-        ):
-            row = budgets.get(name)
-            if not row:
-                continue
-            if wall > row["budget_s"]:
-                violations.append(
-                    f"{name}: {wall:.1f}s > {row['budget_s']}s"
-                    f" (pin {row['pinned_s']}s)"
-                )
-            else:
-                print(
-                    f"budget OK: {name} {wall:.1f}s <= {row['budget_s']}s"
-                )
-        if violations:
-            print("BUDGET VIOLATION: " + "; ".join(violations))
-            sys.exit(1)
+        enforce_budgets(
+            {"ann_bulk_knn_2m": min(knn_walls), "ann_near_dup_join_2m": nd_wall},
+            "ann2m_bulk",
+        )
     spark.stop()
 
 
@@ -449,50 +416,14 @@ def cmd_refresh(argv: list[str]) -> None:
     # wall-budget gates (r10 verdict item 3): the 2M fold wall and the
     # post-maintenance COW rewrite ratio are the round-10 headline —
     # a regression to bucket- or index-proportional work trips here
-    import json
-
-    budgets = json.loads((REPO / "tools" / "budgets.json").read_text())
-    violations = []
-    row = budgets.get("ann_refresh_2m")
-    if row:
-        if walls[big] > row["budget_s"]:
-            violations.append(
-                f"ann_refresh_2m {walls[big]:.1f}s > {row['budget_s']}s"
-                f" (pin {row['pinned_s']}s)"
-            )
-        else:
-            print(
-                f"budget OK: ann_refresh_2m {walls[big]:.1f}s"
-                f" <= {row['budget_s']}s"
-            )
-    row = budgets.get("ann_compact_256buckets")
-    if row:
-        if w_compact > row["budget_s"]:
-            violations.append(
-                f"ann_compact_256buckets {w_compact:.1f}s >"
-                f" {row['budget_s']}s (pin {row['pinned_s']}s)"
-            )
-        else:
-            print(
-                f"budget OK: ann_compact_256buckets {w_compact:.1f}s"
-                f" <= {row['budget_s']}s"
-            )
-    row = budgets.get("ann_refresh_cow_ratio")
-    if row:
-        ratio2 = rewritten / max(len(pre), 1)
-        if ratio2 > row["budget_s"]:
-            violations.append(
-                f"ann_refresh_cow_ratio {ratio2:.3f} >"
-                f" {row['budget_s']} (pin {row['pinned_s']})"
-            )
-        else:
-            print(
-                f"budget OK: ann_refresh_cow_ratio {ratio2:.3f}"
-                f" <= {row['budget_s']}"
-            )
-    if violations:
-        print("BUDGET VIOLATION: " + "; ".join(violations))
-        sys.exit(1)
+    enforce_budgets(
+        {
+            "ann_refresh_2m": walls[big],
+            "ann_compact_256buckets": w_compact,
+            "ann_refresh_cow_ratio": rewritten / max(len(pre), 1),
+        },
+        "ann2m_refresh",
+    )
     spark.stop()
 
 
@@ -672,21 +603,7 @@ def cmd_bigbuild(argv: list[str]) -> None:
         flush=True,
     )
     assert fb == 0, "preimage fold must never hit the locate fallback"
-    import json
-
-    budgets = json.loads((REPO / "tools" / "budgets.json").read_text())
-    row = budgets.get("ann_refresh_33m")
-    if row:
-        if w_fold > row["budget_s"]:
-            print(
-                f"BUDGET VIOLATION: ann_refresh_33m {w_fold:.1f}s >"
-                f" {row['budget_s']}s (pin {row['pinned_s']}s)"
-            )
-            sys.exit(1)
-        print(
-            f"budget OK: ann_refresh_33m {w_fold:.1f}s"
-            f" <= {row['budget_s']}s"
-        )
+    enforce_budgets({"ann_refresh_33m": w_fold}, "ann33m")
     spark.stop()
 
 
@@ -805,19 +722,7 @@ def cmd_maintain33m(argv: list[str]) -> None:
         f" ({len(pre & post)} kept) — locate fallbacks this fold {fb}",
         flush=True,
     )
-    budgets = json.loads((REPO / "tools" / "budgets.json").read_text())
-    row = budgets.get("ann_refresh_33m")
-    if row:
-        if w_fold > row["budget_s"]:
-            print(
-                f"BUDGET VIOLATION: ann_refresh_33m {w_fold:.1f}s >"
-                f" {row['budget_s']}s (pin {row['pinned_s']}s)"
-            )
-            sys.exit(1)
-        print(
-            f"budget OK: ann_refresh_33m {w_fold:.1f}s"
-            f" <= {row['budget_s']}s"
-        )
+    enforce_budgets({"ann_refresh_33m": w_fold}, "ann33m")
     spark.stop()
 
 

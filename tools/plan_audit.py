@@ -14,6 +14,8 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
+from tools.measure import final_plan  # noqa: E402
+
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 
 AUDITED = [
@@ -255,12 +257,6 @@ NOTES: dict[str, list[str]] = {
 }
 
 
-def _formatted(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
-        df._jdf.queryExecution(), "formatted"
-    )
-
-
 def _audit(plan: str, detail: str) -> list[str]:
     notes = []
     pushed = re.findall(r"PushedFilters: \[([^\]]+)\]", detail)
@@ -304,13 +300,9 @@ def main() -> None:
             continue
         df = QUERIES[name](spark, SF_DIR)
         df.collect()
-        plan = _formatted(df)
         # audit and print ONLY the AQE final plan — the initial plan is
         # a pre-runtime duplicate that double-counts every property
-        tree = plan.split("\n\n")[0]
-        if "== Final Plan ==" in tree:
-            tree = tree.split("== Final Plan ==")[1]
-            tree = tree.split("+- == Initial Plan ==")[0]
+        tree, plan = final_plan(df)
         out.append(f"## {name}")
         out.append("")
         out.extend(_audit(tree, plan))

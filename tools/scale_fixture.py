@@ -8,7 +8,7 @@ stay unique (replica r adds r*1_000_000).
 
     python tools/scale_fixture.py 10 /tmp/sfx10
     python tools/scale_fixture.py 100 /tmp/sfx100
-    python tools/microbench.py /tmp/sfx10 <query> ...
+    python tools/measure.py --sf /tmp/sfx10 <query> ...
 
 The same fixture then drives the correctness-at-scale sweep:
 
