@@ -14,7 +14,9 @@ from __future__ import annotations
 import json
 from pathlib import Path
 
-from tools.measure import check_budgets
+import pytest
+
+from tools.measure import check_budgets, exit_on, failures
 
 REPO = Path(__file__).resolve().parents[1]
 
@@ -41,26 +43,45 @@ BUDGETS = {
 }
 
 
+# (query, fixture, a value within budget, a value over it): a wall row
+# and a ratio row, which the check compares alike
+ROWS = [
+    ("dedup_clusters", "x1000", 85.0, 180.0),
+    ("ann_refresh_cow_ratio", "ann2m_refresh", 0.2, 0.5),
+]
+
+
 def test_within_budget_passes():
-    assert check_budgets({"dedup_clusters": 85.0}, BUDGETS, "x1000") == []
+    for name, fixture, ok, _ in ROWS:
+        assert check_budgets({name: ok}, BUDGETS, fixture) == []
 
 
 def test_intentional_regression_is_flagged():
     # The harness-of-the-harness case: a 2x slowdown past the budget
     # MUST produce a violation naming the query, fixture, and pin.
-    out = check_budgets({"dedup_clusters": 180.0}, BUDGETS, "x1000")
-    assert len(out) == 1
-    assert "dedup_clusters" in out[0]
-    assert "x1000" in out[0]
-    assert "90.0s" in out[0]
+    for name, fixture, _, over in ROWS:
+        out = check_budgets({name: over}, BUDGETS, fixture)
+        assert len(out) == 1
+        assert name in out[0]
+        assert fixture in out[0]
+        row = BUDGETS[name]
+        # unitless, so a ratio row prints its own figures, not seconds
+        assert f": {over:g} > {row['budget_s']:g} (pin {row['pinned_s']:g}, r" in out[0]
 
 
-def test_ratio_row_is_checked_like_a_wall():
-    results = {"ann_refresh_cow_ratio": 0.2}
-    assert check_budgets(results, BUDGETS, "ann2m_refresh") == []
-    results = {"ann_refresh_cow_ratio": 0.5, "dedup_clusters": 999.0}
-    out = check_budgets(results, BUDGETS, "ann2m_refresh")
-    assert len(out) == 1 and "ann_refresh_cow_ratio" in out[0]
+def test_failed_query_fails_the_run(capsys):
+    # A query that raised has no wall to compare with its budget; the
+    # run must still exit 1 and name it, or a crash at the corpus-scale
+    # fixture would pass the gate.
+    out = {"dedup_clusters": {"error": "MemoryError: "}, "flagship": {"best_s": 1.0}}
+    for fixture in ("x1000", None):
+        with pytest.raises(SystemExit) as ex:
+            exit_on(failures(out, BUDGETS, fixture), "ok")
+        assert ex.value.code == 1
+        assert "FAILED: dedup_clusters" in capsys.readouterr().out
+    out["dedup_clusters"] = {"best_s": 180.0}
+    assert failures(out, BUDGETS, None) == []
+    assert len(failures(out, BUDGETS, "x1000")) == 1
 
 
 def test_other_fixture_and_unbudgeted_queries_ignored():

@@ -622,7 +622,6 @@ def cmd_maintain33m(argv: list[str]) -> None:
 
         python tools/ann_scale.py maintain33m [scratch]
     """
-    import json
     import os
 
     scratch = argv[0] if argv else "/tmp/ann_scale_big"

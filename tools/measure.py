@@ -5,26 +5,22 @@
 
 No name: the whole registry; ``headline``: ``bench.HEADLINE``. Per query:
 
-- timed: one untimed warm-up run, then min-of-``--runs`` fresh-plan runs
-  that collect (or write parquet). The best run also gives the wall of
-  the registry ``fn()`` call (``build_s``; an eager or driver-loop query
-  works here) and of ``executedPlan()`` (``plan_s``);
-- noop: one run to the noop sink (every column computed, nothing
-  fetched); ``fetch_s`` is best minus noop;
+- timed: a warm-up run, then min-of-``--runs`` fresh-plan runs that
+  collect (or write parquet); the best run also gives the walls of the
+  registry ``fn()`` call (``build_s``) and of ``executedPlan()`` (``plan_s``);
+- noop: one run to the noop sink; ``fetch_s`` is best minus noop;
 - trace: one run in a ``perfbench.core.Tracer`` span, last, so that it
-  sees a warm query's jobs (a first run may build what later runs
-  reuse): jobs, stages, tasks, executor run and CPU time, shuffle, spill
-  and input bytes, the driver residual, each job's callsite, the AQE
-  final plan's exchanges, broadcasts and Python evals, and the own jobs
-  of each ``STEPS`` method (``steps``) and of the query (``body_jobs``);
-- duck: min-of-``--duck-runs`` DuckDB runs of the oracle SQL on the same
-  parquet, and the ratio of the best Spark run to it.
+  sees a warm query's jobs: jobs, stages, tasks, executor time, shuffle,
+  spill and input bytes, the driver residual, each job's callsite, the
+  AQE final plan's exchanges, broadcasts and Python evals (collect mode
+  only), and the own jobs of each ``STEPS`` method and of the query;
+- duck: min-of-``--duck-runs`` DuckDB runs of the oracle SQL, and the ratio.
 
 ``fn()`` runs inside every timed region: re-collecting one DataFrame
-reuses its shuffle files. The JVM is GC'd between runs to reclaim the
-shuffle files of dropped plans. A failing query is recorded and the loop
-goes on. ``--budget FIXTURE`` exits 1 if a best wall exceeds its
-``tools/budgets.json`` row for that fixture.
+reuses its shuffle files. The JVM is GC'd after every Spark run to reclaim
+the shuffle files of dropped plans. A failing query is recorded and the
+loop goes on; the tool then exits 1, as it does with ``--budget FIXTURE``
+when a best wall exceeds its ``tools/budgets.json`` row for the fixture.
 """
 
 from __future__ import annotations
@@ -40,7 +36,10 @@ import time
 import traceback
 from pathlib import Path
 
+import pyarrow.parquet as pq
+
 REPO = Path(__file__).resolve().parents[1]
+BUDGETS = REPO / "tools" / "budgets.json"
 sys.path.insert(0, str(REPO))
 
 from perfbench.core import COUNTERS, Tracer  # noqa: E402
@@ -51,8 +50,7 @@ STEPS = {
         "overwrite", "_overwrite_unlocked", "upsert_replace_partitions", "delete_by_keys",
         "compact", "compact_if", "expire_history", "vacuum", "_cow_split", "_arrow_write",
         "_commit_snapshot", "_distributed_file_stats", "changes", "read"),
-    "AnnLshIndex": (
-        "build", "apply_changes", "maintain", "topk", "knn_join_bulk", "_driver_knn"),
+    "AnnLshIndex": ("build", "apply_changes", "maintain", "topk", "knn_join_bulk", "_driver_knn"),
     "ChangeFeed": ("poll",),
 }
 STEPS["IvfIndex"] = STEPS["AnnLshIndex"]
@@ -61,32 +59,39 @@ STEPS["IvfIndex"] = STEPS["AnnLshIndex"]
 def check_budgets(results: dict[str, float], budgets: dict, fixture: str) -> list[str]:
     """Return one violation line per timed query whose wall exceeds
     its budget for this fixture label; empty list = within budget.
-    Pure function so the harness itself is unit-testable (including
-    the intentional-regression case) without a Spark session."""
+    Pure, so it is unit-testable without a Spark session. A row holds
+    a wall in seconds or a ratio, so its numbers print unitless."""
     out = []
     for name, wall in results.items():
         row = budgets.get(name)
-        if not row or row.get("fixture") != fixture:
-            continue
-        if wall > row["budget_s"]:
+        if row and row.get("fixture") == fixture and wall > row["budget_s"]:
             out.append(
-                f"BUDGET EXCEEDED: {name} at {fixture}: {wall:.1f}s > "
-                f"{row['budget_s']:.1f}s (pin {row['pinned_s']:.1f}s, "
-                f"r{row['pinned_round']})"
+                f"BUDGET EXCEEDED: {name} at {fixture}: {wall:.4g} > "
+                f"{row['budget_s']:g} (pin {row['pinned_s']:g}, r{row['pinned_round']})"
             )
     return out
 
 
-def enforce_budgets(results: dict[str, float], fixture: str) -> None:
-    """Print ``check_budgets``' verdict on ``results`` against
-    ``tools/budgets.json``; exit 1 on any violation."""
-    budgets = json.loads((REPO / "tools" / "budgets.json").read_text())
-    violations = check_budgets(results, budgets, fixture)
-    for v in violations:
-        print(v)
-    if violations:
+def failures(out: dict[str, dict], budgets: dict, fixture: str | None) -> list[str]:
+    """The lines that fail a run: each query that raised (it has no wall
+    to check, budgeted or not), then each best wall over its budget."""
+    bad = [f"FAILED: {n}: {r['error']}" for n, r in out.items() if "error" in r]
+    timed = {n: r["best_s"] for n, r in out.items() if r.get("best_s") is not None}
+    return bad + (check_budgets(timed, budgets, fixture) if fixture else [])
+
+
+def exit_on(bad: list[str], ok: str) -> None:
+    """Print the failing lines and exit 1 if there are any, else ``ok``."""
+    print("\n".join(bad or [ok]))
+    if bad:
         sys.exit(1)
-    print(f"budgets OK for fixture {fixture}")
+
+
+def enforce_budgets(results: dict[str, float], fixture: str) -> None:
+    """Gate ``results`` on their ``tools/budgets.json`` rows for ``fixture``."""
+    values = ", ".join(f"{n} {v:.4g}" for n, v in results.items())
+    exit_on(check_budgets(results, json.loads(BUDGETS.read_text()), fixture),
+            f"budgets OK for fixture {fixture}: {values}")
 
 
 def final_plan(df) -> tuple[str, str]:
@@ -135,10 +140,8 @@ def _wrap(cls, name: str) -> None:
 
 
 def _run(spark, fn, sf: str, sink: str | None):
-    """One fresh plan to its sink: (wall, plan build, plan, rows, the
-    DataFrame). The plan time is read in collect mode only, where the
-    collect runs the very plan ``executedPlan()`` built; a write plans
-    its own command."""
+    """One fresh plan to its sink: (wall, ``fn()`` wall, plan wall, rows,
+    the DataFrame); no plan wall for a write, which plans its own command."""
     if sink:
         shutil.rmtree(sink, ignore_errors=True)
     t0 = time.perf_counter()
@@ -150,8 +153,6 @@ def _run(spark, fn, sf: str, sink: str | None):
     rows = df.write.parquet(sink) if sink else len(df.collect())
     wall = time.perf_counter() - t0
     if sink:
-        import pyarrow.parquet as pq
-
         rows = sum(pq.read_metadata(p).num_rows for p in Path(sink).glob("*.parquet"))
     return wall, t1 - t0, None if sink else t2 - t1, rows, df
 
@@ -167,7 +168,9 @@ def _trace(spark, tracer: Tracer, fn, sf: str, sink: str | None) -> dict:
     c = root.counters()
     out = {k: c[k] for k in COUNTERS}
     out.update(rows=rows, overhead_s=root.total_overhead(), body_jobs=len(root.jobs))
-    out.update(plan_counts(final_plan(df)[0]), steps={}, callsites=[])
+    # a parquet write plans and runs its own command: ``df`` never ran
+    counts = dict.fromkeys(("exchanges", "broadcasts", "python_evals"))
+    out.update(counts if sink else plan_counts(final_plan(df)[0]), steps={}, callsites=[])
 
     def walk(sp, label):
         for jid in sp.jobs:
@@ -184,9 +187,8 @@ def _trace(spark, tracer: Tracer, fn, sf: str, sink: str | None) -> dict:
 
 
 def _reclaim(spark) -> None:
-    # each run builds a fresh plan, so the previous run's shuffle files
-    # go only when the JVM GCs the dereferenced RDDs (ContextCleaner);
-    # at corpus-scale fixtures one run leaves 10+ GB
+    # a dropped plan's shuffle files go only when the JVM GCs its RDDs
+    # (ContextCleaner); at corpus-scale fixtures one run leaves 10+ GB
     spark._jvm.System.gc()  # noqa: SLF001
     time.sleep(1)
 
@@ -215,8 +217,10 @@ def measure(spark, tracer, con, name: str, args, sink_root: str | None) -> dict:
     t0 = time.perf_counter()
     fn(spark, sf).write.format("noop").mode("overwrite").save()
     rec["noop_s"] = time.perf_counter() - t0
+    _reclaim(spark)
     rec.update(fetch_s=best and best - rec["noop_s"], duck_s=None, ratio=None)
     rec["trace"] = _trace(spark, tracer, fn, sf, sink)
+    _reclaim(spark)
     sql = con and ORACLES.get(name)
     if sql:
         rec["duck_s"] = min(_duck(con, sql, sink and f"{sink}.duck") for _ in range(args.duck_runs))
@@ -226,8 +230,7 @@ def measure(spark, tracer, con, name: str, args, sink_root: str | None) -> dict:
 
 def _report(name: str, rec: dict) -> None:
     if "error" in rec:
-        print(f"{name:35s} ERROR {rec['error']}", flush=True)
-        return
+        return print(f"{name:35s} ERROR {rec['error']}", flush=True)
     t = rec["trace"]
     walls = " ".join(f"{k}={rec[k]}" for k in ("best_s", "noop_s", "build_s", "plan_s", "ratio"))
     layers = " ".join(f"{k}={t[k]}" for k in (
@@ -252,6 +255,7 @@ def main() -> None:
     p.add_argument("--out", help="write the records here as JSON")
     args = p.parse_args()
 
+    import bench
     from otrrentetl_spark.operators.annindex import AnnLshIndex, IvfIndex
     from otrrentetl_spark.operators.merge import KeyedParquetTable
     from otrrentetl_spark.registry import QUERIES
@@ -261,8 +265,6 @@ def main() -> None:
 
     names = args.names or list(QUERIES)
     if names == ["headline"]:
-        import bench
-
         names = [n for n in bench.HEADLINE if n in QUERIES]
     global _tracer
     for cls in (KeyedParquetTable, AnnLshIndex, IvfIndex, ChangeFeed):
@@ -283,17 +285,15 @@ def main() -> None:
             traceback.print_exc()
             out[name] = {"error": f"{type(ex).__name__}: {str(ex)[:300]}"}
         _report(name, out[name])
-    timed = {n: r["best_s"] for n, r in out.items() if r.get("best_s") is not None}
-    failed = sorted(n for n, r in out.items() if "error" in r)
-    print(f"TOTAL best={sum(timed.values()):.3f}s over {len(timed)} queries; "
-          f"failed: {failed or 'none'}")
+    timed = [r["best_s"] for r in out.values() if r.get("best_s") is not None]
+    print(f"TOTAL best={sum(timed):.3f}s over {len(timed)} queries")
     if args.out:
         Path(args.out).write_text(json.dumps(out, indent=1) + "\n")
     if sink_root:
         shutil.rmtree(sink_root, ignore_errors=True)
     spark.stop()
-    if args.budget:
-        enforce_budgets(timed, args.budget)
+    ok = f"budgets OK for fixture {args.budget}" if args.budget else "no query failed"
+    exit_on(failures(out, json.loads(BUDGETS.read_text()), args.budget), ok)
 
 
 if __name__ == "__main__":
