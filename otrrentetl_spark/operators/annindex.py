@@ -56,7 +56,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from otrrentetl_spark.operators.merge import KeyedParquetTable
+from otrrentetl_spark.operators.merge import KeyedParquetTable, _no_aqe
 from otrrentetl_spark.operators.similarity import (
     _SEED,
     _dot,
@@ -131,18 +131,22 @@ def _fold_tallies(batch: DataFrame) -> dict:
     """Routing tallies for one CDC fold — ONE aggregate job over the
     pinned batch (counts by change_type × vector-nullness) instead of
     a limit(1).count() probe job per question (r10 verdict): a
-    resident daemon pays one driver round-trip per tick, not four."""
-    rows = (
-        batch.groupBy(
-            "change_type", F.col("v").isNull().alias("__vnull")
+    resident daemon pays one driver round-trip per tick, not four.
+    AQE off, as for every routing aggregate (``_no_aqe``): with it the
+    ``groupBy`` costs 2 jobs."""
+    with _no_aqe(batch.sparkSession):
+        rows = (
+            batch.groupBy(
+                "change_type", F.col("v").isNull().alias("__vnull")
+            )
+            .agg(F.count(F.lit(1)).alias("n"))
+            .collect()
         )
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
     c: dict[tuple[str, bool], int] = {
         (r["change_type"], bool(r["__vnull"])): int(r["n"]) for r in rows
     }
     return {
+        "rows": sum(c.values()),
         "preimage": sum(
             v for (t, _), v in c.items() if t == "update_preimage"
         ),
@@ -286,6 +290,13 @@ class _BucketedVectorIndex:
         self.last_fold_stats: dict = {}
 
     def _assign(self, df: DataFrame) -> DataFrame:
+        raise NotImplementedError
+
+    def _bucket_np(self, col) -> tuple[np.ndarray, dict] | None:
+        """The numpy twin of ``_assign`` for an Arrow list column of
+        vectors: their (n, dim) float64 matrix and the bucket columns
+        ``_assign`` adds besides vn, as arrays bit-identical to the
+        expression — or None unless every vector is dense (``_dense``)."""
         raise NotImplementedError
 
     def _bucket_of(self, key: int) -> int:
@@ -596,16 +607,18 @@ class _BucketedVectorIndex:
         An update whose vector moved buckets is thereby a K5-style
         re-key (delete old partition entry + insert new), which the
         keyed table's commit makes atomic at the manifest level.
+
+        DRIVER-SIZED FOLDS: a batch that needs no locate and fits the
+        keyed table's Arrow gate is bucketed on the driver
+        (:meth:`_fold_rows`) and written through the table's shared
+        Arrow tail — 2 Spark jobs per fold, the tally and one collect.
+        Either way the deletes then the upserts commit as two versions.
         """
         # lazy pin (r14): the tally aggregate below is the first
         # action, so the checkpoint materializes inside it — one job
         batch = batch.localCheckpoint(eager=False)  # pin: read twice
         ct = F.col("change_type")
         t = self._table()
-        direct = batch.filter(
-            ct.isin("delete", "update_preimage") & F.col("v").isNotNull()
-        )
-        old_keys = self._assign(direct).select(self._BUCKET, "id")
         # ONE aggregate over the pinned batch answers every routing
         # question (r10 verdict "what's wrong" #2): has-preimage,
         # needs-locate, has-direct-removals, has-fresh — the four
@@ -619,6 +632,20 @@ class _BucketedVectorIndex:
         )
         if n_locate > 0:
             self._warn_locate_fallback(n_locate)
+        self.last_fold_stats = {
+            "located_fallback_ids": n_locate,
+            "direct_removals": tallies["direct"],
+            "fresh_rows": tallies["fresh"],
+        }
+
+        def removed() -> DataFrame:
+            """(bucket, id) of every removed row, on Spark."""
+            direct = batch.filter(
+                ct.isin("delete", "update_preimage") & F.col("v").isNotNull()
+            )
+            old_keys = self._assign(direct).select(self._BUCKET, "id")
+            if n_locate == 0:
+                return old_keys
             need_locate = batch.filter(
                 (ct == "delete") & F.col("v").isNull()
             )
@@ -644,20 +671,79 @@ class _BucketedVectorIndex:
                     "id",
                 )
             )
-            old_keys = old_keys.unionByName(located)
-        self.last_fold_stats = {
-            "located_fallback_ids": n_locate,
-            "direct_removals": tallies["direct"],
-            "fresh_rows": tallies["fresh"],
-        }
-        if tallies["direct"] + n_locate > 0:
+            return old_keys.unionByName(located)
+
+        arrow = None if n_locate else self._fold_rows(
+            t, batch, tallies["rows"]
+        )
+        for op, verb, rows, n in (
             # delete_by_keys no-ops cleanly when the locate join
             # matched nothing — no pre-probe job needed
-            t.delete_by_keys(old_keys)
-        if tallies["fresh"] > 0:
-            t.upsert_replace_partitions(
-                self._assign(batch.filter(ct.isin("insert", "update")))
-            )
+            ("delete", t.delete_by_keys, removed,
+             tallies["direct"] + n_locate),
+            ("upsert", t.upsert_replace_partitions,
+             lambda: self._assign(batch.filter(ct.isin("insert", "update"))),
+             tallies["fresh"]),
+        ):
+            if n == 0:
+                continue
+            if arrow is not None:
+                with t._write_lock():
+                    # an emptied table takes the verb: a delete is a
+                    # no-op, an upsert its first write
+                    if t.exists() and t._arrow_merge(
+                        arrow[op], op, arrow[op]["id"].null_count > 0
+                    ):
+                        continue
+            verb(rows())
+
+    def _fold_rows(self, t, batch: DataFrame, n_rows: int) -> dict | None:
+        """The fold's writes bucketed on the driver: {"delete": the
+        removed rows' (bucket, id), "upsert": the fresh rows as
+        ``_assign`` gives them}, as Arrow tables in batch order — or
+        None, for the Spark path, unless ``t`` takes a driver-sized
+        upsert of ``_assign``'s rows (``_arrow_sized``) and every
+        vector to bucket is non-NULL and dense. The pin holds the
+        types ``_assign`` gives the columns it computes (the build and
+        every fold wrote them), so only the batch's id and v can
+        differ from it. One ``toArrow`` of the pinned batch;
+        ``_bucket_np`` re-buckets, the norm is ``_norm``'s sequential
+        x·x fold then ``sqrt``, and ``v`` is the batch's own column,
+        so float vectors stay float."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        pinned = {
+            f.name: f.dataType.simpleString()
+            for f in t._pinned_struct().fields
+        }
+        bt = dict(batch.dtypes)
+        if not t._arrow_sized(
+            {**pinned, "id": bt["id"], "v": bt["v"]}, "upsert", n_rows
+        ):
+            return None
+        got = batch.select("id", "v", "change_type").toArrow()
+        ct = got["change_type"]
+        gone = pc.is_in(ct, pa.array(["delete", "update_preimage"]))
+        keep = pc.or_(
+            pc.and_(gone, pc.is_valid(got["v"])),
+            pc.is_in(ct, pa.array(["insert", "update"])),
+        )
+        got, gone = got.filter(keep), gone.filter(keep)
+        bucketed = self._bucket_np(got["v"])
+        if bucketed is None:
+            return None
+        vmat, cols = bucketed
+        vn = np.zeros(len(vmat))
+        for x in vmat.T:
+            vn += x * x
+        rows = pa.table({
+            "id": got["id"], "v": got["v"], "vn": np.sqrt(vn), **cols,
+        })
+        return {
+            "delete": rows.select([self._BUCKET, "id"]).filter(gone),
+            "upsert": rows.filter(pc.invert(gone)),
+        }
 
     def _warn_locate_fallback(self, n_ids: int) -> None:
         """Loud, observable signal that a fold hit the O(index)
@@ -856,14 +942,11 @@ def _centroid_array_df(spark: SparkSession, cents):
     return spark.createDataFrame(rows, schema)
 
 
-def _blas_assign_udf(cents):
-    """Arrow-batched nearest-centroid quantizer for large k: one
-    float64 ``|v|² − 2·V·Cᵀ + |c|²`` matmul per batch. argmin's
-    first-occurrence tie-break equals the min-cid tie because the
-    captured centroid table is cid-sorted. The closure ships the
-    centroids (k × dim doubles, ~2 MB at 4096×64) once per worker."""
-    from pyspark.sql.functions import pandas_udf
-
+def _blas_assign(cents):
+    """Nearest-centroid quantizer for large k, as a function of an
+    (n, dim) float64 matrix: one ``|v|² − 2·V·Cᵀ + |c|²`` matmul.
+    argmin's first-occurrence tie-break equals the min-cid tie because
+    the captured centroid table is cid-sorted."""
     ordered = sorted(
         ((int(cid), [float(x) for x in c]) for cid, c in cents),
         key=lambda t: t[0],
@@ -872,17 +955,32 @@ def _blas_assign_udf(cents):
     cmat = np.asarray([c for _, c in ordered], dtype=np.float64)
     cn2 = (cmat * cmat).sum(axis=1)
 
-    @pandas_udf("long")
-    def assign(vs: pd.Series) -> pd.Series:
-        if len(vs) == 0:
-            return pd.Series([], dtype="int64")
-        vmat = np.asarray(vs.tolist(), dtype=np.float64)
+    def assign(vmat: np.ndarray) -> np.ndarray:
         d = (
             (vmat * vmat).sum(axis=1)[:, None]
             - 2.0 * (vmat @ cmat.T)
             + cn2[None, :]
         )
-        return pd.Series(cids[d.argmin(axis=1)])
+        return cids[d.argmin(axis=1)]
+
+    return assign
+
+
+def _blas_assign_udf(cents):
+    """:func:`_blas_assign` as an Arrow-batched pandas UDF, one matmul
+    per batch. The closure ships the centroids (k × dim doubles, ~2 MB
+    at 4096×64) once per worker."""
+    from pyspark.sql.functions import pandas_udf
+
+    assign_np = _blas_assign(cents)
+
+    @pandas_udf("long")
+    def assign(vs: pd.Series) -> pd.Series:
+        if len(vs) == 0:
+            return pd.Series([], dtype="int64")
+        return pd.Series(
+            assign_np(np.asarray(vs.tolist(), dtype=np.float64))
+        )
 
     return assign
 
@@ -1014,6 +1112,21 @@ class AnnLshIndex(_BucketedVectorIndex):
             "pfx",
             F.shiftrightunsigned(F.col("sig"), self._shift).cast("long"),
         )
+
+    def _bucket_np(self, col) -> tuple[np.ndarray, dict] | None:
+        """Bit j of ``sig`` is ``_fold_dot(v, planes.T) > 0``, the
+        ``lsh_bucket`` fold; ``pfx`` is its top bits. A family of 64 or
+        more planes, whose top bit ``lsh_bucket`` cannot add as a long,
+        stays on Spark."""
+        m = self.meta()
+        vmat = _dense(col, m["dim"])
+        if vmat is None or m["n_planes"] >= 64:
+            return None
+        bits = _fold_dot(vmat, self._planes().T) > 0
+        sig = bits.astype(np.int64) @ (
+            np.int64(1) << np.arange(m["n_planes"], dtype=np.int64)
+        )
+        return vmat, {"sig": sig, "pfx": sig >> self._shift}
 
     def _bucket_of(self, key: int) -> int:
         return key >> self._shift
@@ -1349,6 +1462,34 @@ class IvfIndex(_BucketedVectorIndex):
                 "cluster", _blas_assign_udf(cents)(F.col("v"))
             )
         return rows.select("cluster", "id", "v", _norm(F.col("v")).alias("vn"))
+
+    def _bucket_np(self, col) -> tuple[np.ndarray, dict] | None:
+        """Up to ``_EXPR_ASSIGN_MAX`` centroids, ``ivf_assign``'s
+        expression: L2² as a sequential ``d*d`` fold, and the FIRST
+        minimum in centroid-list order wins (``array_position`` of
+        ``array_min``) — not ``_nearest``'s cid order. Beyond it, the
+        BLAS quantizer the UDF wraps."""
+        cents = self.centroids()
+        cmat = np.asarray([c for _, c in cents], dtype=np.float64)
+        vmat = _dense(col, cmat.shape[1])
+        if vmat is None:
+            return None
+        cids = np.asarray([cid for cid, _ in cents], dtype=np.int64)
+
+        def assign(block: np.ndarray) -> np.ndarray:
+            acc = np.zeros((len(block), len(cents)))
+            for j in range(cmat.shape[1]):
+                d = block[:, j, None] - cmat[None, :, j]
+                acc += d * d
+            return cids[acc.argmin(axis=1)]
+
+        if len(cents) > _EXPR_ASSIGN_MAX:
+            assign = _blas_assign(cents)
+        out = np.empty(len(vmat), np.int64)
+        step = max(1, (1 << 20) // len(cents))  # ~8 MB of distances
+        for s in range(0, len(vmat), step):
+            out[s : s + step] = assign(vmat[s : s + step])
+        return vmat, {"cluster": out}
 
     def _bucket_of(self, key: int) -> int:
         return key

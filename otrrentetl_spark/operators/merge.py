@@ -55,6 +55,8 @@ _ANY_LINEAGE = object()
 # met it near 1M, so the bound sits well below the crossover and caps
 # what the driver holds (~60 MB at 100k such rows)
 _ARROW_MAX_ROWS = 100_000
+# pinned key types the driver-sized paths bisect, split and join on
+_ARROW_KEY_TYPES = ("string", "tinyint", "smallint", "int", "bigint")
 
 
 from contextlib import contextmanager as _contextmanager
@@ -113,6 +115,56 @@ def _nullable(dt: T.DataType) -> T.DataType:
     if isinstance(dt, T.MapType):
         return T.MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
     return dt
+
+
+def _conform(t, schema):
+    """Arrow table ``t`` cast column by column to ``schema`` (a pinned
+    schema's Arrow form), a column ``t`` lacks as NULL — what the
+    pinned Spark read gives for a column a file predates."""
+    import pyarrow as pa
+
+    return pa.table(
+        [
+            t[f.name].cast(f.type) if f.name in t.column_names
+            else pa.nulls(t.num_rows, f.type)
+            for f in schema
+        ],
+        schema=schema,
+    )
+
+
+def _same_values(a, b):
+    """Spark's ``eqNullSafe`` of two equally long Arrow arrays, row by
+    row, as a numpy bool array: NULL equals NULL, NaN equals NaN,
+    -0.0 equals 0.0, and arrays compare element by element, NULL
+    elements included. Atomic types and arrays of them only."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if isinstance(a, pa.ChunkedArray):
+        a, b = a.combine_chunks(), b.combine_chunks()
+
+    def bools(x):
+        return pc.fill_null(x, False).to_numpy(zero_copy_only=False)
+
+    both_null = bools(pc.and_(pc.is_null(a), pc.is_null(b)))
+    if pa.types.is_list(a.type):
+        # rows with two non-NULL lists of one length compare their
+        # elements; a row with any differing element differs
+        sel = np.flatnonzero(bools(pc.equal(
+            pc.list_value_length(a), pc.list_value_length(b)
+        )))
+        eq = np.zeros(len(a), bool)
+        eq[sel] = True
+        sa, sb = a.take(sel), b.take(sel)
+        differ = ~_same_values(pc.list_flatten(sa), pc.list_flatten(sb))
+        eq[sel[pc.list_parent_indices(sa).to_numpy()[differ]]] = False
+        return eq | both_null
+    eq = pc.equal(a, b)
+    if pa.types.is_floating(a.type):
+        eq = pc.or_kleene(eq, pc.and_kleene(pc.is_nan(a), pc.is_nan(b)))
+    return bools(eq) | both_null
 
 
 def _apply_manifest_delta(
@@ -381,17 +433,20 @@ class KeyedParquetTable:
     pinned columns and types, and the batch rows plus the manifest
     row counts of the files to rewrite are at most ``_ARROW_MAX_ROWS``
     (every such file having stats). The pinned batch is collected
-    once (``toArrow``), the COW split bisects its keys against the
-    footer bounds in Python, and the touched partitions merge in
-    pyarrow on the driver — 2 Spark jobs per call (the routing
-    aggregate and the collect). Everything else — larger batches,
+    once (``toArrow``) and handed to ``_arrow_merge``: the COW split
+    bisects its keys against the footer bounds in Python, and the
+    touched partitions merge in pyarrow on the driver — 2 Spark jobs
+    per call (the routing aggregate and the collect). The vector
+    index's refresh fold writes through the same ``_arrow_merge``.
+    ``changes`` reads on Arrow under the same bound, in 0 jobs, when
+    both versions carry one pin. Everything else — larger batches,
     non-local stores, schema drift, a rewrite file without stats —
-    and ``overwrite``, ``compact``, ``changes`` and the first write
-    into an empty table take the SPARK path. Both paths commit
-    through the same ``_commit_snapshot``, agree row for row, and
-    write files either path reads (the Arrow writer casts every
-    column to the pinned schema's Arrow type; see ``_arrow_write``
-    for why the timestamp cast matters).
+    and ``overwrite``, ``compact`` and the first write into an empty
+    table take the SPARK path. Both paths commit through the same
+    ``_commit_snapshot``, agree row for row, and write files either
+    path reads (the Arrow writer casts every column to the pinned
+    schema's Arrow type; see ``_arrow_write`` for why the timestamp
+    cast matters).
     """
 
     def __init__(self, spark, path: str, keys: Sequence[str] = DEFAULT_KEYS):
@@ -1378,8 +1433,8 @@ class KeyedParquetTable:
         return local_relation(sess, _nullable(T.StructType(fields)))
 
     def _version_doc(self, version: int) -> dict:
-        """The state of committed ``version`` ({version, files, ts,
-        op, table_schema}), validated readable. Validation is
+        """The state of committed ``version`` ({version, files, stats,
+        ts, op, table_schema}), validated readable. Validation is
         DIFF-cheap: a file of the CURRENT snapshot is on disk by the
         commit invariant, so only the old version's files that have
         since been superseded need an existence probe — O(version
@@ -1395,7 +1450,7 @@ class KeyedParquetTable:
                 " table_schema — refusing to read it"
             )
         state = self._state_at(int(version), cache=False)
-        doc = {**doc, "files": list(state["files"])}
+        doc = {**doc, "files": list(state["files"]), "stats": state["stats"]}
         if doc["files"]:
             cur_live = set(self._require_snapshot()["files"])
             missing = [
@@ -1527,8 +1582,8 @@ class KeyedParquetTable:
         return out
 
     def _cow_split(
-        self, key_set: DataFrame, parts, has_null: bool | None = None,
-        collected=None,
+        self, key_set: DataFrame | None, parts,
+        has_null: bool | None = None, collected=None,
     ) -> tuple[list[str], list[str]] | None:
         """File-level copy-on-write split of the touched partitions'
         live files: ``(hit, clean)``, where *hit* files MAY contain a
@@ -1552,20 +1607,27 @@ class KeyedParquetTable:
         row-key dtypes (float NaN never enters footer bounds;
         decimal/date bounds aren't JSON-plain anyway).
 
-        ``collected``: ``key_set``'s rows already on the driver as an
-        Arrow table (the Arrow path of the verbs). The range probe then
-        bisects its sorted keys against each file's bounds in Python
-        and runs no Spark job; the classification is the same."""
+        ``collected``: the key rows already on the driver as an Arrow
+        table (the driver-sized writes, :meth:`_arrow_merge`). The
+        range probe then bisects its sorted keys against each file's
+        bounds in Python and runs no Spark job; the classification is
+        the same, and ``key_set`` may be None. The row-key type is the
+        pinned one; a ``key_set`` whose key is of another type family
+        gets no split."""
         vals = list(parts)
         if len(self.keys) < 2 or not vals:
             return None
         rk = self.keys[1]
-        rk_type = dict(key_set.dtypes)[rk]
-        if rk_type in ("tinyint", "smallint", "int", "bigint"):
-            py_t = int
-        elif rk_type == "string":
-            py_t = str
-        else:
+
+        def family(dtype):
+            if dtype == "string":
+                return str
+            return int if dtype in _ARROW_KEY_TYPES else None
+
+        py_t = family(self._pinned_struct()[rk].dataType.simpleString())
+        if py_t is None or key_set is not None and (
+            family(dict(key_set.dtypes)[rk]) is not py_t
+        ):
             return None
         snap = self._require_snapshot()
         dirs = {self._partition_dir_of(v) for v in vals}
@@ -1611,7 +1673,6 @@ class KeyedParquetTable:
         if has_null is None and not bool(key_set.schema[rk].nullable):
             has_null = False
         need_null = has_null is None and bool(null_sensitive)
-        sess = key_set.sparkSession
         if ranged and collected is not None:
             import bisect
 
@@ -1632,6 +1693,7 @@ class KeyedParquetTable:
             # probe key to the same wide type is lossless, so the
             # range comparison is unchanged.
             probe_t = "bigint" if py_t is int else "string"
+            sess = key_set.sparkSession
             try:
                 # The bounds frame as an Arrow LocalRelation: the same
                 # local plan a SQL VALUES list gives (createDataFrame
@@ -1679,7 +1741,7 @@ class KeyedParquetTable:
                 if need_null:
                     has_null = True
         elif need_null:
-            with _no_aqe(sess):
+            with _no_aqe(key_set.sparkSession):
                 has_null = bool(
                     key_set.agg(
                         F.max(F.col(rk).isNull()).alias("__n")
@@ -1714,13 +1776,18 @@ class KeyedParquetTable:
         join runs once and updates fan out via one generator.
 
         MANIFEST-POWERED: files common to both versions cannot
-        contribute changes (every verb rewrites whole partition file
-        sets), so only the two manifests' symmetric difference is ever
-        read — at 100 TB, diffing two versions that touched one
-        partition scans one partition, not the table. Rewritten-but-
-        identical rows (an upsert re-materializes its partition's
-        unchanged rows) are compared null-safely column-by-column and
-        dropped."""
+        contribute changes (every verb rewrites whole files — only the
+        files its COW split hits), so only the two manifests'
+        symmetric difference is ever read — at 100 TB, diffing two
+        versions that touched one file reads that file, not the
+        table. Rewritten-but-identical rows (an upsert re-materializes
+        the unchanged rows of every file it rewrites) are compared
+        null-safely column-by-column and dropped.
+
+        A driver-sized diff runs on Arrow in 0 Spark jobs
+        (:meth:`_arrow_changes`, with the same rows and types); the
+        rest — and every diff across a schema change — is one Spark
+        join."""
         doc_a = self._version_doc(from_version)
         if to_version is None:
             to_version = self._require_snapshot()["version"]
@@ -1731,6 +1798,11 @@ class KeyedParquetTable:
             return self._empty_read(
                 self.spark, doc_b["table_schema"]
             ).withColumn("change_type", F.lit(""))
+        fast = self._arrow_changes(
+            (old_only, doc_a), (new_only, doc_b), include_preimage
+        )
+        if fast is not None:
+            return fast
         # each side reads through its own version's pin: the old side
         # may carry columns the newer pin no longer has
         old_df, new_df = (
@@ -1809,6 +1881,119 @@ class KeyedParquetTable:
             *out,
             *[F.col(f"__cdc_ev.{c}").alias(c) for c in vals],
             F.col("__cdc_ev.change_type").alias("change_type"),
+        )
+
+    def _arrow_changes(self, old, new, include_preimage: bool):
+        """The Arrow twin of :meth:`changes` for a driver-sized diff:
+        the same rows, columns and types as a local relation, in 0
+        Spark jobs. ``old`` and ``new`` are (files only that side
+        holds, its version doc). Returns None — the caller plans the
+        Spark join — unless the table is local with two string or
+        integral keys, both versions carry the same pin (schema
+        evolution stays on Spark), every value column is atomic or an
+        array of atomics, and every file read has stats and they hold
+        at most ``_ARROW_MAX_ROWS`` rows.
+
+        pyarrow 16's join refuses list columns and never matches NULL
+        keys, so it joins only the key columns — NULLs filled, a NULL
+        flag per key beside them, so keys match null-safely — and row
+        indices, and ``take``s the rest. Values compare as Spark's
+        ``eqNullSafe`` does (:func:`_same_values`)."""
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        from pyspark.sql.pandas.types import to_arrow_type
+
+        pin = new[1]["table_schema"]
+        root = self._store.local_path(self.path.rstrip("/"))
+        if (
+            root is None
+            or len(self.keys) != 2
+            or old[1]["table_schema"] != pin
+        ):
+            return None
+        st = self._pinned_struct(pin)
+        pk = self.keys[0]
+        vals = [f.name for f in st.fields if f.name not in self.keys]
+        if not all(
+            st[k].dataType.simpleString() in _ARROW_KEY_TYPES
+            for k in self.keys
+        ) or not all(
+            isinstance(
+                getattr(st[c].dataType, "elementType", st[c].dataType),
+                T.AtomicType,
+            )
+            for c in vals
+        ):
+            return None
+        read_stats = [
+            doc["stats"].get(f) for rels, doc in (old, new) for f in rels
+        ]
+        if None in read_stats or sum(
+            s["rows"] for s in read_stats
+        ) > _ARROW_MAX_ROWS:
+            return None
+        schema = self._arrow_schema(pin)
+        pk_type = to_arrow_type(st[pk].dataType)
+
+        def read(rels):
+            # the partition column from the directory name, last, as
+            # Spark's pinned read types it
+            pieces = []
+            for f in rels:
+                t = self._arrow_file(root, f, schema)
+                v = pa.scalar(
+                    self._partition_value_of_dir(f.split("/", 1)[0]),
+                    pa.string(),
+                ).cast(pk_type)
+                pieces.append(t.append_column(pk, pa.repeat(v, t.num_rows)))
+            return pa.concat_tables(pieces) if pieces else schema.append(
+                pa.field(pk, pk_type)
+            ).empty_table()
+
+        def keyed(t, idx):
+            cols = {idx: pa.array(np.arange(t.num_rows, dtype=np.int64))}
+            for k in self.keys:
+                fill = "" if pa.types.is_string(t[k].type) else 0
+                cols[k] = pc.fill_null(t[k], fill)
+                cols[f"__cdc_null_{k}"] = pc.is_null(t[k])
+            return pa.table(cols)
+
+        o_t, n_t = read(old[0]), read(new[0])
+        j = keyed(o_t, "__cdc_o").join(
+            keyed(n_t, "__cdc_n"),
+            keys=[c for k in self.keys for c in (k, f"__cdc_null_{k}")],
+            join_type="full outer",
+        )
+        oi = pc.fill_null(j["__cdc_o"], -1).to_numpy()
+        ni = pc.fill_null(j["__cdc_n"], -1).to_numpy()
+        both = (oi >= 0) & (ni >= 0)
+        po, pn = oi[both], ni[both]
+        o_m, n_m = o_t.take(po), n_t.take(pn)
+        upd = np.zeros(len(po), bool)
+        for c in vals:
+            upd |= ~_same_values(o_m[c], n_m[c])
+        names = [*self.keys, *vals]
+        events = [
+            (n_t, ni[oi < 0], "insert"),
+            (o_t, oi[ni < 0], "delete"),
+        ]
+        if include_preimage:
+            events.append((o_t, po[upd], "update_preimage"))
+        events.append((n_t, pn[upd], "update"))
+        out = pa.concat_tables([
+            t.take(idx).select(names).append_column(
+                "change_type", pa.array([ct] * len(idx), pa.string())
+            )
+            for t, idx, ct in events
+        ])
+        fields = [st[c] for c in names]
+        return local_relation(
+            self.spark,
+            _nullable(T.StructType(
+                fields + [T.StructField("change_type", T.StringType())]
+            )),
+            dict(zip(out.column_names, out.columns)),
         )
 
     def _read_with(self, sess, version: int | None = None) -> DataFrame:
@@ -1926,13 +2111,14 @@ class KeyedParquetTable:
             return df
         return df.withColumn(pk, F.nullif(F.col(pk), F.lit("")))
 
-    def _arrow_sized(self, batch: DataFrame, op: str, n_rows: int) -> bool:
+    def _arrow_sized(self, dtypes: dict, op: str, n_rows: int) -> bool:
         """The half of the Arrow gate known before the batch is
         collected: a local two-key table whose keys are pinned as
         string or an integral type, and at most
-        ``_ARROW_MAX_ROWS`` batch rows typed exactly as the pinned
-        schema — every pinned column for an upsert (no added, missing
-        or drifted column), the two keys for a delete."""
+        ``_ARROW_MAX_ROWS`` batch rows whose ``dtypes`` (column →
+        simpleString) are exactly the pinned ones — every pinned
+        column for an upsert (no added, missing or drifted column),
+        the two keys for a delete."""
         if (
             n_rows > _ARROW_MAX_ROWS
             or len(self.keys) != 2
@@ -1946,9 +2132,8 @@ class KeyedParquetTable:
         want = pinned if op == "upsert" else {
             k: pinned.get(k) for k in self.keys
         }
-        return dict(batch.dtypes) == want and all(
-            pinned[k] in ("string", "tinyint", "smallint", "int", "bigint")
-            for k in self.keys
+        return dtypes == want and all(
+            pinned[k] in _ARROW_KEY_TYPES for k in self.keys
         )
 
     def _merge_touched(
@@ -1988,13 +2173,17 @@ class KeyedParquetTable:
             return
         has_null = bool(rk) and any(r["__n"] for r in part_rows)
         n_rows = sum(r["__c"] for r in part_rows)
-        dirs = {self._partition_dir_of(p) for p in parts}
         # reads the pinned blocks: one job, none on the Spark path
         collected = (
             batch.toArrow()
-            if not drift and self._arrow_sized(batch, op, n_rows)
+            if not drift and self._arrow_sized(dict(batch.dtypes), op, n_rows)
             else None
         )
+        if collected is not None and self._arrow_merge(
+            collected, op, has_null
+        ):
+            return
+        dirs = {self._partition_dir_of(p) for p in parts}
         # file-level copy-on-write (r10): only the files whose footer
         # row-key range can contain a batch key are rewritten; files
         # the manifest stats prove clean stay live untouched. Wider
@@ -2004,19 +2193,6 @@ class KeyedParquetTable:
             collected=collected,
         )
         snap = self._require_snapshot()
-        stats = snap["stats"]
-        if (
-            collected is not None
-            and split is not None
-            and all(f in stats for f in split[0])
-            and n_rows + sum(stats[f]["rows"] for f in split[0])
-            <= _ARROW_MAX_ROWS
-        ):
-            self._append_and_commit(
-                self._arrow_write(collected, split[0], op == "upsert"),
-                op, dirs, hit=split[0],
-            )
-            return
         rels = split[0] if split is not None else [
             f for f in snap["files"] if f.split("/", 1)[0] in dirs
         ]
@@ -2039,6 +2215,59 @@ class KeyedParquetTable:
             rows, op, dirs,
             hit=None if split is None else split[0],
             written_schema=rows.schema if op == "upsert" else None,
+        )
+
+    def _arrow_merge(self, collected, op: str, has_null: bool) -> bool:
+        """The Arrow tail of every driver-sized write — the verbs' and
+        the vector-index fold's: COW-split the partitions ``collected``
+        touches against its own keys (no Spark job), merge them in
+        pyarrow (:meth:`_arrow_write`) and commit. ``collected`` holds
+        the batch rows typed as pinned, an empty-string partition key
+        already mapped to NULL; ``op`` is "upsert" (whole rows) or
+        "delete" (the keys); ``has_null``: some row key is NULL. MUST
+        run under the writer lock. Returns False, having written
+        nothing, when a file to rewrite has no stats or the batch rows
+        plus the rewritten files' rows pass ``_ARROW_MAX_ROWS``."""
+        parts = set(collected.column(self.keys[0]).to_pylist())
+        split = self._cow_split(
+            None, parts, has_null=has_null, collected=collected
+        )
+        if split is None:
+            return False
+        stats = self._require_snapshot()["stats"]
+        hit = split[0]
+        if not all(f in stats for f in hit) or collected.num_rows + sum(
+            stats[f]["rows"] for f in hit
+        ) > _ARROW_MAX_ROWS:
+            return False
+        self._append_and_commit(
+            self._arrow_write(collected, hit, op == "upsert"),
+            op, {self._partition_dir_of(p) for p in parts}, hit=hit,
+        )
+        return True
+
+    def _arrow_schema(self, pin: str | None = None):
+        """The Arrow schema of the data files under ``pin`` (default
+        the current one): every pinned column but the partition key,
+        in pin order, nullable."""
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        return to_arrow_schema(T.StructType([
+            f for f in _nullable(self._pinned_struct(pin)).fields
+            if f.name != self.keys[0]
+        ]))
+
+    def _arrow_file(self, root: str, rel: str, schema):
+        """Data file ``rel`` under local ``root`` read by pyarrow and
+        conformed to ``schema`` (see :meth:`_arrow_write` for the
+        timestamp unit)."""
+        import pyarrow.parquet as pq
+
+        return _conform(
+            pq.ParquetFile(
+                f"{root}/{rel}", coerce_int96_timestamp_unit="us"
+            ).read(),
+            schema,
         )
 
     def _arrow_write(self, batch, hit: list[str], upsert: bool) -> list[str]:
@@ -2066,24 +2295,9 @@ class KeyedParquetTable:
         import pyarrow as pa
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import to_arrow_schema
 
         pk, rk = self.keys
-        schema = to_arrow_schema(T.StructType([
-            f for f in _nullable(self._pinned_struct()).fields
-            if f.name != pk
-        ]))
-
-        def conform(t):
-            return pa.table(
-                [
-                    t[f.name].cast(f.type) if f.name in t.column_names
-                    else pa.nulls(t.num_rows, f.type)
-                    for f in schema
-                ],
-                schema=schema,
-            )
-
+        schema = self._arrow_schema()
         root = self._store.local_path(self.path.rstrip("/"))
         pks = batch.column(pk).to_pylist()
         dir_of = {v: self._partition_dir_of(v) for v in set(pks)}
@@ -2102,12 +2316,10 @@ class KeyedParquetTable:
                     t[rk], value_set=drop, skip_nulls=False
                 )))
                 for t in (
-                    conform(pq.ParquetFile(
-                        f"{root}/{f}", coerce_int96_timestamp_unit="us"
-                    ).read())
+                    self._arrow_file(root, f, schema)
                     for f in hit if f.split("/", 1)[0] == d
                 )
-            ] + ([conform(rows)] if upsert else [])
+            ] + ([_conform(rows, schema)] if upsert else [])
             if not pieces:
                 continue
             out = pa.concat_tables(pieces)

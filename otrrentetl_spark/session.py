@@ -87,7 +87,9 @@ def local_relation(
     parallelizes the rows into an RDD that every evaluation scans
     through Python workers. No SQL text is involved, so no parser
     conf can alter a value. A value the schema's type cannot hold
-    (an int past int64) raises here; nothing is truncated."""
+    (an int past int64) raises here; nothing is truncated. Chunked
+    columns are combined first: ``createDataFrame`` drops every record
+    batch after an empty one."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import _parse_datatype_string
@@ -96,7 +98,7 @@ def local_relation(
         schema = _parse_datatype_string(schema)
     cols = columns or {f.name: [] for f in schema.fields}
     table = pa.Table.from_pydict(cols, schema=to_arrow_schema(schema))
-    return spark.createDataFrame(table, schema)
+    return spark.createDataFrame(table.combine_chunks(), schema)
 
 
 def pin_local(df: DataFrame) -> tuple[DataFrame, int]:

@@ -1239,3 +1239,146 @@ def test_ivf_driver_path_query_collect_is_bounded_in_doubles(
     assert len(spark_path_calls) == 1
     assert collected and max(collected) * 4 <= bound + 4, collected
     assert got == want
+
+
+# ------------------------------- driver-sized fold of apply_changes
+# centroids listed in non-ascending cid order, at integer points where
+# the test vectors tie exactly: ivf_assign keeps the FIRST minimum in
+# this list order (cid 5 over 2 and 9 for [1, 0])
+_TIE_CENTS = [(5, [0.0, 0.0]), (2, [2.0, 0.0]), (9, [1.0, 1.0]), (1, [3.0, 3.0])]
+
+
+def _fold_case(case):
+    """(build(spark, corpus, path), corpus rows, batch rows, vector
+    type) for one fold parity case."""
+    import numpy as np
+
+    rng = np.random.RandomState(3)
+    if case == "lsh_near_zero":
+        dim = 16
+        planes = similarity.hyperplanes(dim, 8)
+        vecs = []
+        for j in range(16):
+            h = planes[j % 8]
+            v = rng.randn(dim)
+            vecs.append((v - (np.dot(v, h) / np.dot(h, h)) * h).tolist())
+
+        def build(spark, corpus, path):
+            return AnnLshIndex.build(spark, corpus, path, n_planes=8, prefix_bits=3)
+
+        corpus = list(enumerate(vecs[:10]))
+        batch = (
+            [(i, vecs[i], "update_preimage") for i in (0, 1)]
+            + [(i, vecs[10 + i], "update") for i in (0, 1)]
+            + [(2, vecs[2], "delete")]
+            + [(20 + i, vecs[12 + i], "insert") for i in range(4)]
+        )
+        return build, corpus, batch, "array<double>"
+    if case == "ivf_blas":
+        k, dim = annindex._EXPR_ASSIGN_MAX + 6, 4
+        cmat = rng.randn(k, dim) * 50.0
+        cents = [(int(c), cmat[c].tolist()) for c in rng.permutation(k)]
+        vecs = [
+            (cmat[i % k] + rng.randn(dim)).tolist() for i in range(40)
+        ]
+    else:
+        cents = _TIE_CENTS
+        points = [[1.0, 0.0], [0.0, 1.0], [2.0, 1.0], [2.0, 2.0],
+                  [0.5, 0.5], [3.0, 2.0]]
+        vecs = points + [(rng.rand(2) * 3).tolist() for _ in range(20)]
+
+    def build(spark, corpus, path):
+        return IvfIndex.build(spark, corpus, path, cents)
+
+    corpus = list(enumerate(vecs[:20]))
+    batch = (
+        [(0, vecs[0], "update_preimage"), (0, vecs[3], "update")]
+        + [(1, vecs[1], "update_preimage"), (1, vecs[4], "update")]
+        + [(5, vecs[5], "delete")]
+        + [(100 + i, vecs[i], "insert") for i in range(6)]
+        + [(200 + i, v, "insert") for i, v in enumerate(vecs[20:])]
+    )
+    vtype = "array<float>" if case == "ivf_float" else "array<double>"
+    return build, corpus, batch, vtype
+
+
+def _spy_fold_rows(monkeypatch):
+    ran = []
+    fold_rows = annindex._BucketedVectorIndex._fold_rows
+
+    def spy(self, *args):
+        out = fold_rows(self, *args)
+        ran.append("arrow" if out is not None else "spark")
+        return out
+
+    monkeypatch.setattr(annindex._BucketedVectorIndex, "_fold_rows", spy)
+    return ran
+
+
+@pytest.mark.parametrize(
+    "case", ["ivf_ties", "ivf_float", "ivf_blas", "lsh_near_zero"]
+)
+def test_arrow_fold_equals_spark_fold(spark, tmp_path, monkeypatch, case):
+    """The driver-sized fold writes exactly the index the Spark fold
+    writes: every column of every index row (repr: bit for bit), and
+    the same two versions. Cases: IVF ties under centroids listed out
+    of cid order, array<float> vectors, k above ``_EXPR_ASSIGN_MAX``
+    (the BLAS quantizer), LSH planes a vector is within an ulp of."""
+    from otrrentetl_spark.operators import merge
+
+    ran = _spy_fold_rows(monkeypatch)
+    build, corpus, batch, vtype = _fold_case(case)
+    cast = F.col("v").cast(vtype)
+    states = {}
+    for side, bound in (("arrow", merge._ARROW_MAX_ROWS), ("spark", 0)):
+        monkeypatch.setattr(merge, "_ARROW_MAX_ROWS", bound)
+        idx = build(
+            spark,
+            spark.createDataFrame(corpus, "vec_id long, v array<double>")
+            .select("vec_id", cast.alias("embedding")),
+            str(tmp_path / side),
+        )
+        v0 = idx._table()._read_snapshot()["version"]
+        idx.apply_changes(
+            spark.createDataFrame(
+                batch, "id long, v array<double>, change_type string"
+            ).withColumn("v", cast)
+        )
+        t = idx._table()
+        assert t._read_snapshot()["version"] == v0 + 2
+        states[side] = (
+            t.read().dtypes, sorted(map(repr, t.read().collect()))
+        )
+    assert ran == ["arrow", "spark"]
+    assert states["arrow"] == states["spark"]
+    if case == "ivf_ties":
+        rows = {r.id: r.cluster for r in t.read().collect()}
+        # [1, 0] ties cid 5, 2 and 9; [0, 1] ties 5 and 9; [2, 1]
+        # ties 2 and 9; [2, 2] ties 9 and 1: list order decides
+        assert [rows[i] for i in (100, 101, 102, 103)] == [5, 5, 2, 9]
+
+
+def test_arrow_fold_leaves_null_vector_delete_to_locate(
+    spark, tmp_path, monkeypatch
+):
+    """A NULL-vector delete cannot re-derive its bucket: the fold takes
+    the Spark locate fallback, with its warning and counter, and never
+    collects the batch for the driver path."""
+    ran = _spy_fold_rows(monkeypatch)
+    build, corpus, _, _ = _fold_case("ivf_ties")
+    idx = build(
+        spark,
+        spark.createDataFrame(corpus, "vec_id long, embedding array<double>"),
+        str(tmp_path / "ivf"),
+    )
+    batch = spark.createDataFrame(
+        [(3, None, "delete"), (50, [1.0, 0.0], "insert")],
+        "id long, v array<double>, change_type string",
+    )
+    with pytest.warns(RuntimeWarning, match="include_preimage"):
+        idx.apply_changes(batch)
+    assert ran == []
+    ids = {r.id for r in idx._table().read().collect()}
+    assert 3 not in ids and 50 in ids
+    assert idx.last_fold_stats["located_fallback_ids"] == 1
+    assert idx.stats()["locate_fallback_ids_total"] == 1

@@ -2535,3 +2535,105 @@ def test_time_travel_reads_its_version_pin_after_widening(spark, tmp_path):
     assert sorted(
         (r.RowKey, r.n, r.change_type) for r in t.changes(1, 2).collect()
     ) == [("2", 1 << 40, "update")]
+
+
+def _canon_rows(df):
+    # repr keeps NaN equal to NaN and -0.0 apart from 0.0
+    return sorted(map(repr, df.collect()))
+
+
+def test_arrow_changes_equal_spark_changes(spark, tmp_path, monkeypatch):
+    """The Arrow change feed equals the Spark join, row for row and in
+    its schema, with and without pre-images, on the value edge cases of
+    ``eqNullSafe``: a rewritten row whose vector holds NaN, or -0.0
+    where it held 0.0, is no change; NULL array elements compare as
+    values; the NULL and the empty-string partitions match null-safely;
+    an int partition column keeps its type. A version pair whose pins
+    differ takes the Spark path. A spy shows which path ran."""
+    ran = []
+    arrow_changes = merge.KeyedParquetTable._arrow_changes
+
+    def spy(self, *args):
+        out = arrow_changes(self, *args)
+        ran.append("arrow" if out is not None else "spark")
+        return out
+
+    monkeypatch.setattr(merge.KeyedParquetTable, "_arrow_changes", spy)
+    bound = merge._ARROW_MAX_ROWS
+
+    def both(t, a, b):
+        out = []
+        for pre in (False, True):
+            ran.clear()
+            fast = t.changes(a, b, include_preimage=pre)
+            monkeypatch.setattr(merge, "_ARROW_MAX_ROWS", 0)
+            slow = t.changes(a, b, include_preimage=pre)
+            monkeypatch.setattr(merge, "_ARROW_MAX_ROWS", bound)
+            assert ran == ["arrow", "spark"]
+            assert fast.schema == slow.schema
+            assert _canon_rows(fast) == _canon_rows(slow), (a, b, pre)
+            out.append(fast)
+        return out
+
+    nan = float("nan")
+    schema = ("PartitionKey string, RowKey string, v array<double>,"
+              " f array<float>, x double")
+    t = merge.KeyedParquetTable(spark, str(tmp_path / "edges"), KEYS)
+    t.retain_stale_s = 3600.0
+    t.overwrite(spark.createDataFrame([
+        ("p", "nan", [nan, 1.0], [nan], nan),
+        ("p", "zero", [0.0], [0.0], 0.0),
+        ("p", "nulls", [1.0, None], [None], 1.0),
+        ("p", "moved", [1.0, None], [1.0], 1.0),
+        ("p", "longer", [None], None, 1.0),
+        ("p", "empty", None, [], 1.0),
+        ("p", "gone", [2.0], [2.0], 2.0),
+        ("", "e", [3.0], [3.0], 3.0),
+        (None, "n", [4.0], [4.0], 4.0),
+        (None, None, [5.0], [5.0], 5.0),
+    ], schema))
+    t.upsert_replace_partitions(spark.createDataFrame([
+        ("p", "nan", [nan, 1.0], [nan], nan),
+        ("p", "zero", [-0.0], [-0.0], -0.0),
+        ("p", "nulls", [1.0, None], [None], 1.0),
+        ("p", "moved", [None, 1.0], [1.0], 1.0),
+        ("p", "longer", [None, None], None, 1.0),
+        ("p", "empty", [], [], 1.0),
+        ("", "e", [3.0], [3.0], 3.5),
+        (None, "n", [4.0], [4.0], 4.0),
+        (None, None, [5.0], [5.0, None], 5.0),
+        ("", "new", [6.0], [6.0], 6.0),
+    ], schema))
+    t.delete_by_keys(spark.createDataFrame(
+        [("p", "gone"), ("", "e")], "PartitionKey string, RowKey string"
+    ))
+    feed, _ = both(t, 1, 2)
+    assert sorted(
+        ((r.RowKey or "", r.change_type) for r in feed.collect())
+    ) == [("", "update"), ("e", "update"), ("empty", "update"),
+          ("longer", "update"), ("moved", "update"), ("new", "insert")]
+    both(t, 2, 3)
+    both(t, 1, 3)
+
+    t = merge.KeyedParquetTable(spark, str(tmp_path / "intpk"), KEYS)
+    t.retain_stale_s = 3600.0
+    schema = "PartitionKey int, RowKey bigint, val string"
+    t.overwrite(spark.createDataFrame(
+        [(1, 1, "a"), (1, 2, "b"), (None, 3, "c"), (-4, 4, "d")], schema
+    ))
+    t.upsert_replace_partitions(spark.createDataFrame(
+        [(1, 2, "B"), (None, 3, "c"), (-4, 5, "e")], schema
+    ))
+    feed, _ = both(t, 1, 2)
+    assert dict(feed.dtypes)["PartitionKey"] == "int"
+    assert sorted(
+        (r.PartitionKey, r.RowKey, r.change_type) for r in feed.collect()
+    ) == [(-4, 5, "insert"), (1, 2, "update")]
+
+    # an added column changes the pin: the diff stays on Spark
+    t.upsert_replace_partitions(spark.createDataFrame(
+        [(1, 9, "z", 1.5)], schema + ", extra double"
+    ))
+    ran.clear()
+    got = [(r.RowKey, r.extra, r.change_type) for r in t.changes(2, 3).collect()]
+    assert ran == ["spark"] and got == [(9, 1.5, "insert")]

@@ -300,7 +300,7 @@ def _model_rows(state):
     return sorted(((pk, rk, v) for (pk, rk), v in state.items()), key=_nskey)
 
 
-def _model_changes(old, new):
+def _model_changes(old, new, preimage=False):
     out = []
     for k in old.keys() | new.keys():
         if k not in old:
@@ -309,6 +309,8 @@ def _model_changes(old, new):
             out.append((*k, old[k], "delete"))
         elif old[k] != new[k]:
             out.append((*k, new[k], "update"))
+            if preimage:
+                out.append((*k, old[k], "update_preimage"))
     return sorted(out, key=_nskey)
 
 
@@ -331,9 +333,11 @@ def test_keyed_table_model_equivalence(spark, tmp_path, monkeypatch, steps):
     """Model-based check of the snapshot write protocol (r7): a random
     sequence of disk-backed verbs must match an in-memory dict model
     at EVERY committed version — ``read(version=v)`` and
-    ``changes(v-1, v)`` — and in the current, pinned-schema
-    ``read()``, on both write paths of the driver-sized verbs (the
-    Arrow bound forced to 0 sends every call to Spark).
+    ``changes(v-1, v)`` with and without pre-images — and in the
+    current, pinned-schema ``read()``, on both write paths of the
+    driver-sized verbs × both read paths of the change feed (the
+    Arrow bound forced to 0 sends every call to Spark; it is set
+    separately around the verbs and around each ``changes``).
     The files on disk must be exactly the live and the retired files,
     and after ``vacuum(0)`` exactly the manifest."""
     import os
@@ -343,13 +347,13 @@ def test_keyed_table_model_equivalence(spark, tmp_path, monkeypatch, steps):
     from otrrentetl_spark.operators.merge import KeyedParquetTable
 
     for arrow_max in (0, 10**9):
-        monkeypatch.setattr(merge, "_ARROW_MAX_ROWS", arrow_max)
         path = str(tmp_path / f"model_{uuid.uuid4().hex[:8]}")
         t = KeyedParquetTable(spark, path, ("PartitionKey", "RowKey"))
         t.retain_stale_s = 3600.0  # every version stays readable
         model: dict = {}
         history: dict = {}
         for verb, rows in steps:
+            monkeypatch.setattr(merge, "_ARROW_MAX_ROWS", arrow_max)
             df = _kv_df(spark, rows)
             dd = {}
             for (pk, rk), v in rows or [(("z", "z"), 0)]:
@@ -380,15 +384,20 @@ def test_keyed_table_model_equivalence(spark, tmp_path, monkeypatch, steps):
                 key=_nskey,
             )
             assert got == _model_rows(state), (arrow_max, v)
-            if v - 1 in history:
-                got = sorted(
-                    ((r["PartitionKey"], r["RowKey"], r["v"], r["change_type"])
-                     for r in t.changes(v - 1, v).collect()),
-                    key=_nskey,
-                )
-                assert got == _model_changes(history[v - 1], state), (
-                    arrow_max, v,
-                )
+            if v - 1 not in history:
+                continue
+            for read_max in (0, 10**9):
+                monkeypatch.setattr(merge, "_ARROW_MAX_ROWS", read_max)
+                for pre in (False, True):
+                    got = sorted(
+                        ((r["PartitionKey"], r["RowKey"], r["v"],
+                          r["change_type"])
+                         for r in t.changes(v - 1, v, pre).collect()),
+                        key=_nskey,
+                    )
+                    assert got == _model_changes(
+                        history[v - 1], state, pre
+                    ), (arrow_max, read_max, pre, v)
         snap = t._read_snapshot()
         if snap is not None:
             # the current read goes through the pinned schema, which
